@@ -17,8 +17,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     project without blocking others (`:377-443`).
   *
   * The Spark analog of node-parallel SLURM jobs is concurrent driver threads each
-  * submitting jobs into a fair-scheduler pool; `runProject` is injectable so specs
-  * exercise the scheduling policy without real pipelines.
+  * submitting jobs to the shared session. Nothing sets a scheduler pool, so the
+  * session schedules those jobs FIFO: a project's ready stages queue behind the
+  * stages of jobs submitted earlier by other projects. `runProject` is injectable
+  * so specs exercise the scheduling policy without real pipelines.
   */
 object Orchestrator {
 
@@ -68,7 +70,7 @@ object Orchestrator {
   }
 
   /** Run all pending projects wave by wave; projects inside a wave run
-    * concurrently (driver threads → separate Spark job groups). */
+    * concurrently, one driver thread each, their jobs sharing the FIFO scheduler. */
   def runAll(projects: Seq[Project], completed: Set[String],
              runProject: Project => Boolean,
              maxSmallConcurrent: Int = 4): Seq[Outcome] = {

@@ -1,31 +1,63 @@
 package graft.io
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.io.StringWriter
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.StandardOpenOption.CREATE_NEW
+import java.util.UUID
+
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Writers for the reference's text output contracts (SURVEY §2.1 S9–S11, §7.4-1).
   *
   * The reference publishes small, single-file, header-first TSV reports atomically
-  * (`pSTARQC_v1.sh:46,99` tmp + mv). These writers reproduce that contract: write a
-  * 1-partition Spark CSV into a temp dir, then move the part file to the final path.
-  * `coalesce(1)` is confined to these FINAL report sinks — never mid-pipeline
-  * (SURVEY §7.4-6); big data (matrices at scale, coverage bins) should instead be
-  * written partitioned parquet via plain `df.write`.
+  * (`pSTARQC_v1.sh:46,99` tmp + mv). The four single-file sinks ([[writeTsvReport]],
+  * [[writeMatrix]], [[writeBed]], [[writeJsonl]]) share one publish path:
+  *
+  *   - the frame is computed as one final partition ([[ColumnBridge.inOneTask]]):
+  *     a root global sort (`df.orderBy(...)`, how callers ask for a row order)
+  *     becomes a task-local sort over it, so no range-partition sample job and no
+  *     sort exchange run. The publish adds ONE Spark job, whose last stage is one
+  *     task, to whatever exchanges the caller's plan already holds; a frame that
+  *     ends in an aggregation (a pivoted matrix) adds one more exchange and job,
+  *     into that partition, so the aggregation's final merge is not run by the
+  *     one task.
+  *   - that partition's lines stream to the driver (`toLocalIterator`) into a
+  *     uniquely named `<out>.<uuid>.tmp` beside the target (missing parent
+  *     directories are created), which is then `ATOMIC_MOVE`d over the target. If
+  *     the job or the write fails, the staged file is deleted and an existing
+  *     target is left untouched.
+  *
+  * Bounds: the single partition reaches the driver as one task result, so one
+  * serialized copy of the file is held there at a time and must fit under
+  * `spark.driver.maxResultSize`; and `<out>` must be a driver-local path (the
+  * publish is java.nio). Both suit report-shaped artifacts — reports, per-project
+  * matrices, per-sample BEDs. `coalesce(1)` is confined to these FINAL sinks, never
+  * mid-pipeline (SURVEY §7.4-6).
+  * Big data (matrices at corpus scale, coverage bins) goes to partitioned parquet
+  * via [[writePartitionedParquet]] instead.
   */
 object Sinks {
 
   /** S9 — atomic single-file TSV report: tab sep, header row, nulls rendered as the
-    * reference's `NA` sentinel. */
+    * reference's `NA` sentinel. Rows are `to_csv` and the header is the CSV
+    * generator's own header line, so quoting (tabs, quotes, newlines, edge
+    * whitespace) is byte-for-byte what Spark's CSV writer produces. */
   def writeTsvReport(df: DataFrame, outFile: String, nullValue: String = "NA"): Unit = {
-    val tmpDir = outFile + ".tmp"
-    df.coalesce(1).write.mode("overwrite")
-      .option("sep", "\t").option("header", "true")
-      .option("nullValue", nullValue).option("emptyValue", "")
-      .csv(tmpDir)
-    publishSingleFile(tmpDir, outFile)
+    val options = Map("sep" -> "\t", "nullValue" -> nullValue, "emptyValue" -> "")
+    val header = new StringWriter()
+    val gen = new UnivocityGenerator(
+      StructType(df.columns.map(StructField(_, StringType))), header,
+      new CSVOptions(options, false, df.sparkSession.conf.get("spark.sql.session.timeZone")))
+    gen.writeHeaders()
+    gen.close()
+    publish(df, outFile, to_csv(allColumns(df), options.asJava), header.toString)
   }
 
   /** S10 — RSEM matrix text contract (`rsem-generate-data-matrix:76-89`):
@@ -37,21 +69,14 @@ object Sinks {
     val line = concat_ws("\t",
       concat(lit("\""), col(idHeader), lit("\"")) +:
         sources.map(s => col(s"`$s`").cast("string")).toIndexedSeq: _*)
-    val tmpDir = outFile + ".tmp"
-    matrix.select(line.as("line")).coalesce(1)
-      .write.mode("overwrite").option("quote", "").text(tmpDir)
-    publishSingleFile(tmpDir, outFile, Some(header))
+    publish(matrix, outFile, line, header + "\n")
   }
 
   /** S12 — BED sink: genome-position-sorted single text file (bgzip/tabix indexing is
     * an external post-step, out of relational scope). */
-  def writeBed(bed: DataFrame, outFile: String): Unit = {
-    val tmpDir = outFile + ".tmp"
-    bed.select(concat_ws("\t", bed.columns.toIndexedSeq.map(c => col(s"`$c`").cast("string")): _*).as("line"))
-      .coalesce(1)
-      .write.mode("overwrite").option("quote", "").text(tmpDir)
-    publishSingleFile(tmpDir, outFile)
-  }
+  def writeBed(bed: DataFrame, outFile: String): Unit =
+    publish(bed, outFile,
+      concat_ws("\t", bed.columns.toIndexedSeq.map(c => col(s"`$c`").cast("string")): _*))
 
   /** JSONL (one JSON object per line) sink — the lingua-franca interchange
     * format of training-data pipelines. Field order is pinned by the caller's
@@ -61,13 +86,8 @@ object Sinks {
     * Atomic single-file publish like the TSV sinks — for sharded corpus-scale
     * output use [[writePartitionedParquet]]-style partitioned `df.write.json`
     * instead. */
-  def writeJsonl(df: DataFrame, outFile: String): Unit = {
-    val tmpDir = outFile + ".tmp"
-    df.select(to_json(struct(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*)).as("line"))
-      .coalesce(1)
-      .write.mode("overwrite").option("quote", "").text(tmpDir)
-    publishSingleFile(tmpDir, outFile)
-  }
+  def writeJsonl(df: DataFrame, outFile: String): Unit =
+    publish(df, outFile, to_json(allColumns(df)))
 
   /** Large-data parquet sink with file-count discipline — the opposite regime
     * from the single-file report sinks above. At 100 TB the failure mode is
@@ -144,39 +164,28 @@ object Sinks {
     df.coalesce(nFiles).write.mode("overwrite").parquet(outPath)
   }
 
-  /** Children of `dir`, with the directory stream closed (Files.list leaks an fd
-    * per call otherwise — these sinks run in per-sample/per-project loops). */
-  private def listChildren(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.toVector finally s.close()
-  }
+  private def allColumns(df: DataFrame): Column =
+    struct(df.columns.toIndexedSeq.map(c => col(s"`$c`")): _*)
 
-  /** tmp-dir + atomic-move publish (C8): find the single part file, optionally
-    * prepend a header, move into place, drop the temp dir. */
-  private def publishSingleFile(tmpDir: String, outFile: String,
-                                prependHeader: Option[String] = None): Unit = {
-    val dir = Paths.get(tmpDir)
-    val part = listChildren(dir)
-      .find(p => p.getFileName.toString.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $tmpDir"))
-    val target = Paths.get(outFile)
-    prependHeader match {
-      case Some(h) =>
-        val staged = dir.resolve("staged")
-        val out = Files.newOutputStream(staged)
-        try {
-          out.write((h + "\n").getBytes("UTF-8"))
-          Files.copy(part, out)
-        } finally out.close()
-        Files.move(staged, target, StandardCopyOption.REPLACE_EXISTING)
-      case None =>
-        Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-    }
-    deleteRecursively(dir)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) listChildren(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
+  /** The shared single-file publish (see the object doc): `line` renders one output
+    * line per row of `df` (it resolves by column name); `header` is written first,
+    * verbatim. */
+  private def publish(df: DataFrame, outFile: String, line: Column,
+                      header: String = ""): Unit = {
+    val target = Paths.get(outFile).toAbsolutePath
+    Files.createDirectories(target.getParent)
+    val staged = target.resolveSibling(s"${target.getFileName}.${UUID.randomUUID()}.tmp")
+    try {
+      val out = Files.newBufferedWriter(staged, UTF_8, CREATE_NEW)
+      try {
+        out.write(header)
+        val rows = ColumnBridge.inOneTask(df).select(line).toLocalIterator()
+        while (rows.hasNext) {
+          out.write(rows.next().getString(0))
+          out.write('\n')
+        }
+      } finally out.close()
+      Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(staged)
   }
 }

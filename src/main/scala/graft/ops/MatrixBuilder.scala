@@ -41,8 +41,12 @@ object MatrixBuilder {
                   check: Boolean = true): DataFrame = {
     require(sources.nonEmpty, "Nothing is detected! (no sources)") // :39-42
     if (check) {
-      val bad = consistencyViolations(long, idCol, sourceCol, sources.size).limit(1).count()
-      require(bad == 0, "Number of lines among samples are not equal!") // :66-69
+      // collected, not limit(1).count(): a limit adds a single-partition exchange and
+      // a job, while a consistent input (the normal case) collects no rows at all
+      val bad = consistencyViolations(long, idCol, sourceCol, sources.size)
+        .select(col(idCol).cast("string")).collect().map(r => String.valueOf(r.getString(0)))
+      require(bad.isEmpty, "Number of lines among samples are not equal! " + // :66-69
+        s"(${bad.length} inconsistent feature ids, first: ${bad.sorted.take(5).mkString(", ")})")
     }
     long.groupBy(col(idCol).as(idHeader))
       .pivot(sourceCol, sources)

@@ -5,6 +5,7 @@ import java.util.{ArrayList => JList, LinkedHashMap => JMap}
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Track/session JSON assembly (C6 + S11) — JBrowse2 documents.
   *
@@ -101,10 +102,10 @@ object SessionBuilder {
     */
   def buildSession(tracks: DataFrame, bioProjectId: String,
                    timestamp: String): String = {
-    val colored = ColorAssigner.assign(tracks)
+    val sorted = ColorAssigner.assign(tracks)
       .select(col("trackId"), col("color"), col("_path"))
       .orderBy(col("_path"))
-      .collect()
+    val colored = ColumnBridge.inOneTask(sorted).collect()
 
     val sessionTracks = new JList[Any]()
     val viewTracks = new JList[Any]()
@@ -219,9 +220,9 @@ object SessionBuilder {
       md.getField("Read alignment").as("Read alignment"),
       md.getField("Genome version").as("Genome version"),
       md.getField("Expression Quantification").as("Expression Quantification"))
-    val colored = ColorAssigner.assign(ColorAssigner.comboKey(projected))
+    val sorted = ColorAssigner.assign(ColorAssigner.comboKey(projected))
       .orderBy(col("_path"))
-      .collect()
+    val colored = ColumnBridge.inOneTask(sorted).collect()
 
     val sessionTracks = new JList[Any]()
     val viewTracks = new JList[Any]()

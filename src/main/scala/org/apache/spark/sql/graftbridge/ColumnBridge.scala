@@ -48,6 +48,32 @@ object ColumnBridge {
       case _ => df
     }
 
+  /** The frame computed as ONE final partition, for callers that hand every row to
+    * one consumer (a single-file sink, a driver collect). A ROOT-level global Sort
+    * becomes a task-local sort over that partition, so neither the range-partition
+    * sample job nor the sort exchange runs.
+    *
+    * The partition is a `coalesce(1)` of the (unsorted) frame, which runs the plan's
+    * last stage as the one task. When that stage would end in an aggregation's
+    * final merge (the plan below the sort is an Aggregate under projections and
+    * filters, e.g. a pivot), the frame is shuffled into one partition instead: the
+    * merge stays spread over the shuffle's partitions, at one more stage. */
+  def inOneTask(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    @scala.annotation.tailrec
+    def endsInAggregate(p: LogicalPlan): Boolean = p match {
+      case _: Aggregate => true
+      case p: Project => endsInAggregate(p.child)
+      case f: Filter => endsInAggregate(f.child)
+      case _ => false
+    }
+    def one(p: LogicalPlan): LogicalPlan = Repartition(1, shuffle = endsInAggregate(p), p)
+    ofRows(df.sparkSession, df.queryExecution.logical match {
+      case s: Sort if s.global => s.copy(global = false, child = one(s.child))
+      case p => one(p)
+    })
+  }
+
   /** Runtime function registration on an EXISTING session (the
     * `spark.sql.extensions` config path only applies at session creation). */
   def registerFunction(spark: org.apache.spark.sql.SparkSession,

@@ -27,6 +27,7 @@ class MatrixBuilderSpec extends SparkSpec {
         Seq("s1.genes.results", "s2.genes.results"))
     }
     assert(e.getMessage.contains("Number of lines among samples are not equal!"))
+    assert(e.getMessage.contains("Sry"), e.getMessage) // the offending id is named
   }
 
   test("aborts on empty source list (rsem-generate-data-matrix:39-42)") {
