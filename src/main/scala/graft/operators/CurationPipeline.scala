@@ -25,9 +25,11 @@ object CurationPipeline {
     * `bigrams` (a (w1, w2, c) frame, typically [[NgramLm.bigramCounts]] over
     * trusted text) is at most `maxOovRate`; a bigram counts OOV below
     * `minCount`. Documents with no bigrams (0/1 tokens) score 0 and pass —
-    * the length gates own degenerate docs. */
+    * the length gates own degenerate docs. `maxOovRate` must be ≥ 0. */
   final case class LmFilter(bigrams: DataFrame, minCount: Long = 1L,
-                            maxOovRate: Double = 0.5)
+                            maxOovRate: Double = 0.5) {
+    require(maxOovRate >= 0.0, s"maxOovRate must be >= 0, got $maxOovRate")
+  }
 
   /** Unigram-LM perplexity gate config ([[UnigramLm.bitSurprisal]]): keep
     * documents whose average per-token INTEGER BIT-SURPRISAL under the
@@ -46,8 +48,10 @@ object CurationPipeline {
     * ([[NgramLm.trigramCounts]] over trusted text) is at most `maxAvgBits`
     * — the closest oracle-exact analog of CCNet's smoothed-KenLM gate.
     * Documents with no trigrams (<3 tokens) score 0 and pass — the length
-    * gates own degenerate docs. */
-  final case class KnFilter(trigrams: DataFrame, maxAvgBits: Double = 8.0)
+    * gates own degenerate docs. `maxAvgBits` must be ≥ 0. */
+  final case class KnFilter(trigrams: DataFrame, maxAvgBits: Double = 8.0) {
+    require(maxAvgBits >= 0.0, s"maxAvgBits must be >= 0, got $maxAvgBits")
+  }
 
   /** Diversity-stage config ([[Sampling.diversitySample]]): `embeddings`
     * carries ONE row per document keyed by the SAME id column the pipeline
@@ -64,7 +68,8 @@ object CurationPipeline {
     * inserts the CCNet bigram-LM gate between the scan-side predicates and
     * the LSH dedup shuffles — the count-table joins are vocabulary-sized
     * (AQE broadcasts them), so the corpus shrinks again BEFORE the only
-    * expensive stage. */
+    * expensive stage. Precondition: `idCol` is non-null (the LM gates are
+    * id-keyed joins; see the anti-join note below). */
   def curate(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
              minQuality: Double = 0.5,
              shingleSize: Int = 3, numHashes: Int = 8, bands: Int = 4,
@@ -83,25 +88,19 @@ object CurationPipeline {
         TextFunctions.langIdEn(col(textCol)) === "en")
     val gated = repetitionGate.fold(gated0)(th =>
       RepetitionStats.repetitionFilter(gated0, textCol, th))
-    // Gate via the FAILING-id complement (anti-join) when the threshold is
-    // non-negative: a doc with no bigrams scores rate 0.0 and can never
-    // fail, so the failing set needs no 0/1-token restore join — one full
-    // pass over the gated corpus fewer per curate call, and the anti-join's
-    // build side is the (small) failure set instead of the survivor set.
-    // Exact row complement of the keep-side filter (same IEEE division,
-    // same per-id pooling); a (nonsensical) negative threshold keeps the
-    // original keep-side shape so behavior is unchanged for EVERY input.
+    // Gate via the FAILING-id complement (anti-join): a doc with no bigrams
+    // scores rate 0.0 and can never fail the (non-negative) threshold, so the
+    // failing set needs no 0/1-token restore join — one full pass over the
+    // gated corpus fewer per curate call, and the anti-join's build side is
+    // the (small) failure set instead of the survivor set. Exact row
+    // complement of the keep-side filter (same IEEE division, same per-id
+    // pooling) PROVIDED `idCol` is non-null: a NULL-id doc never equi-matches
+    // the failing set, so it survives the anti-join.
     val filtered0 = lmFilter.fold(gated) { lf =>
-      if (lf.maxOovRate >= 0.0)
-        gated.join(
-          NgramLm.oovFailingIds(gated, idCol, textCol, lf.bigrams,
-            lf.minCount, lf.maxOovRate),
-          Seq(idCol), "left_anti")
-      else gated.join(
-        NgramLm.oovBigramRate(gated, idCol, textCol, lf.bigrams, lf.minCount)
-          .filter(col("oov_rate") <= lf.maxOovRate)
-          .select(col(idCol)),
-        Seq(idCol), "left_semi")
+      gated.join(
+        NgramLm.oovFailingIds(gated, idCol, textCol, lf.bigrams,
+          lf.minCount, lf.maxOovRate),
+        Seq(idCol), "left_anti")
     }
     // unigram-NLL gate: one broadcast-model scan over the survivors (the
     // bitSurprisal frame is per-doc-sized, so the semi-join stays cheap) —
@@ -117,20 +116,14 @@ object CurationPipeline {
     // Kneser–Ney gate: the count-table joins are vocabulary-sized (AQE
     // broadcasts them), the score frame per-doc-sized — same stage shape
     // and the same shrink-before-LSH ordering as the other LM gates.
-    // Same failing-id anti-join shape as the bigram gate above: <3-token
-    // docs score avg 0.0 and never fail a non-negative threshold, so the
-    // restore join (a full corpus pass) drops out of the gate.
+    // Same failing-id anti-join shape (and non-null `idCol` precondition) as
+    // the bigram gate above: <3-token docs score avg 0.0 and never fail the
+    // threshold, so the restore join (a full corpus pass) drops out.
     val filteredLazy = knFilter.fold(filtered1) { kf =>
-      if (kf.maxAvgBits >= 0.0)
-        filtered1.join(
-          NgramLm.knTrigramFailingIds(filtered1, idCol, textCol, kf.trigrams,
-            kf.maxAvgBits),
-          Seq(idCol), "left_anti")
-      else filtered1.join(
-        NgramLm.knTrigramBits(filtered1, idCol, textCol, kf.trigrams)
-          .filter(col("avg_bits") <= kf.maxAvgBits)
-          .select(col(idCol)),
-        Seq(idCol), "left_semi")
+      filtered1.join(
+        NgramLm.knTrigramFailingIds(filtered1, idCol, textCol, kf.trigrams,
+          kf.maxAvgBits),
+        Seq(idCol), "left_anti")
     }
     // The survivor frame feeds BOTH dedup subtrees (LSH pairs + canonicals):
     // left lazy, each reference re-runs every LM scoring pass above. With any

@@ -584,7 +584,7 @@ object DedupSuite {
   /** Gram-index materialization policy: localCheckpoint once, or recompute
     * the gram pipeline per consuming subtree. SHAPE-DEPENDENT, measured at
     * 5M docs (r7_gmat_{mat,nomat}.json): for n=1 grams (xxhash64 of the
-    * token itself — ExprProf: ~6 s for the whole corpus) the block-store
+    * token itself — ~6 s for the whole corpus, commit f571be4) the block-store
     * write path costs more than four recomputes, and skipping it wins 1.4×
     * (241 → 171 s); for n≥2 shingles (per-shingle string concat before the
     * hash) recompute loses 4.4× (304 → 1,337 s). Callers pass the

@@ -85,7 +85,7 @@ object LinearTrainer {
     // expression into each iteration's margin Filter — where the
     // CollapseProject alias-cost guard does not apply, so the per-token
     // hashing re-runs per DIMENSION inside the count lambda (measured 22 s →
-    // 1.6 s for 3 iterations at sf0.1, `tools/PercProf`)
+    // 1.6 s for 3 iterations at sf0.1, commit e5cd11a)
     val staged = Spread.widen(feat.select(col(featuresCol), col(labelCol))).localCheckpoint()
     val w = Array.fill(dims)(0L)
     for (_ <- 1 to iters) {

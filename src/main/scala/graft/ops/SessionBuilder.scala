@@ -3,7 +3,7 @@ package graft.ops
 import java.util.{ArrayList => JList, LinkedHashMap => JMap}
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -105,13 +105,22 @@ object SessionBuilder {
     val sorted = ColorAssigner.assign(tracks)
       .select(col("trackId"), col("color"), col("_path"))
       .orderBy(col("_path"))
+    assemble(sorted, bioProjectId,
+      s"Auto-generated session for $bioProjectId on $timestamp")(_ => Nil)
+  }
+
+  /** The document both builders share: the gene track injected first
+    * (`:203-218`; combined `:265-280`), then per row of `sorted` (colored,
+    * path-ordered; collected in one task) a session track — forced type,
+    * public BigWig URI under `id`, renderer colors (`:111-176`) — and a view
+    * track with the display color (`:186-200`), under the Chr4 viewport
+    * (F12, `:223-235`). `extraFields` adds per-track session fields between
+    * `trackId` and `adapter`. */
+  private def assemble(sorted: DataFrame, id: String, description: String)
+                      (extraFields: Row => Seq[(String, Any)]): String = {
     val colored = ColumnBridge.inOneTask(sorted).collect()
-
     val sessionTracks = new JList[Any]()
-    val viewTracks = new JList[Any]()
-
-    // Gene track injected first (`:203-218`)
-    viewTracks.add(jmap(
+    val viewTracks = jlist(jmap(
       "id" -> "F-8qwRhumS", "type" -> "FeatureTrack",
       "configuration" -> "Rat GRCr8 (rn8) Genes and Transcripts-GRCr8",
       "minimized" -> false,
@@ -121,24 +130,21 @@ object SessionBuilder {
         "configuration" -> "Rat GRCr8 (rn8) Genes and Transcripts-GRCr8-LinearBasicDisplay"))))
 
     colored.foreach { r =>
-      val tid = r.getString(0); val color = r.getString(1)
-      // session track: forced type + public URI + renderer colors (`:111-176`)
+      val tid = r.getAs[String]("trackId")
+      val color = r.getAs[String]("color")
+      val uri = s"https://download.rgd.mcw.edu/expression/$id/Genome-wide_read_coverage_BigWig_files/$tid.bigwig"
       sessionTracks.add(jmap(
-        "type" -> "QuantitativeTrack",
-        "trackId" -> tid,
-        "adapter" -> jmap(
-          "type" -> "BigWigAdapter",
-          "bigWigLocation" -> jmap(
-            "locationType" -> "UriLocation",
-            "uri" -> s"https://download.rgd.mcw.edu/expression/$bioProjectId/Genome-wide_read_coverage_BigWig_files/$tid.bigwig")),
-        "displays" -> jlist(jmap(
-          "type" -> "LinearWiggleDisplay",
-          "displayId" -> s"$tid-LinearWiggleDisplay",
-          "renderer" -> jmap("type" -> "XYPlotRenderer", "color1" -> color),
-          "renderers" -> jmap("XYPlotRenderer" ->
-            jmap("type" -> "XYPlotRenderer", "color1" -> color)),
-          "defaultRendering" -> "xyplot"))))
-      // view track with the display color (`:186-200`)
+        Seq("type" -> "QuantitativeTrack", "trackId" -> tid) ++ extraFields(r) ++ Seq(
+          "adapter" -> jmap(
+            "type" -> "BigWigAdapter",
+            "bigWigLocation" -> jmap("locationType" -> "UriLocation", "uri" -> uri)),
+          "displays" -> jlist(jmap(
+            "type" -> "LinearWiggleDisplay",
+            "displayId" -> s"$tid-LinearWiggleDisplay",
+            "renderer" -> jmap("type" -> "XYPlotRenderer", "color1" -> color),
+            "renderers" -> jmap("XYPlotRenderer" ->
+              jmap("type" -> "XYPlotRenderer", "color1" -> color)),
+            "defaultRendering" -> "xyplot"))): _*))
       viewTracks.add(jmap(
         "type" -> "QuantitativeTrack",
         "configuration" -> tid,
@@ -149,14 +155,13 @@ object SessionBuilder {
           "defaultRendering" -> "xyplot"))))
     }
 
-    // viewport math (F12, `:223-235`)
     val windowBp = math.max(1L, TargetEnd1 - TargetStart1 + 1)
     val bpPerPx = math.max(1.0, windowBp / ViewportPx)
     val offsetPx = (TargetStart1 - 1).toDouble / bpPerPx
 
     val root = jmap("session" -> jmap(
-      "name" -> s"${bioProjectId}_RNAseq_expression",
-      "description" -> s"Auto-generated session for $bioProjectId on $timestamp",
+      "name" -> s"${id}_RNAseq_expression",
+      "description" -> description,
       "views" -> jlist(jmap(
         "id" -> "lgv1", "type" -> "LinearGenomeView",
         "tracks" -> viewTracks,
@@ -222,79 +227,20 @@ object SessionBuilder {
       md.getField("Expression Quantification").as("Expression Quantification"))
     val sorted = ColorAssigner.assign(ColorAssigner.comboKey(projected))
       .orderBy(col("_path"))
-    val colored = ColumnBridge.inOneTask(sorted).collect()
-
-    val sessionTracks = new JList[Any]()
-    val viewTracks = new JList[Any]()
-
-    // Gene track injected first (`:265-280`)
-    viewTracks.add(jmap(
-      "id" -> "F-8qwRhumS", "type" -> "FeatureTrack",
-      "configuration" -> "Rat GRCr8 (rn8) Genes and Transcripts-GRCr8",
-      "minimized" -> false,
-      "displays" -> jlist(jmap(
-        "id" -> "uZq89S4_XC", "type" -> "LinearBasicDisplay",
-        "heightPreConfig" -> 152,
-        "configuration" -> "Rat GRCr8 (rn8) Genes and Transcripts-GRCr8-LinearBasicDisplay"))))
-
-    colored.foreach { r =>
-      val tid = r.getAs[String]("trackId")
-      val color = r.getAs[String]("color")
-      val uri = s"https://download.rgd.mcw.edu/expression/$combinedId/Genome-wide_read_coverage_BigWig_files/$tid.bigwig"
-      val metaMap = {
-        val m = new JMap[String, Any]()
-        // "Sample Characteristic" was aliased to a legal column name; the rest
-        // keep their metadata key verbatim
-        MetadataKeys.foreach { k =>
-          val colName = if (k == "Sample Characteristic") "Sample_characteristics" else k
-          m.put(k, r.getAs[String](colName))
-        }
-        m
+    assemble(sorted, combinedId,
+      s"Auto-generated combined session for $combinedId on $timestamp") { r =>
+      val metadata = new JMap[String, Any]()
+      // "Sample Characteristic" was aliased to a legal column name; the rest
+      // keep their metadata key verbatim
+      MetadataKeys.foreach { k =>
+        val colName = if (k == "Sample Characteristic") "Sample_characteristics" else k
+        metadata.put(k, r.getAs[String](colName))
       }
-      sessionTracks.add(jmap(
-        "type" -> "QuantitativeTrack", // forced (`:174`)
-        "trackId" -> tid,
+      Seq(
         "name" -> r.getAs[String]("name"),
         "category" -> jlist(r.getSeq[String](r.fieldIndex("category")): _*),
         "assemblyNames" -> jlist(r.getSeq[String](r.fieldIndex("assemblyNames")): _*),
-        "metadata" -> metaMap,
-        "adapter" -> jmap(
-          "type" -> "BigWigAdapter",
-          "bigWigLocation" -> jmap("locationType" -> "UriLocation", "uri" -> uri)),
-        "displays" -> jlist(jmap(
-          "type" -> "LinearWiggleDisplay",
-          "displayId" -> s"$tid-LinearWiggleDisplay",
-          "renderer" -> jmap("type" -> "XYPlotRenderer", "color1" -> color),
-          "renderers" -> jmap("XYPlotRenderer" ->
-            jmap("type" -> "XYPlotRenderer", "color1" -> color)),
-          "defaultRendering" -> "xyplot"))))
-      viewTracks.add(jmap(
-        "type" -> "QuantitativeTrack",
-        "configuration" -> tid,
-        "displays" -> jlist(jmap(
-          "type" -> "LinearWiggleDisplay",
-          "displayId" -> s"$tid-LinearWiggleDisplay",
-          "color" -> color,
-          "defaultRendering" -> "xyplot"))))
+        "metadata" -> metadata)
     }
-
-    val windowBp = math.max(1L, TargetEnd1 - TargetStart1 + 1)
-    val bpPerPx = math.max(1.0, windowBp / ViewportPx)
-    val offsetPx = (TargetStart1 - 1).toDouble / bpPerPx
-
-    val root = jmap("session" -> jmap(
-      "name" -> s"${combinedId}_RNAseq_expression",
-      "description" -> s"Auto-generated combined session for $combinedId on $timestamp",
-      "views" -> jlist(jmap(
-        "id" -> "lgv1", "type" -> "LinearGenomeView",
-        "tracks" -> viewTracks,
-        "displayedRegions" -> jlist(jmap(
-          "assemblyName" -> "GRCr8", "refName" -> "Chr4",
-          "start" -> 0, "end" -> WholeChr4End)),
-        "bpPerPx" -> bpPerPx,
-        "offsetPx" -> offsetPx)),
-      "sessionTracks" -> sessionTracks))
-
-    new ObjectMapper().writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 }

@@ -35,12 +35,8 @@ object StarQc {
     // awk's first-match-wins is FILE-ORDER-first: anchor on the reader's
     // `_line_order` (min_by), not Spark's partition-order-dependent first() —
     // duplicate key lines (overlapping globs, repeated entries) stay deterministic.
-    val hasOrder = logKv.columns.contains("_line_order")
     def keyVal(k: String) =
-      if (hasOrder)
-        min_by(when(col("key") === k, col("value")),
-          when(col("key") === k, col("_line_order")))
-      else first(when(col("key") === k, col("value")), ignoreNulls = true)
+      min_by(when(col("key") === k, col("value")), when(col("key") === k, col("_line_order")))
     val wide = logKv
       .groupBy("sample_id")
       .agg(
@@ -67,7 +63,7 @@ object StarQc {
   /** Full report over `samples` (one `SampleID` per deduped AccList row — samples
     * without any parsed log get a NO_LOG row, `pSTARQC_v1.sh:73-74`).
     *
-    * @param logKv (sample_id, key, value) from [[graft.io.TsvSources.readStarLogs]]
+    * @param logKv (sample_id, key, value, _line_order) from [[graft.io.TsvSources.readStarLogs]]
     * @param samples one column `SampleID`
     */
   def summarize(logKv: DataFrame, samples: DataFrame): DataFrame = {

@@ -28,10 +28,9 @@ object TpmBed {
       .otherwise("0,0,139")
 
   /** @param bed  Schemas.bed4-shaped reference intervals (name = gene id)
-    * @param tpm  (gene_id, TPM) with TPM as the *formatted string* from RSEM
-    * @param sort apply the final genome-position total sort (skip mid-pipeline) */
-  def build(bed: DataFrame, tpm: DataFrame, sort: Boolean = true): DataFrame = {
-    val merged = bed
+    * @param tpm  (gene_id, TPM) with TPM as the *formatted string* from RSEM */
+  def build(bed: DataFrame, tpm: DataFrame): DataFrame =
+    bed
       .join(broadcast(tpm.select(col("gene_id").as("name"), col("TPM").as("score"))),
         Seq("name"), "inner")
       .filter(col("chrom").rlike("^chr") && !col("chrom").startsWith("NW_"))
@@ -41,6 +40,5 @@ object TpmBed {
         lit(".").as("strand"),
         col("start").as("thickStart"), col("end").as("thickEnd"),
         rgbBucket(col("score").cast("double")).as("itemRgb"))
-    if (sort) merged.orderBy(col("chrom"), col("start").asc, col("end").asc) else merged
-  }
+      .orderBy(col("chrom"), col("start").asc, col("end").asc)
 }

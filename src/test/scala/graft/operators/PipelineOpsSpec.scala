@@ -456,6 +456,17 @@ class PipelineOpsSpec extends SparkSpec {
     assert(noGate === Seq(1L, 2L, 3L))
   }
 
+  test("LM gate configs reject a negative threshold; zero is allowed") {
+    import graft.operators.CurationPipeline.{KnFilter, LmFilter}
+    val counts = Seq((1L, "the cat")).toDF("doc_id", "text")
+    val lm = intercept[IllegalArgumentException](LmFilter(counts, maxOovRate = -0.1))
+    assert(lm.getMessage.contains("maxOovRate"))
+    val kn = intercept[IllegalArgumentException](KnFilter(counts, maxAvgBits = -1.0))
+    assert(kn.getMessage.contains("maxAvgBits"))
+    assert(LmFilter(counts, maxOovRate = 0.0).maxOovRate == 0.0)
+    assert(KnFilter(counts, maxAvgBits = 0.0).maxAvgBits == 0.0)
+  }
+
   test("curateForTraining diversity hook: per-cell cap flattens embedding density") {
     import graft.operators.CurationPipeline
     // 12 docs that all pass the gates yet share NO 3-shingle (per-doc word

@@ -1,7 +1,11 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SessionBuilderSpec extends SparkSpec {
@@ -12,6 +16,32 @@ class SessionBuilderSpec extends SparkSpec {
       "age: 12 weeks; treatment: \"control\"", "http://rgd"))
     .toDF("Run", "geo_accession", "Tissue", "Strain", "Sex", "PMID", "GEOpath",
       "Title", "Sample_characteristics", "StrainInfo")
+
+  // three project tracks in two biological groups, out of path order
+  private def projectTracks: DataFrame = Seq(
+    ("t_b", "grpB", "/p/2.json"), ("t_a", "grpA", "/p/1.json"), ("t_c", "grpA", "/p/3.json"))
+    .toDF("trackId", "combo_key", "_path")
+
+  // two source projects' track docs, written through the REAL track-json path
+  private def combinedTrackDocs(): DataFrame = {
+    val dir = tempDir()
+    Seq(("OLD_A", "p1"), ("OLD_B", "p2")).foreach { case (prj, sub) =>
+      val d = Files.createDirectories(dir.resolve(sub))
+      val doc = AccListOps.withUniqueName(
+          acc.withColumn("GEOpath",
+            lit(s"https://www.ncbi.nlm.nih.gov/geo/query/acc.cgi?acc=$prj&db=gds")))
+        .withColumn("ComputedSex", lit("F"))
+        .select(SessionBuilder.trackJson(prj).as("doc")).head().getString(0)
+      // make trackIds distinct across projects so both tracks survive
+      Files.writeString(d.resolve(s"RNAseq_$sub.json"), doc.replace("GSM1", s"GSM_$sub"))
+    }
+    graft.io.TsvSources.readTrackJsons(spark, s"$dir/*/RNAseq_*.json")
+  }
+
+  private def pinned(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/graft/ops/$name")
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
 
   test("per-sample track JSON: structure, escaping, Unknown sex default (C6/F4/J4)") {
     val df = AccListOps.withUniqueName(acc)
@@ -32,10 +62,7 @@ class SessionBuilderSpec extends SparkSpec {
   }
 
   test("session doc: gene track first, colors by first-seen group, viewport math") {
-    val tracks = Seq(
-      ("t_b", "grpB", "/p/2.json"), ("t_a", "grpA", "/p/1.json"), ("t_c", "grpA", "/p/3.json"))
-      .toDF("trackId", "combo_key", "_path")
-    val json = SessionBuilder.buildSession(tracks, "PRJNA1", "2026-01-01T00:00:00")
+    val json = SessionBuilder.buildSession(projectTracks, "PRJNA1", "2026-01-01T00:00:00")
     val root = new ObjectMapper().readTree(json).get("session")
     assert(root.get("name").asText() == "PRJNA1_RNAseq_expression")
     val view = root.get("views").get(0)
@@ -59,21 +86,7 @@ class SessionBuilderSpec extends SparkSpec {
   }
 
   test("combined session: geoAcc/acc links rewritten to combined id, Project Accession ID preserved") {
-    import java.nio.file.Files
-    // two source projects' track docs, written through the REAL track-json path
-    val dir = tempDir()
-    Seq(("OLD_A", "p1"), ("OLD_B", "p2")).foreach { case (prj, sub) =>
-      val d = Files.createDirectories(dir.resolve(sub))
-      val doc = AccListOps.withUniqueName(
-          acc.withColumn("GEOpath",
-            lit(s"https://www.ncbi.nlm.nih.gov/geo/query/acc.cgi?acc=$prj&db=gds")))
-        .withColumn("ComputedSex", lit("F"))
-        .select(SessionBuilder.trackJson(prj).as("doc")).head().getString(0)
-      // make trackIds distinct across projects so both tracks survive
-      Files.writeString(d.resolve(s"RNAseq_$sub.json"), doc.replace("GSM1", s"GSM_$sub"))
-    }
-    val tracks = graft.io.TsvSources.readTrackJsons(spark, s"$dir/*/RNAseq_*.json")
-    val json = SessionBuilder.buildCombinedSession(tracks, "GSE_NEW", "2026-01-01")
+    val json = SessionBuilder.buildCombinedSession(combinedTrackDocs(), "GSE_NEW", "2026-01-01")
     val root = new ObjectMapper().readTree(json).get("session")
     assert(root.get("name").asText() == "GSE_NEW_RNAseq_expression")
     val st = root.get("sessionTracks")
@@ -99,6 +112,13 @@ class SessionBuilderSpec extends SparkSpec {
       == ColorAssigner.Palette(0))
     assert(view.get(2).get("displays").get(0).get("color").asText()
       == ColorAssigner.Palette(0))
+  }
+
+  test("session documents: exact bytes (key order, indent, number format) of both builders") {
+    assert(SessionBuilder.buildSession(projectTracks, "PRJNA1", "2026-01-01T00:00:00")
+      == pinned("session_project.json"))
+    assert(SessionBuilder.buildCombinedSession(combinedTrackDocs(), "GSE_NEW", "2026-01-01")
+      == pinned("session_combined.json"))
   }
 
   test("rewrite columns: first geoAcc/acc param rewritten, other params intact") {

@@ -19,8 +19,12 @@ and the change's win share over all pairs run: a pair where the change's run is
 not correct, has failures or lacks the metric is not a win, and ties count for
 neither side. The gain rule holds when the change wins at least 9/10 of the
 pairs, the medians differ by more than the parent's interquartile range, and the
-change has no more failed runs than the parent. Metric directions come from BENCHMARK.json
-(end_to_end) in the change's checkout.
+change has no more failed runs than the parent. Beside it, the no-regression
+verdict: `regressed` when the change's median is worse than the parent's by more
+than the metric's `bound` (a fraction of the parent median), `unresolved` when
+the parent's spread ((Q3-Q1)/median) exceeds that bound, unless every change run
+beats every parent run, else `ok`. Metric directions and bounds come from
+BENCHMARK.json (end_to_end) in the change's checkout.
 """
 import argparse
 import json
@@ -66,16 +70,29 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def report(runs, better, pairs):
-    """runs: {workload: [(pair, side, result)]} -> printed table, one row per metric."""
+def verdict(parent, change, up, bound):
+    """No-regression verdict of one metric: 'ok', 'regressed' or 'unresolved'."""
+    if (min(change) > max(parent)) if up else (max(change) < min(parent)):
+        return "ok"
+    pq1, pmed, pq3 = quartiles(parent)
+    if (pq3 - pq1) / pmed > bound:
+        return "unresolved"
+    cmed = quartiles(change)[1]
+    worse = pmed - cmed if up else cmed - pmed
+    return "regressed" if worse > bound * pmed else "ok"
+
+
+def report(runs, metrics, pairs):
+    """runs: {workload: [(pair, side, result)]}, metrics: {name: (higher is better, bound)}
+    -> printed table, one row per metric."""
     for workload, rows in runs.items():
         print(f"\n== {workload} ({pairs} pairs)")
         bad = {s: [p for p, side, r in rows if side == s and not ok(r)] for s in ("parent", "change")}
         print(f"runs not correct or with failures: parent {bad['parent'] or 'none'}, "
               f"change {bad['change'] or 'none'}")
         print(f"{'metric':16} {'parent median [Q1, Q3]':>28} {'change median [Q1, Q3]':>28}"
-              f" {'wins':>7} gain-rule")
-        for m, up in better.items():
+              f" {'wins':>7} gain-rule no-regression")
+        for m, (up, bound) in metrics.items():
             side = {"parent": {}, "change": {}}
             for pair, s, r in rows:
                 if ok(r) and m in r["metrics"]:
@@ -89,7 +106,8 @@ def report(runs, better, pairs):
             gain = (cmed > pmed) == up and abs(cmed - pmed) > (pq3 - pq1)
             holds = gain and wins >= 0.9 * pairs and len(bad["change"]) <= len(bad["parent"])
             print(f"{m:16} {pmed:12.4g} [{pq1:.4g}, {pq3:.4g}] {cmed:12.4g} [{cq1:.4g}, {cq3:.4g}]"
-                  f" {wins:3d}/{pairs:<3d} {'holds' if holds else 'no'}")
+                  f" {wins:3d}/{pairs:<3d} {'holds' if holds else 'no':9} "
+                  f"{verdict(list(side['parent'].values()), list(side['change'].values()), up, bound)}")
 
 
 def main():
@@ -109,7 +127,7 @@ def main():
         with open(os.path.join(roots["change"], "BENCHMARK.json")) as fh:
             bench = json.load(fh)
         workloads = args.workload or [w["name"] for w in bench["workloads"]]
-        better = {m["name"]: m["better"] == "higher" for m in bench["end_to_end"]}
+        metrics = {m["name"]: (m["better"] == "higher", m["bound"]) for m in bench["end_to_end"]}
         runs = {w: [] for w in workloads}
         os.makedirs(os.path.dirname(os.path.abspath(args.log)), exist_ok=True)
         with open(args.log, "a") as log:
@@ -127,7 +145,7 @@ def main():
                                            for k in HEADLINE if k in r["metrics"])
                         print(f"pair {pair} seed {seed} {workload:13} {side:6} correct={r.get('correct')} "
                               f"failed={r.get('failed')} {summary}", flush=True)
-        report(runs, better, args.pairs)
+        report(runs, metrics, args.pairs)
     finally:
         for path in roots.values():
             subprocess.run(["git", "worktree", "remove", "--force", path])
