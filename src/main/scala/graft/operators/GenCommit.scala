@@ -1,15 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, typedLit}
 
-/** Shared generation-commit protocol helpers for persisted indexes
-  * ([[Retrieval]]'s text index, [[MediaIndex]], [[ProductQuantization]]'s
-  * code frame): data files land under explicit `gen=N` partitions, derived
-  * tables under `<name>_gN` dirs, and the single COMMIT point is a `meta_gN`
-  * directory whose `_SUCCESS` marker landed — readers take the highest
-  * committed meta and filter to its gens list, so a crash mid-append leaves
-  * the previous index consistent and a retry just takes the next generation
-  * number. */
+/** The one commit store behind every persisted index ([[Retrieval]]'s text
+  * index, [[MediaIndex]], [[ProductQuantization]], [[ScalarQuantization]]):
+  * data files land under explicit `gen=N` partitions, derived tables under
+  * `<name>_gN` dirs, save-time static tables in plain dirs, and the single
+  * COMMIT point is a `meta_gN` directory whose `_SUCCESS` marker landed —
+  * readers take the highest committed meta and filter to its gens list, so
+  * a crash mid-append leaves the previous index consistent and a retry just
+  * takes the next generation number. An index supplies only its tables,
+  * its meta columns and its contract checks. */
 private[operators] object GenCommit {
 
   def fs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
@@ -21,8 +23,8 @@ private[operators] object GenCommit {
     * With `requireSuccess`, only dirs whose `_SUCCESS` marker landed count
     * (the committed set); without, every dir counts (orphans included — the
     * namespace a fresh generation number must clear). */
-  def listGens(spark: SparkSession, base: String, prefix: String,
-               requireSuccess: Boolean): Seq[Int] = {
+  private def listGens(spark: SparkSession, base: String, prefix: String,
+                       requireSuccess: Boolean): Seq[Int] = {
     val f = fs(spark, base)
     val p = new org.apache.hadoop.fs.Path(base)
     if (!f.exists(p)) Seq.empty
@@ -37,11 +39,111 @@ private[operators] object GenCommit {
   }
 
   /** The next generation number: strictly above every committed gen AND
-    * every orphan visible in the data dir or the meta namespace. */
-  def nextGen(spark: SparkSession, path: String, dataDir: String,
-              committed: Seq[Int]): Int =
-    1 + (committed ++ listGens(spark, s"$path/$dataDir", "gen=", requireSuccess = false)
-      ++ listGens(spark, path, "meta_g", requireSuccess = false)).max
+    * every orphan visible in the data dirs or the meta namespace. */
+  private def nextGen(spark: SparkSession, path: String, dataDirs: Seq[String],
+                      committed: Seq[Int]): Int =
+    1 + (committed ++ listGens(spark, path, "meta_g", requireSuccess = false)
+      ++ dataDirs.flatMap(d =>
+        listGens(spark, s"$path/$d", "gen=", requireSuccess = false))).max
+
+  /** A committed meta: its generation and its one row (the index's own
+    * columns plus `gens`, the committed generation list). */
+  final case class Meta(gen: Int, row: Row) {
+    def gens: Seq[Int] = row.getSeq[Int](row.fieldIndex("gens")).toSeq
+  }
+
+  /** The COMMITTED index state at `path`: the highest-numbered `meta_gN`
+    * directory whose `_SUCCESS` marker landed; None when there is none. */
+  def committedMeta(spark: SparkSession, path: String): Option[Meta] =
+    listGens(spark, path, "meta_g", requireSuccess = true).maxOption
+      .map(g => Meta(g, spark.read.parquet(s"$path/meta_g$g").collect().head))
+
+  /** [[committedMeta]], loud when `path` holds no committed index; `op`
+    * names the caller in the error. */
+  def requireMeta(spark: SparkSession, path: String, op: String): Meta =
+    committedMeta(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"$op: no committed index meta at $path — save first"))
+
+  /** Write `df` as generation `gen` of the data table `dataDir`, partitioned
+    * by `gen` then `partitionCols`: a save's generation 0 overwrites, an
+    * append's lands beside the committed generations. */
+  def writeGen(df: DataFrame, path: String, dataDir: String, gen: Int,
+               partitionCols: String*): Unit =
+    df.withColumn("gen", lit(gen))
+      .write.mode(if (gen == 0) "overwrite" else "append")
+      .partitionBy("gen" +: partitionCols: _*).parquet(s"$path/$dataDir")
+
+  /** The data table `dataDir` restricted to the committed `gens`, `gen`
+    * stripped — a partition filter, so a crashed append's orphans are
+    * pruned at FILE level and never read. */
+  def readGens(spark: SparkSession, path: String, dataDir: String,
+               gens: Seq[Int]): DataFrame =
+    spark.read.parquet(s"$path/$dataDir")
+      .filter(col("gen").isin(gens: _*)).drop("gen")
+
+  /** A small table (derived, static or meta) as one parquet file at `dir`. */
+  def writeTable(df: DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
+
+  /** The append contract the text and media indexes share: the batch's
+    * `idCol` values must be disjoint from the COMMITTED ones — an
+    * overlapping append would double-count every downstream statistic. */
+  def requireDisjointIds(batch: DataFrame, committed: DataFrame, idCol: String,
+                         op: String, path: String): Unit = {
+    val clashes = batch.select(col(idCol)).distinct()
+      .join(committed.select(col(idCol)), Seq(idCol), "left_semi")
+      .limit(5).collect().map(_.get(0))
+    require(clashes.isEmpty,
+      s"$op: $idCol values already indexed at $path: ${clashes.mkString(", ")}")
+  }
+
+  /** Save a fresh index at `path` from `input`. The input is staged ONCE
+    * (localCheckpoint) before anything at `path` is touched, so a frame that
+    * fails at run time cannot destroy the previously committed index, and
+    * every table comes from one evaluation. Then the save fence: acquire the
+    * lease (refusing while an append is in flight), recursively CLEAR `path`
+    * (a fresh save owns it — stale higher-numbered metas would shadow the
+    * new `meta_g0`; the now-ours lease goes with the rest) and immediately
+    * RE-ACQUIRE, so the whole rebuild stays fenced (two concurrent saves
+    * would otherwise both pass the first acquire and interleave their
+    * overwrite writes). Under it `body` writes generation 0 from the staged
+    * frame and returns the index's one-row meta; `meta_g0` (gens = [0])
+    * commits it. */
+  def save(input: DataFrame, path: String)(body: DataFrame => DataFrame): Unit = {
+    val spark = input.sparkSession
+    val staged = input.localCheckpoint()
+    acquireLease(spark, path)
+    fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
+    withLease(spark, path)(tok => commit(spark, path, tok, body(staged), 0, Seq(0)))
+  }
+
+  /** Append `input` to the committed index at `path` as a new generation.
+    * The input is staged ONCE before the writer lease is taken, so the hold
+    * window is the checks and writes only. The committed meta is read
+    * INSIDE the lease (read before it, a concurrent append could commit in
+    * between and our meta, carrying a stale gens list, would hide its
+    * generation); the next generation number clears every orphan in
+    * `dataDirs`. `body` gets (staged, committed meta, gen), runs the index's
+    * contract checks, writes generation `gen` and returns the new one-row
+    * meta; `meta_gN` (gens :+ N) commits it. `op` names the caller. */
+  def append(input: DataFrame, path: String, dataDirs: Seq[String], op: String)
+            (body: (DataFrame, Meta, Int) => DataFrame): Unit = {
+    val spark = input.sparkSession
+    val staged = input.localCheckpoint()
+    withLease(spark, path) { tok =>
+      val committed = requireMeta(spark, path, op)
+      val gen = nextGen(spark, path, dataDirs, committed.gens)
+      commit(spark, path, tok, body(staged, committed, gen), gen, committed.gens :+ gen)
+    }
+  }
+
+  /** The commit: the lease fence (a writer lost to a TTL takeover aborts
+    * here), then `meta_gN` landing with `_SUCCESS`. */
+  private def commit(spark: SparkSession, path: String, token: String,
+                     meta: DataFrame, gen: Int, gens: Seq[Int]): Unit = {
+    assertHeld(spark, path, token)
+    writeTable(meta.withColumn("gens", typedLit(gens)), s"$path/meta_g$gen")
+  }
 
   // ── writer lease ────────────────────────────────────────────────────────
   //
@@ -52,10 +154,10 @@ private[operators] object GenCommit {
   // mechanism: appenders hold `_lease` (an atomic filesystem create) for
   // the duration of the write, vacuum REFUSES while a fresh lease exists,
   // and a second appender fails loudly instead of interleaving. A lease
-  // older than `ttlMs` is STALE (its writer's JVM died mid-append — the
-  // crash the generation protocol already tolerates) and is taken over, so
-  // a crash never wedges the index. Pick `ttlMs` above the longest append
-  // the deployment runs; the default is generous for batch ingest.
+  // older than the TTL ([[DefaultLeaseTtlMs]], generous for batch ingest —
+  // it must exceed the longest append a deployment runs) is STALE (its
+  // writer's JVM died mid-append — the crash the generation protocol
+  // already tolerates) and is taken over, so a crash never wedges the index.
   //
   // OWNERSHIP: the lease file carries `<millis> <uuid-token>`; acquire
   // returns the token and release/commit verify it still matches. A
@@ -162,44 +264,40 @@ private[operators] object GenCommit {
     * always released on exit (an in-JVM failure releases immediately — only
     * a JVM death leaves the stale file the TTL reclaims). A body that lost
     * the lease to a TTL takeover gets a loud release-time failure rather
-    * than a silent delete of the new holder's lease — and should call
-    * [[assertHeld]] itself right before its commit write. */
-  def withLease[T](spark: SparkSession, path: String,
-                   ttlMs: Long = DefaultLeaseTtlMs)(body: String => T): T = {
-    val token = acquireLease(spark, path, ttlMs)
+    * than a silent delete of the new holder's lease. */
+  private def withLease[T](spark: SparkSession, path: String)
+                          (body: String => T): T = {
+    val token = acquireLease(spark, path)
     try body(token) finally releaseLease(spark, path, token)
   }
 
-  /** Reclaim dead bytes: delete `gen=N` data partitions whose N is not in
-    * the committed gens list (orphans of crashed appends) and superseded
-    * derived/meta directories (`<prefix>N` with N ≠ the current metaGen —
-    * readers only ever open the highest committed meta and ITS derived
-    * tables). The committed state comes from the `meta` thunk, evaluated
-    * INSIDE the held lease: reading it before acquisition would let an
-    * append commit between the read and the lease and get its fresh
-    * generation (absent from the stale gens list) reclaimed. Every deletion
-    * is safe against READERS and against a crash mid-vacuum (nothing
-    * reachable from the current committed meta is touched — a partial
-    * vacuum is a smaller but equally consistent index). A CONCURRENT APPEND
-    * is fenced by the writer lease: appenders hold `_lease` while their
-    * generation is in flight, and vacuum throws rather than reclaim what
-    * might be a live generation (a stale lease — writer died — ages out
-    * after `ttlMs` and no longer blocks). Returns the number of directories
-    * removed. */
+  /** Reclaim dead bytes: delete `gen=N` partitions of `dataDirs` whose N is
+    * not in the committed gens list (orphans of crashed appends) and
+    * superseded derived/meta directories (`<prefix>N` with N ≠ the committed
+    * meta's generation — readers only ever open the highest committed meta
+    * and ITS derived tables). The committed meta is read INSIDE the held
+    * lease: read before acquisition, an append could commit between the
+    * read and the lease and get its fresh generation (absent from the stale
+    * gens list) reclaimed. Every deletion is safe against READERS and
+    * against a crash mid-vacuum (nothing reachable from the committed meta
+    * is touched — a partial vacuum is a smaller but equally consistent
+    * index). A CONCURRENT APPEND is fenced by the writer lease: appenders
+    * hold `_lease` while their generation is in flight, and vacuum throws
+    * rather than reclaim what might be a live generation (a stale lease —
+    * writer died — ages out after the TTL and no longer blocks). `op` names
+    * the caller in errors. Returns the number of directories removed. */
   def vacuum(spark: SparkSession, path: String, dataDirs: Seq[String],
-             derivedPrefixes: Seq[String],
-             ttlMs: Long = DefaultLeaseTtlMs)
-            (meta: => (Seq[Int], Int)): Int =
+             derivedPrefixes: Seq[String], op: String): Int =
     // HOLD the lease for the whole meta-read + list-and-delete pass, not
     // merely observe it: a check-then-act vacuum would race an appender
     // acquiring between the check and the deletes and reclaim its live
     // generation. A fresh lease refuses loudly (acquireLease's message); a
     // stale one is taken over — a dead writer's orphans are exactly what
     // vacuum reclaims.
-    withLease(spark, path, ttlMs) { _ =>
-      val (gens, metaGen) = meta
+    withLease(spark, path) { _ =>
+      val meta = requireMeta(spark, path, op)
       val f = fs(spark, path)
-      val committed = gens.toSet
+      val committed = meta.gens.toSet
       var removed = 0
       def drop(p: String): Unit =
         if (f.delete(new org.apache.hadoop.fs.Path(p), true)) removed += 1
@@ -209,22 +307,8 @@ private[operators] object GenCommit {
         drop(s"$path/$d/gen=$g")
       for (p <- derivedPrefixes :+ "meta_g";
            g <- listGens(spark, path, p, requireSuccess = false)
-           if g != metaGen)
+           if g != meta.gen)
         drop(s"$path/$p$g")
       removed
     }
-
-  /** The save-path fence: acquire the lease (refusing while an append is in
-    * flight), recursively CLEAR `path` (a fresh save owns it — this removes
-    * the now-ours lease with the rest), immediately RE-ACQUIRE so the whole
-    * rebuild stays fenced (two concurrent saves would otherwise both pass
-    * the first acquire — the second finding no lease after the first's
-    * delete — and interleave their overwrite writes), then run `body` under
-    * the new lease with the commit fence on release. */
-  def withSaveFence[T](spark: SparkSession, path: String,
-                       ttlMs: Long = DefaultLeaseTtlMs)(body: String => T): T = {
-    acquireLease(spark, path, ttlMs)
-    fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
-    withLease(spark, path, ttlMs)(body)
-  }
 }

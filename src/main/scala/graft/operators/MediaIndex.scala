@@ -31,42 +31,22 @@ object MediaIndex {
     * generations only; `gen` stripped). */
   final case class Index(kind: String, nItems: Long, fingerprints: DataFrame)
 
-  private def committedMeta(spark: SparkSession,
-                            path: String): Option[(Int, String, Long, Seq[Int])] = {
-    import spark.implicits._
-    GenCommit.listGens(spark, path, "meta_g", requireSuccess = true)
-      .sorted.lastOption.map { g =>
-        val m = spark.read.parquet(s"$path/meta_g$g")
-          .select(col("kind"), col("n_items"), col("gens"))
-          .as[(String, Long, Seq[Int])].collect().head
-        (g, m._1, m._2, m._3)
-      }
-  }
-
   /** Persist `hashes` (media_id + modality columns) as a fresh index at
-    * `path` — clears any previous index there (a fresh save owns the path). */
+    * `path` — clears any previous index there (a fresh save owns the path),
+    * only once the batch is staged ([[GenCommit.save]]). */
   def save(hashes: DataFrame, kind: String, path: String): Unit = {
     require(hashes.columns.contains("media_id"),
       "MediaIndex.save: hashes must carry a media_id column")
     val spark = hashes.sparkSession
     import spark.implicits._
-    // materialize BEFORE deleting the old index: a decode failure in the new
-    // batch must leave any previously committed index at `path` intact
-    val staged = hashes.localCheckpoint()
-    // fence out in-flight appenders before destroying the path (a held lease
-    // refuses loudly), then keep the WHOLE rebuild fenced: withSaveFence
-    // re-creates the lease right after the recursive delete, so a second
-    // concurrent save fails on the acquire instead of interleaving its
-    // overwrite writes with ours
-    GenCommit.withSaveFence(spark, path) { tok =>
-      staged.withColumn("gen", lit(0))
-        .write.mode("overwrite").partitionBy("gen").parquet(s"$path/fingerprints")
-      val n = staged.select(countDistinct(col("media_id"))).as[Long].collect().head
-      GenCommit.assertHeld(spark, path, tok) // commit fence
-      Seq((kind, n, Seq(0))).toDF("kind", "n_items", "gens")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta_g0")
+    GenCommit.save(hashes, path) { staged =>
+      GenCommit.writeGen(staged, path, "fingerprints", 0)
+      Seq((kind, nItems(staged))).toDF("kind", "n_items")
     }
   }
+
+  private def nItems(staged: DataFrame): Long =
+    staged.select(countDistinct(col("media_id"))).collect().head.getLong(0)
 
   /** Append `newHashes` as a new generation. Loud contracts: the index must
     * exist, `kind` must match the committed meta (mixed hash families band
@@ -75,44 +55,23 @@ object MediaIndex {
   def append(newHashes: DataFrame, kind: String, path: String): Unit = {
     val spark = newHashes.sparkSession
     import spark.implicits._
-    // the expensive leg (decode + fingerprint) materializes BEFORE the lease
-    // is taken, so the hold window is the metadata checks and writes only
-    val staged = newHashes.localCheckpoint()
-    // writer lease: held while the generation is in flight, so a racing
-    // vacuum cannot reclaim it as an orphan and a second appender fails
-    // loudly instead of interleaving generation numbers. The committed meta
-    // is read INSIDE the lease: read before it, a concurrent append could
-    // commit between the read and our acquire and our meta — carrying the
-    // stale gens list — would hide its committed generation (and hand it to
-    // the next vacuum as an "orphan").
-    GenCommit.withLease(spark, path) { tok =>
-      val (_, idxKind, nItems, gens) = committedMeta(spark, path)
-        .getOrElse(throw new IllegalArgumentException(
-          s"MediaIndex.append: no committed index meta at $path — save first"))
+    val op = "MediaIndex.append"
+    GenCommit.append(newHashes, path, Seq("fingerprints"), op) { (staged, meta, gen) =>
+      val idxKind = meta.row.getAs[String]("kind")
       require(idxKind == kind,
-        s"MediaIndex.append: index at $path holds '$idxKind' fingerprints, not '$kind'")
-      val committed = spark.read.parquet(s"$path/fingerprints")
-        .filter(col("gen").isin(gens: _*))
+        s"$op: index at $path holds '$idxKind' fingerprints, not '$kind'")
+      val committed = GenCommit.readGens(spark, path, "fingerprints", meta.gens)
       // names AND types: a same-named generation with drifted types (int vs
       // long ids, array<int> energies) would commit fine and poison every
       // cross-generation read later
-      def shape(df: DataFrame) = df.schema.fields.filterNot(_.name == "gen")
+      def shape(df: DataFrame) = df.schema.fields
         .map(f => (f.name, f.dataType.simpleString)).sortBy(_._1).toSeq
       require(shape(staged) == shape(committed),
-        s"MediaIndex.append: columns ${shape(staged)} != indexed ${shape(committed)}")
-      val clashes = staged.select(col("media_id")).distinct()
-        .join(committed.select(col("media_id")), Seq("media_id"), "left_semi")
-        .limit(5).as[Long].collect()
-      require(clashes.isEmpty,
-        s"MediaIndex.append: media ids already indexed at $path: ${clashes.mkString(", ")}")
-      val newGen = GenCommit.nextGen(spark, path, "fingerprints", gens)
-      staged.withColumn("gen", lit(newGen))
-        .write.mode("append").partitionBy("gen").parquet(s"$path/fingerprints")
-      val n = staged.select(countDistinct(col("media_id"))).as[Long].collect().head
-      GenCommit.assertHeld(spark, path, tok) // commit fence (TTL takeover aborts here)
-      // the commit: meta_gN landing (with _SUCCESS) makes the generation visible
-      Seq((kind, nItems + n, gens :+ newGen)).toDF("kind", "n_items", "gens")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta_g$newGen")
+        s"$op: columns ${shape(staged)} != indexed ${shape(committed)}")
+      GenCommit.requireDisjointIds(staged, committed, "media_id", op, path)
+      GenCommit.writeGen(staged, path, "fingerprints", gen)
+      Seq((kind, meta.row.getAs[Long]("n_items") + nItems(staged)))
+        .toDF("kind", "n_items")
     }
   }
 
@@ -124,24 +83,13 @@ object MediaIndex {
     * writer) ages out after the TTL. Returns the number of directories
     * removed. */
   def vacuum(spark: SparkSession, path: String): Int =
-    // the meta read happens INSIDE the held lease (the vacuum thunk): read
-    // before acquisition, an append committing in between would get its
-    // fresh generation — absent from the stale gens list — reclaimed
-    GenCommit.vacuum(spark, path, Seq("fingerprints"), Nil) {
-      val (metaGen, _, _, gens) = committedMeta(spark, path)
-        .getOrElse(throw new IllegalArgumentException(
-          s"MediaIndex.vacuum: no committed index meta at $path — save first"))
-      (gens, metaGen)
-    }
+    GenCommit.vacuum(spark, path, Seq("fingerprints"), Nil, "MediaIndex.vacuum")
 
   /** Load the committed index at `path` (uncommitted generations from a
     * crashed append are invisible — file-level `gen` partition pruning). */
   def load(spark: SparkSession, path: String): Index = {
-    val (_, kind, nItems, gens) = committedMeta(spark, path)
-      .getOrElse(throw new IllegalArgumentException(
-        s"MediaIndex.load: no committed index meta at $path — save first"))
-    Index(kind, nItems,
-      spark.read.parquet(s"$path/fingerprints")
-        .filter(col("gen").isin(gens: _*)).drop("gen"))
+    val meta = GenCommit.requireMeta(spark, path, "MediaIndex.load")
+    Index(meta.row.getAs[String]("kind"), meta.row.getAs[Long]("n_items"),
+      GenCommit.readGens(spark, path, "fingerprints", meta.gens))
   }
 }

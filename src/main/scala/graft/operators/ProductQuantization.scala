@@ -715,7 +715,9 @@ object ProductQuantization {
     * `meta_gN` write — a crash mid-[[appendToPqIndex]] leaves the previous
     * index readable and its orphaned files invisible; [[vacuumPqIndex]]
     * reclaims them. The geometry tables (coarse/codebooks/rotation) are
-    * save-time-static — appends never touch them. */
+    * save-time-static — appends never touch them. The codes are staged
+    * before the path is cleared, so a frame that fails at run time leaves a
+    * committed index intact. */
   def savePqIndex(codes: DataFrame, idCol: String, packedCol: String,
                   cellCol: String, coarse: Seq[Seq[Double]],
                   codebooks: Codebooks, residual: Boolean,
@@ -727,21 +729,14 @@ object ProductQuantization {
     val spark = codes.sparkSession
     import spark.implicits._
     require(coarse.nonEmpty && codebooks.nonEmpty, "empty index geometry")
-    // resolve the projection FIRST (select analyzes eagerly — a typo'd
-    // column throws here, before any committed index at `path` is cleared)
-    val staged = codes.select(col(idCol).as("vec_id"), col(packedCol).as("packed"),
-      col(cellCol).cast("int").as("cell"))
-    // a fresh save owns the path (stale higher-numbered metas of a previous
-    // index would shadow meta_g0); the rebuild stays lease-fenced throughout
-    GenCommit.withSaveFence(spark, path) { tok =>
-      staged.withColumn("gen", lit(0))
-        .write.mode("overwrite").partitionBy("gen", "cell").parquet(s"$path/codes")
-      coarse.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-      codebooks.zipWithIndex.flatMap { case (cents, s) =>
+    GenCommit.save(codes.select(col(idCol).as("vec_id"), col(packedCol).as("packed"),
+        col(cellCol).cast("int").as("cell")), path) { staged =>
+      GenCommit.writeGen(staged, path, "codes", 0, "cell")
+      GenCommit.writeTable(coarse.zipWithIndex.map { case (c, i) => (i, c) }
+        .toDF("cell", "centroid"), s"$path/coarse")
+      GenCommit.writeTable(codebooks.zipWithIndex.flatMap { case (cents, s) =>
         cents.zipWithIndex.map { case (cent, c) => (s, c, cent) } }
-        .toDF("sub", "cid", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+        .toDF("sub", "cid", "centroid"), s"$path/codebooks")
       // rotation_seed: an index built in ROTATED space ([[Rotation.rotate]])
       // is only searchable when queries rotate the same way — the seed fully
       // determines the deterministic matrix, so persisting it keeps the index
@@ -750,35 +745,13 @@ object ProductQuantization {
       // seed — persist the matrix itself (dims rows, tiny) so the index stays
       // self-describing in that case too
       rotation.foreach { rot =>
-        rot.zipWithIndex.map { case (row, i) => (i, row) }.toDF("row_idx", "row")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
+        GenCommit.writeTable(rot.zipWithIndex.map { case (row, i) => (i, row) }
+          .toDF("row_idx", "row"), s"$path/rotation")
       }
-      GenCommit.assertHeld(spark, path, tok) // commit fence
       Seq((codebooks.length, codebooks.head.length, residual, rotationSeed,
-          rotation.isDefined, Seq(0)))
-        .toDF("m", "ksub", "residual", "rotation_seed", "has_rotation_matrix",
-          "gens")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta_g0")
+          rotation.isDefined))
+        .toDF("m", "ksub", "residual", "rotation_seed", "has_rotation_matrix")
     }
-  }
-
-  /** The committed meta row at `path`: the highest `meta_gN` whose
-    * `_SUCCESS` landed — (gen, m, ksub, residual, rotation_seed,
-    * has_rotation_matrix, gens). None when no generational meta exists (a
-    * pre-generational index holds a plain `meta` dir instead — see
-    * [[loadPqIndex]]'s legacy fallback). */
-  private def committedPqMeta(spark: org.apache.spark.sql.SparkSession,
-                              path: String)
-      : Option[(Int, Int, Int, Boolean, Option[Long], Boolean, Seq[Int])] = {
-    import spark.implicits._
-    GenCommit.listGens(spark, path, "meta_g", requireSuccess = true)
-      .sorted.lastOption.map { g =>
-        val m = spark.read.parquet(s"$path/meta_g$g")
-          .select(col("m").cast("int"), col("ksub").cast("int"), col("residual"),
-            col("rotation_seed"), col("has_rotation_matrix"), col("gens"))
-          .as[(Int, Int, Boolean, Option[Long], Boolean, Seq[Int])].collect().head
-        (g, m._1, m._2, m._3, m._4, m._5, m._6)
-      }
   }
 
   /** Append freshly-encoded rows to a persisted index's code frame — the
@@ -794,37 +767,26 @@ object ProductQuantization {
     * codes that could not have been packed under the meta geometry (bits
     * set above m·width, or a field ≥ ksub for non-power-of-two ksub). The
     * scan is one pass over the APPENDED batch only — incremental-sized,
-    * never corpus-sized. */
+    * never corpus-sized.
+    *
+    * The batch is staged ONCE before the writer lease ([[GenCommit.append]]):
+    * left lazy, its live encode chain would recompute for the geometry check
+    * AND the write, and the no-key count would inline it past janino's 64 KB
+    * method limit under CODEGEN_ONLY (CodegenOnlySweepSpec catches that). */
   def appendToPqIndex(codes: DataFrame, idCol: String, packedCol: String,
                       cellCol: String, path: String,
                       m: Option[Int] = None, ksub: Option[Int] = None): Unit = {
     val spark = codes.sparkSession
-    import spark.implicits._
-    // materialize the staged batch ONCE (localCheckpoint): the caller's
-    // frame typically carries the whole live encode chain (assignCells →
-    // encodeResidual → packCodes); left lazy it would recompute for the
-    // geometry-check aggregate AND the write — and the no-key count inlines
-    // the chain into one generated method that overflows janino's 64 KB
-    // limit under CODEGEN_ONLY (CodegenOnlySweepSpec catches the silent
-    // interpreted fallback). The batch is incremental-sized by contract.
-    val proj = codes.select(col(idCol).as("vec_id"),
-      col(packedCol).cast("long").as("packed"), col(cellCol).cast("int").as("cell"))
-      .localCheckpoint()
-    // writer lease ([[GenCommit]]): held while the generation is in flight —
-    // a racing vacuum cannot reclaim it as an orphan, a second appender
-    // fails loudly instead of interleaving, and a JVM crash mid-append
-    // leaves the committed index untouched (the torn gen=N files are
-    // invisible to readers and vacuum-reclaimable). The committed meta is
-    // read INSIDE the lease so a concurrent append's fresh generation can
-    // never be dropped from the gens list we commit.
-    GenCommit.withLease(spark, path) { tok =>
-      val (_, metaM, metaKsub, residual, rotSeed, hasRot, gens) =
-        committedPqMeta(spark, path).getOrElse(throw new IllegalArgumentException(
-          s"appendToPqIndex: no committed index meta at $path — savePqIndex first"))
+    val op = "appendToPqIndex"
+    GenCommit.append(codes.select(col(idCol).as("vec_id"),
+        col(packedCol).cast("long").as("packed"), col(cellCol).cast("int").as("cell")),
+        path, Seq("codes"), op) { (proj, meta, gen) =>
+      val metaM = meta.row.getAs[Int]("m")
+      val metaKsub = meta.row.getAs[Int]("ksub")
       m.foreach(v => require(v == metaM,
-        s"appendToPqIndex: caller m=$v but index at $path has m=$metaM"))
+        s"$op: caller m=$v but index at $path has m=$metaM"))
       ksub.foreach(v => require(v == metaKsub,
-        s"appendToPqIndex: caller ksub=$v but index at $path has ksub=$metaKsub"))
+        s"$op: caller ksub=$v but index at $path has ksub=$metaKsub"))
       val width = codeWidth(metaKsub)
       // structural batch check: bits above the m·width window mean the codes
       // were packed under a WIDER geometry (arithmetic shiftright also flags a
@@ -841,18 +803,12 @@ object ProductQuantization {
       val nBad = proj
         .where(col("packed").isNotNull && (fieldBad || windowBad)).count()
       require(nBad == 0L,
-        s"appendToPqIndex: $nBad packed code(s) violate index geometry " +
+        s"$op: $nBad packed code(s) violate index geometry " +
           s"m=$metaM ksub=$metaKsub at $path — refusing to corrupt the index")
-      val newGen = GenCommit.nextGen(spark, path, "codes", gens)
-      proj.withColumn("gen", lit(newGen))
-        .write.mode("append").partitionBy("gen", "cell").parquet(s"$path/codes")
-      GenCommit.assertHeld(spark, path, tok) // commit fence (TTL takeover aborts here)
-      // the commit: meta_gN landing (with _SUCCESS) makes the generation
-      // visible atomically; geometry columns carry over unchanged
-      Seq((metaM, metaKsub, residual, rotSeed, hasRot, gens :+ newGen))
-        .toDF("m", "ksub", "residual", "rotation_seed", "has_rotation_matrix",
-          "gens")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta_g$newGen")
+      GenCommit.writeGen(proj, path, "codes", gen, "cell")
+      // geometry columns carry over unchanged
+      spark.createDataFrame(java.util.List.of(meta.row), meta.row.schema)
+        .drop("gens")
     }
   }
 
@@ -864,40 +820,28 @@ object ProductQuantization {
     * the number of directories removed. */
   def vacuumPqIndex(spark: org.apache.spark.sql.SparkSession,
                     path: String): Int =
-    GenCommit.vacuum(spark, path, Seq("codes"), Nil) {
-      val (metaGen, _, _, _, _, _, gens) = committedPqMeta(spark, path)
-        .getOrElse(throw new IllegalArgumentException(
-          s"vacuumPqIndex: no committed index meta at $path — savePqIndex first"))
-      (gens, metaGen)
-    }
+    GenCommit.vacuum(spark, path, Seq("codes"), Nil, "vacuumPqIndex")
 
   /** Load a [[savePqIndex]] index. The geometry tables collect driver-side
     * (they are the same small reference objects every search builds); the
     * code frame stays lazy and cell-partitioned. */
   def loadPqIndex(spark: SparkSession, path: String): PqIndex = {
     import spark.implicits._
-    // committed generational meta first; a PRE-GENERATIONAL index (plain
-    // `meta` dir, codes partitioned by cell only) loads via the legacy
-    // branch — read the resolved layout, not an assumption about it (the
-    // events-table lesson, same as the has_rotation_matrix probe below)
-    val (m, ksub, residual, rotSeed, hasRot, codesDf) =
-      committedPqMeta(spark, path) match {
-        case Some((_, mm, kk, res, rs, hr, gens)) =>
-          // uncommitted generations from a crashed append are invisible —
-          // `gen` is a partition column, so the filter prunes at FILE level
-          // (and composes with every probe's `cell` isin pruning)
-          (mm, kk, res, rs, hr, spark.read.parquet(s"$path/codes")
-            .filter(col("gen").isin(gens: _*)).drop("gen"))
-        case None =>
-          val metaDf = spark.read.parquet(s"$path/meta")
-          val hasRotCol = metaDf.columns.contains("has_rotation_matrix")
-          val meta = metaDf
-            .select(col("m"), col("ksub"), col("residual"), col("rotation_seed"),
-              (if (hasRotCol) col("has_rotation_matrix") else lit(false)).as("hr"))
-            .as[(Int, Int, Boolean, Option[Long], Boolean)].collect().head
-          (meta._1, meta._2, meta._3, meta._4, meta._5,
-            spark.read.parquet(s"$path/codes"))
-      }
+    // committed generational meta first (its code frame filtered to the
+    // committed gens — pruning composes with every probe's `cell` isin); a
+    // PRE-GENERATIONAL index (plain `meta` dir, codes partitioned by cell
+    // only) loads via the legacy branch — read the resolved layout, not an
+    // assumption about it (the events-table lesson, same as the
+    // has_rotation_matrix probe below)
+    val (meta, codesDf) = GenCommit.committedMeta(spark, path) match {
+      case Some(c) => (c.row, GenCommit.readGens(spark, path, "codes", c.gens))
+      case None => (spark.read.parquet(s"$path/meta").collect().head,
+        spark.read.parquet(s"$path/codes"))
+    }
+    val m = meta.getAs[Int]("m")
+    val ksub = meta.getAs[Int]("ksub")
+    val hasRot = meta.schema.fieldNames.contains("has_rotation_matrix") &&
+      meta.getAs[Boolean]("has_rotation_matrix")
     val rotation =
       if (!hasRot) None
       else Some(spark.read.parquet(s"$path/rotation")
@@ -913,7 +857,9 @@ object ProductQuantization {
       .map { case (_, rows) => rows.sortBy(_._2).map(_._3.toSeq).toSeq }
     require(codebooks.length == m && codebooks.forall(_.length == ksub),
       s"codebook table disagrees with meta geometry m=$m ksub=$ksub")
-    PqIndex(coarse, codebooks, residual, m, ksub, codesDf, rotSeed, rotation)
+    PqIndex(coarse, codebooks, meta.getAs[Boolean]("residual"), m, ksub, codesDf,
+      Option(meta.getAs[java.lang.Long]("rotation_seed")).map(_.longValue),
+      rotation)
   }
 
   /** Mean squared quantization error of a RESIDUAL codebook (residual twin

@@ -111,23 +111,6 @@ object Retrieval {
     def avgdl: Double = sumDl.toDouble / nDocs.toDouble
   }
 
-  /** The COMMITTED index state at `path`: the highest-numbered `meta_gN`
-    * directory whose `_SUCCESS` marker landed — the single commit point of
-    * the save/append protocol. Returns (gen, n_docs, sum_dl, n_buckets,
-    * committed gens). */
-  private def committedMeta(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Option[(Int, Long, Long, Int, Seq[Int])] = {
-    import spark.implicits._
-    GenCommit.listGens(spark, path, "meta_g", requireSuccess = true).sorted.lastOption
-      .map { g =>
-        val m = spark.read.parquet(s"$path/meta_g$g")
-          .select(col("n_docs"), col("sum_dl"), col("n_buckets").cast("int"),
-            col("gens"))
-          .as[(Long, Long, Int, Seq[Int])].collect().head
-        (g, m._1, m._2, m._3, m._4)
-      }
-  }
-
   /** Driver-side twin of [[TextFunctions.hashBucket]] for a literal term —
     * first 32 md5 bits of the string, mod `buckets` (the same arithmetic the
     * column expression and every oracle use). */
@@ -156,55 +139,50 @@ object Retrieval {
     * Exact integer statistics throughout, so a reloaded index ranks
     * BIT-IDENTICALLY to the from-corpus pass (spec-pinned).
     *
-    * Commit protocol (shared with [[appendToTextIndex]]): every write lands
-    * under an explicit GENERATION — `gen=N` partitions for postings/doclens,
-    * `terms_gN` / `meta_gN` directories for the derived tables — and a
-    * generation becomes visible only when its `meta_gN` directory commits
-    * (`_SUCCESS` marker). Readers take the highest committed meta and filter
-    * postings/doclens to its `gens` list, so a crash at ANY point leaves the
-    * previously committed index exactly as it was and orphaned files from
-    * the failed attempt are never read. */
+    * Commit protocol ([[GenCommit.save]], shared with [[appendToTextIndex]]):
+    * postings/doclens land under `gen=N` partitions, the derived tables in
+    * `terms_gN` / `meta_gN` dirs, and `meta_gN` is the single commit point.
+    * The tokenized input is staged before the path is cleared, so a bad
+    * call, a batch failing at run time or a crash at ANY point leaves the
+    * previously committed index exactly as it was. */
   def saveTextIndex(docs: DataFrame, idCol: String, textCol: String,
                     path: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
     val spark = docs.sparkSession
     import spark.implicits._
-    // resolve the input FIRST (select analyzes eagerly — a typo'd column
-    // throws here), THEN clear the path: a bad call must not destroy a good
-    // committed index before writing nothing
-    val staged = docs.select(col(idCol).as("doc_id"),
+    GenCommit.save(tokenized(docs, idCol, textCol), path) { staged =>
+      val (n, sdl) = writeTextGen(staged, path, 0, nBuckets, None)
+      Seq((n, sdl, nBuckets)).toDF("n_docs", "sum_dl", "n_buckets")
+    }
+  }
+
+  /** The staged text-index input: (doc_id, _toks, dl). `select` analyzes
+    * eagerly, so a typo'd column throws before any index is touched. */
+  private def tokenized(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
       TextFunctions.tokens(col(textCol)).as("_toks"))
       .select(col("doc_id"), col("_toks"), size(col("_toks")).cast("long").as("dl"))
-    // a fresh save owns the path: clear stale generations from any previous
-    // index here, or their higher-numbered metas would shadow this one —
-    // fencing out in-flight appenders first (a held lease refuses loudly)
-    // and keeping the WHOLE rebuild fenced (withSaveFence re-creates the
-    // lease right after the recursive delete, so a second concurrent save
-    // fails on the acquire instead of interleaving overwrite writes)
-    GenCommit.withSaveFence(spark, path) { tok =>
-    staged.select(col("doc_id"), col("dl"), lit(0).as("gen"))
-      .write.mode("overwrite").partitionBy("gen").parquet(s"$path/doclens")
-    val postings = staged
+
+  /** Write generation `gen` from a staged batch: doclens, bucketed
+    * postings, and `terms_gN` — the generation's per-term doc counts (one
+    * postings row per (term, doc) ⇒ the exact array_contains df) added to
+    * the committed `prevTerms` table, a vocab-sized merge that never rescans
+    * older postings. Returns the batch's (doc count, token count). */
+  private def writeTextGen(staged: DataFrame, path: String, gen: Int,
+                           nBuckets: Int, prevTerms: Option[DataFrame]): (Long, Long) = {
+    import staged.sparkSession.implicits._
+    GenCommit.writeGen(staged.select(col("doc_id"), col("dl")), path, "doclens", gen)
+    GenCommit.writeGen(staged
       .select(col("doc_id"), explode(col("_toks")).as("term"))
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
-    postings
-      .withColumn("term_bucket", TextFunctions.hashBucket(col("term"), nBuckets))
-      .withColumn("gen", lit(0))
-      .write.mode("overwrite").partitionBy("gen", "term_bucket")
-      .parquet(s"$path/postings")
-    // df from the postings relation: one row per (term, doc) ⇒ count = docs
-    // containing the term — the exact array_contains statistic
-    spark.read.parquet(s"$path/postings")
+      .withColumn("term_bucket", TextFunctions.hashBucket(col("term"), nBuckets)),
+      path, "postings", gen, "term_bucket")
+    val df = GenCommit.readGens(staged.sparkSession, path, "postings", Seq(gen))
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/terms_g0")
-    val stats = staged.agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl"))
+    GenCommit.writeTable(prevTerms.fold(df)(prev => df.unionByName(prev)
+      .groupBy(col("term")).agg(sum(col("df")).as("df"))), s"$path/terms_g$gen")
+    staged.agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
       .as[(Long, Long)].collect().head
-    GenCommit.assertHeld(spark, path, tok) // commit fence
-    // the commit: meta_g0 landing (with _SUCCESS) makes generation 0 visible
-    Seq((stats._1, stats._2, nBuckets, Seq(0)))
-      .toDF("n_docs", "sum_dl", "n_buckets", "gens")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta_g0")
-    }
   }
 
   /** Append `newDocs` to a PERSISTED [[saveTextIndex]] index WITHOUT
@@ -213,8 +191,8 @@ object Retrieval {
     * parquet files land beside the old ones (file-level term_bucket pruning
     * keeps working across both generations), while the two vocabulary-sized
     * tables rebuild incrementally — `terms` as old-df ⊕ new-per-term doc
-    * counts (a driver-side merge of two vocab-sized reads; NEVER a full
-    * postings rescan) and `meta` by adding the new corpus stats.
+    * counts (a vocab-sized union + aggregate; NEVER a full postings
+    * rescan) and `meta` by adding the new corpus stats.
     *
     * Loud contracts: the index must exist (no committed meta fails loudly),
     * the bucket count comes from META — not a caller parameter — so the new
@@ -222,77 +200,27 @@ object Retrieval {
     * from the COMMITTED ids (an overlapping append would double-count df/dl
     * for every downstream reader).
     *
-    * Crash safety: the append is a new GENERATION. Postings/doclens land
-    * under a fresh `gen=N` partition, the merged vocabulary under `terms_gN`,
-    * and the single COMMIT is the final `meta_gN` write — readers only see
-    * generations listed by the highest committed meta, so a crash anywhere
-    * mid-append leaves the old index fully consistent AND readable, and a
-    * retry simply takes the next generation number (the orphaned files of
-    * the failed attempt are never listed, at the cost of dead bytes until a
-    * fresh [[saveTextIndex]] reclaims the path). */
+    * Crash safety ([[GenCommit.append]]): the append is a new GENERATION
+    * staged as ONE evaluation of `newDocs` (a non-deterministic batch cannot
+    * commit mutually inconsistent shards) and committed by its `meta_gN`
+    * write, so a crash anywhere mid-append leaves the old index consistent
+    * AND readable and a retry takes the next generation number. The failed
+    * attempt's orphaned files are never read; [[vacuumTextIndex]] reclaims
+    * them. */
   def appendToTextIndex(newDocs: DataFrame, idCol: String, textCol: String,
                         path: String): Unit = {
     val spark = newDocs.sparkSession
     import spark.implicits._
-    // writer lease: held while the generation is in flight, so a racing
-    // vacuum cannot reclaim it as an orphan and a second appender fails
-    // loudly instead of interleaving generation numbers. The committed meta
-    // is read INSIDE the lease: read before it, a concurrent append could
-    // commit between the read and our acquire and our meta — carrying the
-    // stale gens list — would hide its committed generation.
-    GenCommit.withLease(spark, path) { tok =>
-    val (metaGen, nDocs, sumDl, nBuckets, gens) = committedMeta(spark, path)
-      .getOrElse(throw new IllegalArgumentException(
-        s"appendToTextIndex: no committed index meta at $path — saveTextIndex first"))
-    // next generation: strictly above everything on disk — committed gens AND
-    // orphans from crashed attempts (doclens partition dirs + meta dirs are
-    // both pure filesystem listings)
-    val newGen = GenCommit.nextGen(spark, path, "doclens", gens)
-    // one evaluation for the whole generation: the clash check, doclens,
-    // postings, terms merge, and meta stats below each re-run this plan —
-    // a non-deterministic newDocs (sample, order-dependent dedup) would
-    // otherwise commit mutually inconsistent shards as a "valid" generation
-    val staged = newDocs.select(col(idCol).as("doc_id"),
-      TextFunctions.tokens(col(textCol)).as("_toks"))
-      .select(col("doc_id"), col("_toks"), size(col("_toks")).cast("long").as("dl"))
-      .localCheckpoint()
-    val clashes = staged.select(col("doc_id"))
-      .join(spark.read.parquet(s"$path/doclens")
-          .filter(col("gen").isin(gens: _*)).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-      .limit(5).as[Long].collect()
-    require(clashes.isEmpty,
-      s"appendToTextIndex: doc ids already indexed at $path: ${clashes.mkString(", ")}")
-    staged.select(col("doc_id"), col("dl"), lit(newGen).as("gen"))
-      .write.mode("append").partitionBy("gen").parquet(s"$path/doclens")
-    val postings = staged
-      .select(col("doc_id"), explode(col("_toks")).as("term"))
-      .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
-    postings
-      .withColumn("term_bucket", TextFunctions.hashBucket(col("term"), nBuckets))
-      .withColumn("gen", lit(newGen))
-      .write.mode("append").partitionBy("gen", "term_bucket")
-      .parquet(s"$path/postings")
-    // vocab-sized driver merge of the committed terms table with the new
-    // per-term doc counts — never a full postings rescan
-    val newDf = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .as[(String, Long)].collect().toMap
-    val oldDf = spark.read.parquet(s"$path/terms_g$metaGen")
-      .select(col("term"), col("df").cast("long"))
-      .as[(String, Long)].collect().toMap
-    val merged = (oldDf.keySet ++ newDf.keySet).toSeq.map(t =>
-      (t, oldDf.getOrElse(t, 0L) + newDf.getOrElse(t, 0L)))
-    merged.toDF("term", "df")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/terms_g$newGen")
-    val (newN, newSdl) = staged
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-      .as[(Long, Long)].collect().head
-    GenCommit.assertHeld(spark, path, tok) // commit fence (TTL takeover aborts here)
-    // the commit: once meta_gN lands with _SUCCESS the new generation is
-    // visible atomically (readers pick the highest committed meta)
-    Seq((nDocs + newN, sumDl + newSdl, nBuckets, gens :+ newGen))
-      .toDF("n_docs", "sum_dl", "n_buckets", "gens")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta_g$newGen")
+    val op = "appendToTextIndex"
+    GenCommit.append(tokenized(newDocs, idCol, textCol), path,
+        Seq("doclens", "postings"), op) { (staged, meta, gen) =>
+      GenCommit.requireDisjointIds(staged,
+        GenCommit.readGens(spark, path, "doclens", meta.gens), "doc_id", op, path)
+      val nBuckets = meta.row.getAs[Int]("n_buckets")
+      val (n, sdl) = writeTextGen(staged, path, gen, nBuckets,
+        Some(spark.read.parquet(s"$path/terms_g${meta.gen}")))
+      Seq((meta.row.getAs[Long]("n_docs") + n, meta.row.getAs[Long]("sum_dl") + sdl,
+          nBuckets)).toDF("n_docs", "sum_dl", "n_buckets")
     }
   }
 
@@ -307,33 +235,22 @@ object Retrieval {
     * of directories removed. */
   def vacuumTextIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): Int =
-    // the meta read happens INSIDE the held lease (the vacuum thunk): read
-    // before acquisition, an append committing in between would get its
-    // fresh generation — absent from the stale gens list — reclaimed
-    GenCommit.vacuum(spark, path, Seq("doclens", "postings"), Seq("terms_g")) {
-      val (metaGen, _, _, _, gens) = committedMeta(spark, path)
-        .getOrElse(throw new IllegalArgumentException(
-          s"vacuumTextIndex: no committed index meta at $path — saveTextIndex first"))
-      (gens, metaGen)
-    }
+    GenCommit.vacuum(spark, path, Seq("doclens", "postings"), Seq("terms_g"),
+      "vacuumTextIndex")
 
   /** Load a [[saveTextIndex]] index: the highest COMMITTED meta collects
     * driver-side; terms, postings and doclens stay lazy, filtered to the
-    * committed generations (uncommitted files from a crashed append are
-    * invisible — `gen` is a partition column, so the filter prunes at file
-    * level and never reads the orphans). */
+    * committed generations ([[GenCommit.readGens]]: uncommitted files from a
+    * crashed append are pruned at file level and never read). */
   def loadTextIndex(spark: org.apache.spark.sql.SparkSession,
                     path: String): TextIndex = {
-    val (metaGen, nDocs, sumDl, nBuckets, gens) = committedMeta(spark, path)
-      .getOrElse(throw new IllegalArgumentException(
-        s"loadTextIndex: no committed index meta at $path — saveTextIndex first"))
+    val meta = GenCommit.requireMeta(spark, path, "loadTextIndex")
+    val nDocs = meta.row.getAs[Long]("n_docs")
     require(nDocs > 0, s"loadTextIndex: empty corpus index at $path")
-    TextIndex(nDocs, sumDl, nBuckets,
-      spark.read.parquet(s"$path/terms_g$metaGen"),
-      spark.read.parquet(s"$path/postings")
-        .filter(col("gen").isin(gens: _*)).drop("gen"),
-      spark.read.parquet(s"$path/doclens")
-        .filter(col("gen").isin(gens: _*)).drop("gen"))
+    TextIndex(nDocs, meta.row.getAs[Long]("sum_dl"), meta.row.getAs[Int]("n_buckets"),
+      spark.read.parquet(s"$path/terms_g${meta.gen}"),
+      GenCommit.readGens(spark, path, "postings", meta.gens),
+      GenCommit.readGens(spark, path, "doclens", meta.gens))
   }
 
   /** Per-document BM25 scores from a PERSISTED index — [[bm25Scores]]

@@ -121,38 +121,42 @@ object ScalarQuantization {
                            codes: DataFrame)
 
   /** Persist an SQ8 index — the [[ProductQuantization.savePqIndex]] contract
-    * for the scalar rung: packed codes plus the per-dimension bounds and a
-    * one-row meta as small parquet tables. Doubles round-trip parquet
-    * bit-exactly, so a reloaded index searches identically (spec-pinned);
-    * and because the reloaded code frame IS a parquet scan, [[sqTopK]]'s
-    * materialize-before-search contract holds by construction — no caller-
-    * side checkpoint (the q135 lesson institutionalized). */
+    * for the scalar rung, through the same [[GenCommit]] store: codes under
+    * `codes/gen=0`, the per-dimension bounds as a static table (PQ's
+    * `coarse`) and `meta_g0` (dims, gens) as the single commit point, so a
+    * failed save can never leave new codes under old bounds. Doubles
+    * round-trip parquet bit-exactly, so a reloaded index searches
+    * identically (spec-pinned); and because the reloaded code frame IS a
+    * parquet scan, [[sqTopK]]'s materialize-before-search contract holds by
+    * construction — no caller-side checkpoint (the q135 lesson
+    * institutionalized). */
   def saveSqIndex(encoded: DataFrame, idCol: String, packedCol: String,
                   mins: Seq[Double], maxs: Seq[Double], path: String): Unit = {
     val spark = encoded.sparkSession
     import spark.implicits._
     require(mins.length == maxs.length && mins.nonEmpty, "bad bounds")
-    encoded.select(col(idCol).as("vec_id"), col(packedCol).as("packed"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    mins.indices.map(d => (d, mins(d), maxs(d))).toDF("d", "mn", "mx")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/bounds")
-    Seq(Tuple1(mins.length)).toDF("dims")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    GenCommit.save(encoded.select(col(idCol).as("vec_id"), col(packedCol).as("packed")),
+        path) { staged =>
+      GenCommit.writeGen(staged, path, "codes", 0)
+      GenCommit.writeTable(mins.indices.map(d => (d, mins(d), maxs(d)))
+        .toDF("d", "mn", "mx"), s"$path/bounds")
+      Seq(Tuple1(mins.length)).toDF("dims")
+    }
   }
 
   /** Load a [[saveSqIndex]] index. Bounds collect driver-side (dims rows);
-    * the code frame stays a lazy parquet scan. Loud on a bounds table whose
-    * dimensions disagree with meta. */
+    * the code frame stays a lazy parquet scan of the committed generation.
+    * Loud on a bounds table whose dimensions disagree with meta. */
   def loadSqIndex(spark: org.apache.spark.sql.SparkSession, path: String): SqIndex = {
     import spark.implicits._
-    val dims = spark.read.parquet(s"$path/meta").select(col("dims"))
-      .as[Int].collect().head
+    val meta = GenCommit.requireMeta(spark, path, "loadSqIndex")
+    val dims = meta.row.getAs[Int]("dims")
     val bounds = spark.read.parquet(s"$path/bounds")
       .select(col("d"), col("mn"), col("mx"))
       .as[(Int, Double, Double)].collect().sortBy(_._1)
     require(bounds.length == dims && bounds.map(_._1).toSeq == (0 until dims),
       s"bounds table (${bounds.length} rows) disagrees with meta dims=$dims")
     SqIndex(bounds.map(_._2).toSeq, bounds.map(_._3).toSeq, dims,
-      spark.read.parquet(s"$path/codes"))
+      GenCommit.readGens(spark, path, "codes", meta.gens))
   }
 }

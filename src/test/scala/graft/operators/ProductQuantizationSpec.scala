@@ -554,6 +554,31 @@ class ProductQuantizationSpec extends SparkSpec {
     }
   }
 
+  test("a PQ re-save whose input fails at run time leaves the committed index intact") {
+    val dims = 8; val m = 4; val ksub = 3; val kCent = 3
+    val df = syntheticCorpus(40, dims).cache()
+    val coarse = SimilaritySearch.kmeansCentroids(df, "v", "id", kCent, iters = 2)
+    val assigned = SimilaritySearch.assignCells(df, "v", coarse, "cell")
+    val cb = pq.trainCodebooksResidual(assigned, "v", "id", "cell", coarse, m, ksub, 2)
+    val enc = pq.encodeResidual(assigned, "v", "cell", coarse, cb)
+      .select($"id", pq.packCodes($"pq_codes", m, ksub).as("packed"), $"cell")
+    val path = tempDir().resolve("pqresave").toString
+    pq.savePqIndex(enc, "id", "packed", "cell", coarse, cb, residual = true, path)
+    val q = df.filter($"id" === 7L).select($"v").as[Seq[Double]].collect().head
+    def search() = pq.ivfPqResidualTopK(pq.loadPqIndex(spark, path).codes,
+        "packed", "vec_id", "cell", coarse, cb, q, nprobe = kCent, k = 5)
+      .as[(Long, Double)].collect().toSeq
+    val before = search()
+    // the one bad row raises in a task, when its code is computed
+    val failing = enc.withColumn("packed",
+      when($"id" === 7L, raise_error(lit("corrupt code"))).otherwise($"packed"))
+    intercept[Exception](
+      pq.savePqIndex(failing, "id", "packed", "cell", coarse, cb, residual = true, path))
+    val idx = pq.loadPqIndex(spark, path)
+    assert(idx.m === m && idx.ksub === ksub && idx.codes.count() === 40L)
+    assert(search() === before, "the old index must still search as before")
+  }
+
   test("appendToPqIndex: incremental batches land cell-partitioned, search sees old+new; append-to-nowhere is loud") {
     val dims = 8; val m = 4; val ksub = 3; val kCent = 3
     val df = syntheticCorpus(60, dims).cache()

@@ -314,6 +314,25 @@ class RetrievalSpec extends SparkSpec {
     assert(Retrieval.loadTextIndex(spark, path).nDocs === 4L)
   }
 
+  test("a re-save whose input fails at run time leaves the committed index intact") {
+    import org.apache.spark.sql.functions.{lit, raise_error, when}
+    val path = tempDir().resolve("textindex_resave").toString
+    Retrieval.saveTextIndex(corpus, "doc_id", "text", path, nBuckets = 8)
+    val terms = Seq("spark", "rare", "query")
+    def scores() = Retrieval.bm25ScoresFromIndex(Retrieval.loadTextIndex(spark, path), terms)
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val before = scores()
+    // the one bad row raises in a task (checkpointed rows: the optimizer
+    // cannot fold the expression over a local relation at plan time)
+    val failing = corpus.localCheckpoint().withColumn("text",
+      when($"doc_id" === 3L, raise_error(lit("corrupt doc"))).otherwise($"text"))
+    intercept[Exception](
+      Retrieval.saveTextIndex(failing, "doc_id", "text", path, nBuckets = 8))
+    val idx = Retrieval.loadTextIndex(spark, path)
+    assert(idx.nDocs === 4L && idx.sumDl === 16L && idx.doclens.count() === 4L)
+    assert(scores() === before, "the old index must still search as before")
+  }
+
   test("text-index vacuum and a second appender refuse while the writer lease is held") {
     val path = tempDir().resolve("textindex_lease").toString
     Retrieval.saveTextIndex(corpus, "doc_id", "text", path, nBuckets = 8)

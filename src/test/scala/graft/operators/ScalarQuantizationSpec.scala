@@ -112,4 +112,33 @@ class ScalarQuantizationSpec extends SparkSpec {
       fs.resolve("bounds2").toFile, fs.resolve("bounds").toFile)
     intercept[IllegalArgumentException](sq.loadSqIndex(spark, bad))
   }
+
+  test("an SQ8 re-save whose input fails at run time leaves the committed index intact") {
+    val rows = (0L until 40L).map(i =>
+      (i, (0 until 16).map(d => math.cos(i * 0.53 + d * 0.71) * 2.0 + d)))
+    val df = rows.toDF("id", "v")
+    val (mins, maxs) = sq.sqTrain(df, "v")
+    val enc = df.select($"id",
+      sq.sqPack(sq.sqEncode($"v", mins, maxs), 16).as("pk"))
+    val path = tempDir().resolve("sqresave").toString
+    sq.saveSqIndex(enc, "id", "pk", mins, maxs, path)
+    val q = rows(5)._2
+    def search() = {
+      val idx = sq.loadSqIndex(spark, path)
+      sq.sqTopK(idx.codes, "packed", "vec_id", q, idx.mins, idx.maxs, 10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }
+    val before = search()
+    // different bounds, and one row that raises in a task (checkpointed rows:
+    // the optimizer cannot fold the expression over a local relation at plan
+    // time) — neither the new codes nor the new bounds may replace the old
+    val shifted = maxs.map(_ + 1.0)
+    val failing = df.localCheckpoint().select($"id",
+      when($"id" === 9L, raise_error(lit("corrupt vector")))
+        .otherwise(sq.sqPack(sq.sqEncode($"v", mins, shifted), 16)).as("pk"))
+    intercept[Exception](sq.saveSqIndex(failing, "id", "pk", mins, shifted, path))
+    val idx = sq.loadSqIndex(spark, path)
+    assert(idx.maxs == maxs && idx.codes.count() == 40L)
+    assert(search() == before, "the old index must still search as before")
+  }
 }
