@@ -1,76 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+/** The timed suite runner: the registered queries (or the
+  * `SPARK_GRAFT_QUERIES` allowlist) in name order, one JSON record per run.
+  * The data-bound scaling legs run it too (`bench/run_scale_series.sh`).
+  *
+  * Env: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_EXACT`,
+  * `SPARK_GRAFT_RERUN_BUDGET`, `SPARK_GRAFT_QUERIES`, `SPARK_GRAFT_BENCH_OUT`. */
 object Bench {
-
-  /** Controlled per-query medians (bench/results/r8_sf0.1_run{1,2,3}.json,
-    * idle host: contended_run/bursty_contention false on all three runs) used
-    * to order the run heaviest-first: the expensive queries execute while the
-    * JVM is freshest, and a contended machine shows up as uniform inflation
-    * rather than tail-query noise. Unknown (new) queries default to mid-pack.
-    * Refreshed each time a clean controlled series is recorded (previous
-    * generations: r2-r6 series). */
-  private val expectedCost: Map[String, Double] = Map(
-    "q76_incremental_dedup" -> 5.22,
-    "q86_curated_decontaminated" -> 3.65,
-    "q62_combined_session" -> 2.66, "q67_profile_orders" -> 2.62,
-    "q69_curation" -> 2.58, "q45_dedup_jaccard" -> 2.51,
-    "q65_sim_ivf_fullprobe" -> 2.20, "q47_dedup_simhash" -> 2.09,
-    "q110_cms_counts" -> 2.07, "q87_passage_dedup" -> 1.83,
-    "q107_soft_dedup" -> 1.80, "q68_dedup_clusters" -> 1.79,
-    "q84_dedup_containment" -> 1.74, "q113_bpe_train" -> 1.72,
-    "q46_dedup_minhash" -> 1.71, "q14_conflict_pivot" -> 1.62,
-    "q77_tfidf_topterms" -> 1.57, "q55_heavy_bigrams" -> 1.55,
-    "q03_starqc_gate" -> 1.42, "q56_conflict_only" -> 1.25,
-    "q109_eval_contamination" -> 1.18, "q79_decontamination" -> 1.12,
-    "q66_session_windows" -> 1.12, "q104_span_corruption" -> 0.98,
-    "q95_semantic_dedup" -> 0.94, "q38_session_viewport" -> 0.93,
-    "q92_line_dedup" -> 0.91, "q15_group_runs" -> 0.89,
-    "q73_text_repetition" -> 0.87, "q34_report_roundtrip" -> 0.81,
-    "q20_matrix_pivot" -> 0.77, "q50_embedding_neardup" -> 0.76,
-    "q105_corpus_report" -> 0.75, "q117_sql_surface" -> 0.75,
-    "q35_matrix_roundtrip" -> 0.74, "q37_track_json_roundtrip" -> 0.71,
-    "q53_interval_overlap" -> 0.71, "q83_unigram_freq" -> 0.69,
-    "q116_windowed_topk" -> 0.66, "q10_pass_semijoin" -> 0.65,
-    "q63_qc_summary" -> 0.62, "q88_langid_multi" -> 0.62,
-    "q07_zero_string_filter" -> 0.59, "q91_linear_classifier" -> 0.59,
-    "q102_knn_join" -> 0.59, "q94_bm25_topk" -> 0.58,
-    "q13_lookup_default" -> 0.58, "q97_bloom_semijoin" -> 0.57,
-    "q80_pii_redact" -> 0.55, "q41_text_quality" -> 0.55,
-    "q22_coverage_bins" -> 0.54, "q100_bpe_pairs" -> 0.54,
-    "q23_dedup_first" -> 0.54, "q16_duplicate_samples" -> 0.52,
-    "q114_salted_join" -> 0.52, "q81_domain_blocklist" -> 0.51,
-    "q90_inverted_index" -> 0.51, "q106_quality_topm" -> 0.50,
-    "q32_consistency" -> 0.49, "q52_embedding_neardup_lsh" -> 0.49,
-    "q101_rejection_sample" -> 0.48, "q33_event_windows" -> 0.48,
-    "q30_color_assign" -> 0.47, "q112_group_topk_plan" -> 0.46,
-    "q96_exact_quantiles" -> 0.46, "q93_line_dedup_intradoc" -> 0.44,
-    "q54_asof_join" -> 0.44, "q25_position_sort" -> 0.43,
-    "q89_kmv_distinct" -> 0.41, "q74_length_trim" -> 0.41,
-    "q31_project_classify" -> 0.40, "q12_bed_tpm_broadcast" -> 0.40,
-    "q72_sequence_packing" -> 0.40, "q82_chunk_overlap" -> 0.40,
-    "q70_video_frames" -> 0.39, "q18_runs_histogram" -> 0.38,
-    "q58_bed_roundtrip" -> 0.37, "q11_matrix_merge" -> 0.36,
-    "q39_stage_protocol" -> 0.36, "q85_sqrt_cap_sample" -> 0.35,
-    "q98_url_dedup" -> 0.34, "q42_text_langid" -> 0.33,
-    "q103_jsonl_roundtrip" -> 0.32, "q04_sex_ratio_gate" -> 0.32,
-    "q64_text_bpe_tokens" -> 0.31, "q115_capped_buckets" -> 0.30,
-    "q48_sim_bruteforce" -> 0.30, "q21_frag_stats" -> 0.29,
-    "q51_multimodal_bytes" -> 0.27, "q44_dedup_exact" -> 0.27,
-    "q26_union_reports" -> 0.27, "q78_stratified_fraction" -> 0.26,
-    "q19_status_tallies" -> 0.26, "q60_image_decode" -> 0.24,
-    "q99_epoch_shuffle" -> 0.24, "q17_count_distinct" -> 0.23,
-    "q75_stratified_sample" -> 0.23, "q49_sim_partitioned" -> 0.23,
-    "q36_rsem_scan" -> 0.22, "q61_audio_decode" -> 0.22,
-    "q71_hash_split" -> 0.22, "q108_weighted_upsample" -> 0.21,
-    "q29_combo_key" -> 0.21, "q28_string_suite" -> 0.20,
-    "q40_text_tokens" -> 0.20, "q59_input_validation" -> 0.19,
-    "q24_distinct" -> 0.19, "q43_text_fingerprint" -> 0.18,
-    "q111_exact_k_sample" -> 0.18, "q05_agreement" -> 0.18,
-    "q57_orchestrator_outcomes" -> 0.16, "q27_topk" -> 0.16,
-    "q01_scan_project" -> 0.14, "q08_marker_isin" -> 0.13,
-    "q06_regex_filter" -> 0.13, "q09_rgb_bucket" -> 0.12,
-    "q02_unique_name" -> 0.12)
 
   /** Recorded idle-machine reference constants for the two fixed-work probes,
     * pinned from the clean controlled series (bench/results/r6_sf0.1_run{1,2,3}:
@@ -141,29 +78,26 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val exact = sys.env.getOrElse("SPARK_GRAFT_EXACT", "true")
     // Total extra seconds the contention policy may spend on re-runs — bounds
     // worst-case wall clock on a hopelessly contended machine.
     val rerunBudget = sys.env.getOrElse("SPARK_GRAFT_RERUN_BUDGET", "240").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Optional comma-separated allowlist for targeted runs (the driver never
+    // sets it, so driver artifacts always cover the full suite).
+    val selected = Suite.select(sys.env.get("SPARK_GRAFT_QUERIES").map(Suite.names))
+    val spark = Suite.session(32)
     spark.conf.set("graft.verifyExact", exact)
     // JVM/codegen warmup: exercise the scan->shuffle->agg machinery once so the
     // first timed query doesn't absorb classloading + first-codegen cost.
     spark.range(1 << 20).selectExpr("count(distinct id % 97)").collect()
-    // Heaviest-first ordering means the FIRST timed query would otherwise absorb
-    // the parquet-datasource init, Janino first-compile, and the cold documents
-    // scan (measured ~2.5 s extra on q45): run two cheap real queries once,
-    // untimed — q09 warms the TPC-H scan path, q43 the documents/tokenizer path.
-    Seq("q09_rgb_bucket", "q43_text_fingerprint").foreach { warm =>
+    // The first timed query would otherwise absorb the parquet-datasource
+    // init, Janino first-compile and the cold documents scan (measured ~2.5 s
+    // extra on q45): run three cheap real queries once, untimed — q09 warms the
+    // TPC-H scan path, q43 the documents/tokenizer path, q48 the embeddings
+    // path. A warm-up whose table is missing in this corpus is skipped.
+    Seq("q09_rgb_bucket", "q43_text_fingerprint", "q48_sim_bruteforce").foreach { warm =>
       SparkEntry.queries.get(warm).foreach { fn =>
-        try fn(spark, sfDir).queryExecution.toRdd.count() catch { case _: Throwable => () }
+        try Suite.countedRun(fn(spark, sfDir)) catch { case _: Throwable => () }
       }
     }
     val calibPre = calibrate(spark)
@@ -199,18 +133,10 @@ object Bench {
     // six analysis-broken queries "ran" in 0.07 s inside a green-looking
     // artifact). runOnce surfaces the error; the caller records it in a
     // `failures` field and excludes the query from `queries` and `total`.
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
+    def runOnce(name: String, fn: Suite.Query): (Double, Option[String]) = {
       val t0 = System.nanoTime()
-      // Count the EXECUTED plan's rows, not df.count(): a count() on top lets
-      // the optimizer prune every computed column, so pure-projection queries
-      // (fingerprints, scores) would be timed as bare scans. The root-level
-      // orderBy (determinism-only, the comparator re-sorts) is stripped —
-      // top-k sorts sit under Limit and are kept.
-      val err = try {
-        org.apache.spark.sql.graftbridge.ColumnBridge
-          .dropRootSort(fn(spark, sfDir)).queryExecution.toRdd.count()
-        None
-      } catch { case e: Throwable =>
+      val err = try { Suite.countedRun(fn(spark, sfDir)); None }
+      catch { case e: Throwable =>
         Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).linesIterator.take(1).mkString.take(200)}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
@@ -218,13 +144,6 @@ object Bench {
       (dt, err)
     }
 
-    // Optional comma-separated allowlist for targeted experiment runs (the
-    // driver never sets it, so driver artifacts always cover the full suite).
-    val onlyQueries = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => onlyQueries.forall(_.contains(name)) }
-      .sortBy { case (name, _) => (-expectedCost.getOrElse(name, 0.45), name) }
     var rerunSpent = 0.0
     val flagged = Seq.newBuilder[(String, Double)]
     val failures = scala.collection.mutable.TreeMap.empty[String, String]
@@ -241,7 +160,7 @@ object Bench {
     val clock = new graft.tools.TaskClock(spark)
     val cpuRatios = scala.collection.mutable.TreeMap.empty[String, Double]
     val clockStart = clock.snapshot()
-    val results = ordered.flatMap { case (name, fn) =>
+    val results = selected.flatMap { case (name, fn) =>
       val clockBefore = clock.snapshot()
       val (t1, e1) = runOnce(name, fn)
       cpuRatios(name) = clock.ratioSince(clockBefore)
@@ -272,16 +191,11 @@ object Bench {
       }
     }
     val calibPost = calibrate(spark)
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"; case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qs = results.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val flaggedJson = flagged.result().sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    val failuresJson = failures.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val failuresJson = failures.map { case (k, v) => s"${Suite.jsonString(k)}:${Suite.jsonString(v)}" }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Whole-run contention verdict against the PINNED idle constants (not the
     // self-measured baseline): >2× on either fixed-work probe means the machine
@@ -316,9 +230,9 @@ object Bench {
     else if (contendedRun)
       System.err.println(f"[bench] WARNING: contended run — probes ran $inflationEstimate%.1fx the recorded idle constants; per-query times are inflated")
     val cpuRatioTotal = clock.ratioSince(clockStart)
-    val cpuRatiosJson = cpuRatios.map { case (k, v) => s"${jstr(k)}:" + f"$v%.2f" }
+    val cpuRatiosJson = cpuRatios.map { case (k, v) => s"${Suite.jsonString(k)}:" + f"$v%.2f" }
       .mkString("{", ",", "}")
-    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calibration_pre_sec":$calibPre,"calibration_post_sec":$calibPost,"probe_base_sec":$probeBase,"idle_calibration_ref_sec":$idleCalibrationRefSec,"idle_probe_ref_sec":$idleProbeRefSec,"contended_run":$contendedRun,"bursty_contention":$burstyContention,"cpu_ratio_sentinel_median":${if (sentinelRatios.isEmpty) "null" else f"$sentinelMedian%.2f"},"n_sentinels":${sentinelRatios.size},"inflation_estimate":${f"$inflationEstimate%.2f"},"run_cpu_ratio_total":${f"$cpuRatioTotal%.2f"},"run_cpu_ratio":$cpuRatiosJson,"contended_queries":$flaggedJson,"rerun_spent_sec":$rerunSpent,"rerun_failures":${rerunFailures.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")},"exact_sums":$exact,"failures":$failuresJson,"n_queries":${results.size},"n_failures":${failures.size}}"""
+    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calibration_pre_sec":$calibPre,"calibration_post_sec":$calibPost,"probe_base_sec":$probeBase,"idle_calibration_ref_sec":$idleCalibrationRefSec,"idle_probe_ref_sec":$idleProbeRefSec,"contended_run":$contendedRun,"bursty_contention":$burstyContention,"cpu_ratio_sentinel_median":${if (sentinelRatios.isEmpty) "null" else f"$sentinelMedian%.2f"},"n_sentinels":${sentinelRatios.size},"inflation_estimate":${f"$inflationEstimate%.2f"},"run_cpu_ratio_total":${f"$cpuRatioTotal%.2f"},"run_cpu_ratio":$cpuRatiosJson,"contended_queries":$flaggedJson,"rerun_spent_sec":$rerunSpent,"rerun_failures":${rerunFailures.map { case (k, v) => s"${Suite.jsonString(k)}:${Suite.jsonString(v)}" }.mkString("{", ",", "}")},"exact_sums":$exact,"failures":$failuresJson,"n_queries":${results.size},"n_failures":${failures.size}}"""
     println(record)
     // First-class artifact file: BENCH_r{4,5} both carried "parsed": null
     // because the one JSON line had to be tail-scraped out of sbt stdout.

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: dump `explain("formatted")` for selected queries so scan
   * pruning (`ReadSchema`/`PushedFilters`), join strategies (BroadcastHashJoin vs
   * SortMergeJoin), partial aggregation, and WholeStageCodegen spans can be
-  * reviewed. Usage: `sbt "runMain graft.Explain [sfDir] [queryName...]"`. */
+  * reviewed. Usage: `sbt "runMain graft.Explain [sfDir] [queryName...]"`; plans
+  * print in name order (`SPARK_GRAFT_CPUS` overrides local[4]). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -22,13 +21,11 @@ object Explain {
         "q83_unigram_freq", "q87_passage_dedup", "q92_line_dedup",
         "q94_bm25_topk", "q95_semantic_dedup", "q96_exact_quantiles",
         "q97_bloom_semijoin", "q98_url_dedup", "q100_bpe_pairs")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
+    val selected = Suite.select(Some(names))
+    val spark = Suite.session(4)
+    selected.foreach { case (n, fn) =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

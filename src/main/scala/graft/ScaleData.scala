@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic N× scale-up of the `documents` / `embeddings` tables, for the
-  * data-bound scaling bench ([[ScalingBench]]).
+  * data-bound scaling legs that [[Bench]] runs (`bench/run_scale_series.sh`).
   *
   * The replication is structure-preserving, which is what makes the scaling
   * series honest:

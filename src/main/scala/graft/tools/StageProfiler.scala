@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -9,7 +9,8 @@ import scala.collection.mutable.ArrayBuffer
   * the scaling series: when a query's wall-clock grows faster than the data,
   * this prints WHICH stage (with its callsite) carries the growth, its task
   * time, and its shuffle volume, so the fix targets the real bottleneck
-  * instead of a guess.
+  * instead of a guess. Each query runs as [[graft.Bench]] times it
+  * ([[graft.Suite.countedRun]]: root sort stripped).
   *
   * Usage: `runMain graft.tools.StageProfiler <sfDir> <q1,q2,...>`
   * (set `SPARK_GRAFT_CPUS` to override local[32]).
@@ -25,22 +26,8 @@ object StageProfiler {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: StageProfiler <sfDir> <q1,q2,...>")
     val Array(sfDir, qcsv) = args
-    val names = qcsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Same ';'-separated extra-conf knob as ScalingBench, so regime flags
-    // (e.g. graft.verifyPruneMinDocs) can be profiled A/B.
-    val extraConfs = sys.env.get("SPARK_GRAFT_EXTRA_CONFS").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    extraConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = graft.Suite.select(Some(graft.Suite.names(qcsv)))
+    val spark = graft.Suite.session(32)
 
     val stages = ArrayBuffer.empty[StageRow]
     val listener = new SparkListener {
@@ -59,14 +46,12 @@ object StageProfiler {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    names.foreach { name =>
+    selected.foreach { case (name, fn) =>
       stages.synchronized(stages.clear())
-      val fn = graft.SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).queryExecution.toRdd.count()
+      val n = graft.Suite.countedRun(fn(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus is async; give it a moment to drain before reading
-      Thread.sleep(2000)
+      ColumnBridge.drainListenerBus(spark)
       val rows = stages.synchronized(stages.sortBy(-_.runMs).toVector)
       println(f"== $name  wall=$wall%.2fs  rows=$n  stages=${rows.size}")
       rows.take(12).foreach { r =>

@@ -33,16 +33,14 @@ class CodegenOnlySweepSpec extends SparkSpec {
     conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     conf.set("spark.sql.codegen.fallback", "false")
     try {
-      val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      val failures = Suite.select(None).flatMap {
         case (name, fn) =>
           try {
-            // Execute the plan AS REGISTERED, not count(): a count() on top
-            // lets ColumnPruning delete every projection-only computed column
+            // The counted run Bench times, not count(): a count() on top lets
+            // ColumnPruning delete every projection-only computed column
             // before codegen, so the sweep would never compile exactly the
-            // pure-projection expressions it exists to guard (same reason
-            // Bench times toRdd.count() — see Bench.runOnce).
-            org.apache.spark.sql.graftbridge.ColumnBridge
-              .dropRootSort(fn(spark, sfDir)).queryExecution.toRdd.count()
+            // pure-projection expressions it exists to guard.
+            Suite.countedRun(fn(spark, sfDir))
             None
           } catch {
             case NonFatal(e) =>

@@ -7,6 +7,11 @@ Usage: python3 tools/check_correctness.py <verify_out_dir> <sf_dir>
 Reads each <verify_out_dir>/<query>/ parquet (written by graft.Verify), runs the
 matching SQL from oracle_sql.json in DuckDB against <sf_dir>/*.parquet views,
 sorts columns by name + rows by all columns, and compares cell values exactly.
+
+DuckDB runs in memory with its default memory_limit and threads (printed on
+the summary line, so a pass set names the machine it came from). It spills to
+<verify_out_dir>/.duckdb_tmp, not the caller's cwd, and does not keep
+insertion order (less memory; every result is sorted here anyway).
 """
 import json, sys, glob, os
 import duckdb
@@ -27,7 +32,12 @@ def cells_equal(a, b):
 
 def main():
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    con = duckdb.connect(config={
+        "temp_directory": os.path.join(out_dir, ".duckdb_tmp"),
+        "preserve_insertion_order": False,
+    })
+    memory_limit, threads = con.execute(
+        "SELECT current_setting('memory_limit'), current_setting('threads')").fetchone()
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
@@ -61,7 +71,8 @@ def main():
             n_fail += 1
         else:
             print(f"PASS {q} ({len(got)} rows)"); n_pass += 1
-    print(f"\n{n_pass} pass / {n_fail} fail")
+    print(f"\n{n_pass} pass / {n_fail} fail "
+          f"(duckdb memory_limit={memory_limit}, threads={threads})")
     sys.exit(1 if n_fail else 0)
 
 if __name__ == "__main__":

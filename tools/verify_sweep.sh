@@ -7,7 +7,7 @@
 # main-source commit; this script makes that class impossible.
 # Usage: tools/verify_sweep.sh <label>     (e.g. r8)
 set -eu
-cd /root/repo
+cd "$(dirname "$0")/.."
 LABEL="${1:?usage: tools/verify_sweep.sh <label>}"
 DESC=$(git describe --always --dirty)
 case "$DESC" in
@@ -15,20 +15,21 @@ case "$DESC" in
 esac
 OUT="bench/results/${LABEL}_verify_local.json"
 TMP=$(mktemp -d /tmp/verify_sweep.XXXX)
-SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $TMP" \
+CPUS=$(nproc)
+SPARK_GRAFT_CPUS=$CPUS sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $TMP" \
   > "$TMP/verify.log" 2>&1
 python3 tools/check_correctness.py "$TMP" /root/testdata/sf0.01 > "$TMP/check.log" 2>&1 || true
 SUMMARY=$(tail -1 "$TMP/check.log")
 N_PASS=$(grep -c '^PASS ' "$TMP/check.log" || true)
 N_FAIL=$(grep -c '^FAIL ' "$TMP/check.log" || true)
-python3 - "$OUT" "$DESC" "$SUMMARY" "$N_PASS" "$N_FAIL" <<'EOF'
+python3 - "$OUT" "$DESC" "$SUMMARY" "$N_PASS" "$N_FAIL" "$CPUS" <<'EOF'
 import json, sys, datetime
-out, desc, summary, n_pass, n_fail = sys.argv[1:6]
+out, desc, summary, n_pass, n_fail, cpus = sys.argv[1:7]
 json.dump({
   "what": "Local full-sweep verification at HEAD: graft.Verify at sf0.01 -> tools/check_correctness.py (DuckDB oracle, cols sorted by name, exact cell compare)",
   "ran_at_utc": datetime.datetime.now(datetime.timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ"),
   "git_head": desc,
-  "spark": "4.1.2 local[16]",
+  "spark": f"4.1.2 local[{cpus}]",
   "n_pass": int(n_pass), "n_fail": int(n_fail),
   "summary": summary,
 }, open(out, "w"), indent=1)
