@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
   * `SPARK_GRAFT_QUERIES` allowlist) in name order, one JSON record per run.
   * The data-bound scaling legs run it too (`bench/run_scale_series.sh`).
   *
-  * Env: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_EXACT`,
-  * `SPARK_GRAFT_RERUN_BUDGET`, `SPARK_GRAFT_QUERIES`, `SPARK_GRAFT_BENCH_OUT`. */
+  * Env: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_RERUN_BUDGET`,
+  * `SPARK_GRAFT_QUERIES`, `SPARK_GRAFT_BENCH_OUT`. */
 object Bench {
 
   /** Recorded idle-machine reference constants for the two fixed-work probes,
@@ -78,7 +78,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val exact = sys.env.getOrElse("SPARK_GRAFT_EXACT", "true")
     // Total extra seconds the contention policy may spend on re-runs — bounds
     // worst-case wall clock on a hopelessly contended machine.
     val rerunBudget = sys.env.getOrElse("SPARK_GRAFT_RERUN_BUDGET", "240").toDouble
@@ -86,7 +85,6 @@ object Bench {
     // sets it, so driver artifacts always cover the full suite).
     val selected = Suite.select(sys.env.get("SPARK_GRAFT_QUERIES").map(Suite.names))
     val spark = Suite.session(32)
-    spark.conf.set("graft.verifyExact", exact)
     // JVM/codegen warmup: exercise the scan->shuffle->agg machinery once so the
     // first timed query doesn't absorb classloading + first-codegen cost.
     spark.range(1 << 20).selectExpr("count(distinct id % 97)").collect()
@@ -232,7 +230,7 @@ object Bench {
     val cpuRatioTotal = clock.ratioSince(clockStart)
     val cpuRatiosJson = cpuRatios.map { case (k, v) => s"${Suite.jsonString(k)}:" + f"$v%.2f" }
       .mkString("{", ",", "}")
-    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calibration_pre_sec":$calibPre,"calibration_post_sec":$calibPost,"probe_base_sec":$probeBase,"idle_calibration_ref_sec":$idleCalibrationRefSec,"idle_probe_ref_sec":$idleProbeRefSec,"contended_run":$contendedRun,"bursty_contention":$burstyContention,"cpu_ratio_sentinel_median":${if (sentinelRatios.isEmpty) "null" else f"$sentinelMedian%.2f"},"n_sentinels":${sentinelRatios.size},"inflation_estimate":${f"$inflationEstimate%.2f"},"run_cpu_ratio_total":${f"$cpuRatioTotal%.2f"},"run_cpu_ratio":$cpuRatiosJson,"contended_queries":$flaggedJson,"rerun_spent_sec":$rerunSpent,"rerun_failures":${rerunFailures.map { case (k, v) => s"${Suite.jsonString(k)}:${Suite.jsonString(v)}" }.mkString("{", ",", "}")},"exact_sums":$exact,"failures":$failuresJson,"n_queries":${results.size},"n_failures":${failures.size}}"""
+    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","calibration_pre_sec":$calibPre,"calibration_post_sec":$calibPost,"probe_base_sec":$probeBase,"idle_calibration_ref_sec":$idleCalibrationRefSec,"idle_probe_ref_sec":$idleProbeRefSec,"contended_run":$contendedRun,"bursty_contention":$burstyContention,"cpu_ratio_sentinel_median":${if (sentinelRatios.isEmpty) "null" else f"$sentinelMedian%.2f"},"n_sentinels":${sentinelRatios.size},"inflation_estimate":${f"$inflationEstimate%.2f"},"run_cpu_ratio_total":${f"$cpuRatioTotal%.2f"},"run_cpu_ratio":$cpuRatiosJson,"contended_queries":$flaggedJson,"rerun_spent_sec":$rerunSpent,"rerun_failures":${rerunFailures.map { case (k, v) => s"${Suite.jsonString(k)}:${Suite.jsonString(v)}" }.mkString("{", ",", "}")},"exact_sums":true,"failures":$failuresJson,"n_queries":${results.size},"n_failures":${failures.size}}"""
     println(record)
     // First-class artifact file: BENCH_r{4,5} both carried "parsed": null
     // because the one JSON line had to be tail-scraped out of sbt stdout.

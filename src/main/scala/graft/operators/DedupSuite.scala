@@ -29,24 +29,14 @@ object DedupSuite {
 
   // ── MinHash + LSH ──────────────────────────────────────────────────────────
 
-  /** Seeded shingle hash used by the MinHash signature. `md5` keeps the oracle
-    * SQL-expressible; swap for an xxhash64-based fn in production for speed. */
-  def md5SeededHash(shingle: Column, seed: Int): Column =
-    md5(concat(lit(s"$seed:"), shingle))
-
-  /** Seeded 32-bit shingle hash family from ONE md5 (Broder's 2-universal
-    * construction): h_i = (a + i·b) mod 2³², where a/b are the digest's first
-    * two big-endian 32-bit hex words ([[md5Word]]). One md5 per shingle instead
-    * of `numHashes` — the independence across i is the standard pairwise
-    * guarantee, which is what MinHash sketches assume. DuckDB-expressible. */
-  def md5AffineHash(shingle: Column, seed: Int): Column = {
-    val d = md5(shingle)
-    (md5Word(d, 0) + lit(seed.toLong) * md5Word(d, 1)) % lit(4294967296L)
-  }
-
   /** Per-row MinHash signature: array of `numHashes` minima over the document's
-    * shingles under the [[md5AffineHash]] family. Shingles are md5'd ONCE (inner
-    * transform); the per-seed passes reread the staged digests. No shuffle. */
+    * shingles under a seeded 32-bit hash family built from ONE md5 per shingle
+    * (Broder's 2-universal construction): h_i = (a + i·b) mod 2³², where a/b
+    * are the digest's first two big-endian 32-bit hex words ([[md5Word]]). The
+    * independence across i is the standard pairwise guarantee MinHash sketches
+    * assume, and the family is DuckDB-expressible. Shingles are md5'd ONCE
+    * (inner transform); the per-seed passes reread the staged digests. No
+    * shuffle. */
   def minHashSignature(shingles: Column, numHashes: Int): Column = {
     val digests = transform(shingles, s => md5(s))
     array((0 until numHashes).map(i => array_min(transform(digests, d =>
@@ -206,12 +196,6 @@ object DedupSuite {
       when(element_at(sums, b + 1) > 0L, "1").otherwise("0")): _*)
   }
 
-  /** Hamming distance between two equal-length '0'/'1' fingerprint strings. */
-  def hammingStr(a: Column, b: Column, bits: Int): Column =
-    (0 until bits).map(i =>
-      when(substring(a, i + 1, 1) === substring(b, i + 1, 1), 0L).otherwise(1L))
-      .reduce(_ + _)
-
   /** Lane width: each 64-bit sum buffer carries four 16-bit set-bit counters, so
     * `bits` votes need bits/4 aggregates instead of `bits` — with the token count
     * that is 17 integer-typed aggregate buffers for a 64-bit fingerprint. Lanes
@@ -250,19 +234,12 @@ object DedupSuite {
     shiftrightunsigned(col(s"lane${b / LanesPerWord}"), LaneBits * (b % LanesPerWord))
       .bitwiseAND(lit((1L << LaneBits) - 1))
 
-  /** SimHash fingerprints as '0'/'1' strings (human-readable form).
-    * Same values as the per-row [[simHash]] fold: bit set ⇔ 2·count_b > n. */
-  def simHashFingerprints(df: DataFrame, idCol: String, textCol: String,
-                          bits: Int): DataFrame =
-    simHashLaneSums(df, idCol, textCol, bits)
-      .select(col("id"), concat((0 until bits).map(b =>
-        when(laneCount(b) * 2 > col("n"), "1").otherwise("0")): _*).as("fp"))
-
   /** SimHash fingerprints packed into a long, MSB-first so bit (bits-1-b) set ⇔
-    * string form has '1' at position b — hamming distances are identical to
-    * [[hammingStr]] over the string form but cost one xor+popcount instead of
-    * 2×bits substring compares per pair. Requires bits <= 64 (bit 0 of a
-    * 64-bit fingerprint lands on the sign bit; OR-combining keeps that safe). */
+    * the per-row [[simHash]] string has '1' at position b (bit set ⇔
+    * 2·count_b > n) — the hamming distance between two fingerprints is one
+    * xor+popcount instead of 2×bits substring compares over the string form.
+    * Requires bits <= 64 (bit 0 of a 64-bit fingerprint lands on the sign bit;
+    * OR-combining keeps that safe). */
   def simHashFingerprintsPacked(df: DataFrame, idCol: String, textCol: String,
                                 bits: Int): DataFrame = {
     require(bits <= 64, s"packed fingerprint needs bits <= 64, got $bits")
@@ -400,15 +377,9 @@ object DedupSuite {
     // every path, so this only moves the regime choice.
     val minDocs = conf.getOption("graft.verifyPruneMinDocs").map(_.toLong)
       .getOrElse(pruneMinDocs)
-    // Coverage bound for the prune gate (default: engage below 1/4 coverage,
-    // the measured break-even). The second A/B knob: 0 disables the prune
-    // while KEEPING the dense-branch machinery, so "no prune under a capped
-    // disk budget" (segmented passes over the full gram index) is measurable
-    // against "prune, unsegmented" on the same sparse corpus — the knob
-    // verifyPruneMinDocs cannot express (it short-circuits to the plain
-    // unbudgeted two-join before the regime logic).
-    val covMax = conf.getOption("graft.verifyPruneCoverageMax").map(_.toDouble)
-      .getOrElse(0.25)
+    // Coverage bound for the prune gate: engage below 1/4 coverage, the
+    // measured break-even.
+    val covMax = 0.25
     def join3(c: DataFrame, ga: DataFrame, gb: DataFrame): DataFrame =
       c.join(ga.select(col("id").as("id_a"), col("harr").as("harr_a"),
           col("sz").as("size_a")), Seq("id_a"))

@@ -736,10 +736,10 @@ object Multimodal {
   /** VIDEO near-duplicate pairs — re-encoded, trimmed, and partially-edited
     * clips — without an external embedding model: per-frame aHash
     * fingerprints ([[gifFrameAHashes]]) → per-clip DISTINCT frame-hash sets
-    * → Hamming-banded candidate clip pairs (the [[DedupSuite
-    * .hammingBandedPairs]] pigeonhole applied at FRAME level: clips sharing
-    * a 16-bit segment of any frame hash — every pair with a frame within
-    * `maxHamming` is found, NO all-pairs comparison) → EXACT verify on the
+    * → Hamming-banded candidate clip pairs ([[DedupSuite
+    * .hammingBandedPairs]] applied at FRAME level: clips with some frame pair
+    * within `maxHamming`, found by the pigeonhole segment join with NO
+    * all-pairs comparison) → EXACT verify on the
     * sampled frames: per direction, the fraction of one clip's distinct
     * frame hashes whose best match in the other is within `maxHamming`;
     * a pair survives when the LARGER directional containment reaches
@@ -759,22 +759,13 @@ object Multimodal {
   def videoNearDupPairs(media: DataFrame, every: Int = 1, maxHamming: Int = 3,
                         minOverlap: Double = 0.5): DataFrame = {
     require(minOverlap > 0.0 && minOverlap <= 1.0, s"bad minOverlap=$minOverlap")
-    val bands = maxHamming + 1
-    require(64 % bands == 0, s"64 bits not divisible by ${bands} bands")
-    val seg = 64 / bands
-    val segMask = (1L << seg) - 1
-    def segOf(fp: Column, b: Int): Column =
-      shiftrightunsigned(fp, (bands - 1 - b) * seg).bitwiseAND(lit(segMask))
     val vf = gifFrameAHashes(media, every).toDF()
       .select(col("media_id"), col("fp")).distinct().localCheckpoint()
-    val banded = vf.select(col("media_id"), posexplode(
-        array((0 until bands).map(segOf(col("fp"), _)): _*)))
-      .select(col("media_id"), col("pos").as("block_idx"), col("col").as("block_key"))
-    val cand = banded.select(col("block_idx"), col("block_key"),
-        col("media_id").as("id_a"))
-      .join(banded.select(col("block_idx"), col("block_key"),
-        col("media_id").as("id_b")), Seq("block_idx", "block_key"))
-      .filter(col("id_a") < col("id_b"))
+    // candidate clips: some frame pair within maxHamming. A pair that only
+    // shares a segment has no such frame pair, so m_a = m_b = 0 and its
+    // overlap 0 is below any minOverlap > 0 — dropping it early changes no
+    // output row
+    val cand = DedupSuite.hammingBandedPairs(vf, "media_id", "fp", 64, maxHamming)
       .select(col("id_a"), col("id_b")).distinct()
     val pf = cand
       .join(vf.select(col("media_id").as("id_a"), col("fp").as("_fpa")), Seq("id_a"))

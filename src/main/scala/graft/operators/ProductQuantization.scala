@@ -177,12 +177,9 @@ object ProductQuantization {
   def adcTopK(encoded: DataFrame, packedCol: String, idCol: String,
               codebooks: Codebooks, query: Seq[Double], k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val ksub = codebooks.head.length
-    encoded.select(col(idCol),
-      adcDistance(col(packedCol), adcLut(query, codebooks), ksub).as("adc_dist"))
-      .filter(col("adc_dist").isNotNull)
-      .orderBy(col("adc_dist"), col(idCol))
-      .limit(k)
+    SimilaritySearch.rankedTopK(encoded, idCol,
+      adcDistance(col(packedCol), adcLut(query, codebooks), codebooks.head.length),
+      "adc_dist", k)
   }
 
   /** Two-stage ADC + exact refine — the standard production PQ search shape:
@@ -209,25 +206,15 @@ object ProductQuantization {
   /** Stage-2 exact re-rank shared by every single-query refine path
     * ([[adcTopKRefined]], [[ivfPqResidualTopK]]): broadcast-join the
     * candidate id set against the original vectors and rank by exact squared
-    * L2 via the dot identity |v|² − 2·v·q + |q|² (native codegen kernels; the
-    * additive constant |q|² keeps ranking unchanged but makes the reported
-    * distance the true squared L2). Null vectors (null l2_dist) are excluded,
-    * matching [[adcTopK]]'s dirty-row contract. */
+    * L2 ([[SimilaritySearch.l2ToQuery]]: the additive constant |q|² keeps
+    * ranking unchanged but makes the reported distance the true squared L2).
+    * Null vectors (null l2_dist) are excluded, matching [[adcTopK]]'s
+    * dirty-row contract. */
   private def exactRefineTopK(cand: DataFrame, original: DataFrame,
                               vecCol: String, idCol: String,
-                              query: Seq[Double], k: Int): DataFrame = {
-    val qLit = array(query.map(lit): _*)
-    val v = col(vecCol).cast("array<double>")
-    var qq = 0.0; query.foreach(x => qq += x * x)
-    original.join(broadcast(cand), Seq(idCol))
-      .select(col(idCol),
-        (graft.expressions.NativeVec.dot(v, v)
-          - lit(2.0) * graft.expressions.NativeVec.dot(v, qLit) + lit(qq))
-          .as("l2_dist"))
-      .filter(col("l2_dist").isNotNull)
-      .orderBy(col("l2_dist"), col(idCol))
-      .limit(k)
-  }
+                              query: Seq[Double], k: Int): DataFrame =
+    SimilaritySearch.rankedTopK(original.join(broadcast(cand), Seq(idCol)), idCol,
+      SimilaritySearch.l2ToQuery(col(vecCol).cast("array<double>"), query), "l2_dist", k)
 
   /** IVFADC — the composed billion-scale shape (FAISS: Jégou et al. 2011
     * §IV): IVF cell pruning picks WHICH rows to look at (nprobe of kCent
@@ -254,38 +241,14 @@ object ProductQuantization {
                 refine: Int = 0): DataFrame = {
     require(nprobe > 0, s"nprobe must be positive: $nprobe")
     require(refine >= 0, s"refine must be >= 0: $refine")
-    // probe ranking MUST use the same metric AND tie rule the cells were
-    // ASSIGNED with (SimilaritySearch.assignCells / NearestCentroid rank by
-    // cosine, ties to the HIGHER index): a probe ranked differently silently
-    // searches the wrong cells — fewer results, no error. Same convention as
-    // ivfTopKAssigned.
-    val probed = probeCells(centroids, query, nprobe)
-    val scoped = encoded.filter(col(cellCol).isin(probed: _*))
+    val scoped = encoded.filter(
+      col(cellCol).isin(SimilaritySearch.probeCells(centroids, query, nprobe): _*))
     if (refine == 0) adcTopK(scoped, packedCol, idCol, codebooks, query, k)
     else {
       val orig = original.getOrElse(sys.error("refine > 0 needs the original vectors"))
       adcTopKRefined(scoped, packedCol, idCol, orig, vecCol, codebooks, query, k, refine)
     }
   }
-
-  private def cosineToQuery(a: Seq[Double], b: Seq[Double]): Double = {
-    var (dot, na, nb) = (0.0, 0.0, 0.0)
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
-  /** The nprobe cosine-nearest cell ids for one query, ties toward the
-    * HIGHER index — the [[graft.expressions.NearestCentroid]] assignment
-    * rule, so a row assigned to one of two tied cells is always covered by a
-    * probe set that reaches either. Shared by every single-query IVF-PQ
-    * entry point (the batch path ranks the same way distributedly). */
-  private[operators] def probeCells(centroids: Seq[Seq[Double]],
-                                    query: Seq[Double], nprobe: Int): Seq[Int] =
-    centroids.zipWithIndex
-      .sortBy { case (c, i) => (-cosineToQuery(query, c), -i) }
-      .take(nprobe).map(_._2)
 
   // ─── residual encoding (true IVFADC: quantize vec − coarseCentroid) ───────
 
@@ -423,21 +386,18 @@ object ProductQuantization {
     import spark.implicits._
     val m = codebooks.length
     val ksub = codebooks.head.length
-    val probed = probeCells(coarse, query, nprobe)
+    val probed = SimilaritySearch.probeCells(coarse, query, nprobe)
     val lutDf = probed.map { cell =>
       cell -> residualAdcLut(query, coarse, cell, codebooks).flatten
     }.toDF("_lut_cell", "_lut")
-    val adc = encoded.filter(col(cellCol).isin(probed: _*))
+    val scoped = encoded.filter(col(cellCol).isin(probed: _*))
       .join(broadcast(lutDf), col(cellCol) === col("_lut_cell"))
-      .select(col(idCol),
-        adcDistanceFromLutCol(col(packedCol), col("_lut"), m, ksub).as("adc_dist"))
-      .filter(col("adc_dist").isNotNull)
-      .orderBy(col("adc_dist"), col(idCol))
-    if (refine == 0) adc.limit(k)
+    def adc(n: Int) = SimilaritySearch.rankedTopK(scoped, idCol,
+      adcDistanceFromLutCol(col(packedCol), col("_lut"), m, ksub), "adc_dist", n)
+    if (refine == 0) adc(k)
     else {
       val orig = original.getOrElse(sys.error("refine > 0 needs the original vectors"))
-      exactRefineTopK(adc.limit(k * refine).select(col(idCol)),
-        orig, vecCol, idCol, query, k)
+      exactRefineTopK(adc(k * refine).select(col(idCol)), orig, vecCol, idCol, query, k)
     }
   }
 
@@ -452,7 +412,8 @@ object ProductQuantization {
     *   1. PROBE: queries × the kCent-row broadcast centroid table, cosine
     *      ranked per query through [[graft.plans.GroupTopK]] (bounded heaps,
     *      no window sort), ties toward the HIGHER cell — the assignment rule,
-    *      so probe sets cover tied assignments ([[probeCells]] distributed).
+    *      so probe sets cover tied assignments
+    *      ([[SimilaritySearch.probeCells]] distributed).
     *   2. LUT: one [[graft.expressions.PqAdcLut]] native expression per
     *      (query, cell) probe pair — the flattened m×ksub table as a DATA
     *      column (m·ksub·dsub flops once per pair), never literal plan nodes.
@@ -461,8 +422,8 @@ object ProductQuantization {
     *      — and each candidate row costs m `element_at` lookups
     *      ([[adcDistanceFromLutCol]]); per-query top-k via GroupTopK.
     *   4. optional REFINE: the k·refine ADC candidates per query re-rank
-    *      exactly against `original` (|v|² − 2·v·q + |q|², native dot
-    *      kernels), per-query top-k again.
+    *      exactly against `original` ([[SimilaritySearch.l2ToQuery]]),
+    *      per-query top-k again.
     *
     * `broadcastLuts` (default true) broadcasts the probe-pair LUT table into
     * stage 3 — right while n_queries·nprobe·(m·ksub + dims) doubles fit an
@@ -542,10 +503,8 @@ object ProductQuantization {
         .join(orig.select(col(idCol), v.as("_nv")), Seq(idCol))
         .join(q, Seq("query_id"))
         .select(col("query_id"), col(idCol),
-          (graft.expressions.NativeVec.dot(col("_nv"), col("_nv"))
-            - lit(2.0) * graft.expressions.NativeVec.dot(col("_nv"), col("_qv"))
-            + graft.expressions.NativeVec.dot(col("_qv"), col("_qv")))
-            .as("l2_dist"))
+          SimilaritySearch.l2ToQuery(col("_nv"), col("_qv"),
+            graft.expressions.NativeVec.dot(col("_qv"), col("_qv"))).as("l2_dist"))
         .filter(col("l2_dist").isNotNull)
       graft.plans.GroupTopK.topK(refined,
         Seq("query_id"), Seq("l2_dist" -> true, idCol -> true), k)
@@ -657,14 +616,13 @@ object ProductQuantization {
       "idCol 'query_id' collides with the output query-id column — rename it")
     val spark = nodes.sparkSession
     import spark.implicits._
-    // driver-side cell adjacency (kCent×nprobe pairs): own cell pinned first
-    // — cosine(c, c) is 1 only up to rounding, and the own cell must always
-    // be probed (it holds the node's nearest codes by construction)
+    // driver-side cell adjacency (kCent×nprobe pairs): the probe rule with
+    // c's centroid as the query and the own cell pinned first — cosine(c, c)
+    // is 1 only up to rounding, and the own cell must always be probed (it
+    // holds the node's nearest codes by construction)
     val adj = coarse.indices.flatMap { c =>
-      val ranked = coarse.indices
-        .filterNot(_ == c)
-        .sortBy(i => (-cosineToQuery(coarse(c), coarse(i)), -i))
-      (c +: ranked).take(nprobe).map(p => (c, p))
+      (c +: SimilaritySearch.probeCells(coarse, coarse(c), nprobe + 1).filterNot(_ == c))
+        .take(nprobe).map(p => (c, p))
     }
     val adjDf = broadcast(adj.toDF("_qcell", "_pcell"))
     val q = nodes

@@ -75,8 +75,9 @@ object ScalarQuantization {
     graft.expressions.SqDecode(packed, mins, maxs)
 
   /** L2² between the DECODED codes and a query vector via the dot identity
-    * |dec|² − 2·dec·q + |q|² over NATIVE dot kernels (the exact-search
-    * formulation every oracle here replays with ascending-dim chains).
+    * ([[SimilaritySearch.l2ToQuery]] with v = dec, over NATIVE dot kernels —
+    * the exact-search formulation every oracle here replays with
+    * ascending-dim chains).
     * NOT Σ(dec_d − q_d)² as 64 inlined terms: that builds a 63-deep `Add`
     * tree whose Catalyst canonicalization cost dominated the whole query
     * (measured ~16 s of pure planning at ANY data size) — the decode array
@@ -86,12 +87,7 @@ object ScalarQuantization {
                  mins: Seq[Double], maxs: Seq[Double]): Column = {
     require(query.length == mins.length && mins.length == maxs.length,
       s"query has ${query.length} dims but bounds have ${mins.length}")
-    val dec = sqDecode(packed, mins, maxs)
-    val qLit = array(query.map(lit): _*)
-    var qq = 0.0
-    query.foreach(x => qq += x * x)
-    (graft.expressions.NativeVec.dot(dec, dec)
-      - lit(2.0) * graft.expressions.NativeVec.dot(dec, qLit) + lit(qq))
+    SimilaritySearch.l2ToQuery(sqDecode(packed, mins, maxs), query)
   }
 
   /** Top-k by SQ8 distance over a packed-code frame: scan-side arithmetic
@@ -107,12 +103,8 @@ object ScalarQuantization {
              query: Seq[Double], mins: Seq[Double], maxs: Seq[Double],
              k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    encoded
-      .select(col(idCol),
-        sqDistance(col(packedCol), query, mins, maxs).as("sq_dist"))
-      .filter(col("sq_dist").isNotNull)
-      .orderBy(col("sq_dist"), col(idCol))
-      .limit(k)
+    SimilaritySearch.rankedTopK(encoded, idCol,
+      sqDistance(col(packedCol), query, mins, maxs), "sq_dist", k)
   }
 
   /** A reloaded SQ8 index: per-dim bounds + the packed-code frame

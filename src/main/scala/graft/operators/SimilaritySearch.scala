@@ -23,13 +23,14 @@ object SimilaritySearch {
   def vecLit(q: Seq[Double]): Column = array(q.map(lit): _*)
 
   /** Exact top-k by cosine against a constant query vector.
-    * Output: (idCol, cosine) ordered desc, ties broken by id. */
+    * Output: (idCol, cosine) ordered desc, ties broken by id. Rows whose
+    * cosine is null (a null embedding or element) are excluded, never
+    * ranked — the dirty-row contract every quantized search here holds, so
+    * exact and quantized search agree on dirty data. */
   def bruteForceTopK(df: DataFrame, vecCol: String, idCol: String,
                      query: Seq[Double], k: Int): DataFrame =
-    df.select(col(idCol),
-      NativeVec.cosine(col(vecCol), vecLit(query)).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
+    rankedTopK(df, idCol, NativeVec.cosine(col(vecCol), vecLit(query)), "cosine", k,
+      descending = true)
 
   /** IVF-lite: same as [[bruteForceTopK]] but scanning only rows whose
     * `partCol` equals the query's partition — partition pruning is the scale path
@@ -131,25 +132,83 @@ object SimilaritySearch {
             when(col("_block_n") <= maxBlock, lit(""))
               .otherwise(signLshBucket(col(vecCol), planes)))
       }
-    val keys = Seq("block", "_sub")
-    val l = keyed.select((keys.map(col) :+ col(idCol).as("id_a") :+ col(vecCol).as("vec_a")): _*)
-    val r = keyed.select((keys.map(col) :+ col(idCol).as("id_b") :+ col(vecCol).as("vec_b")): _*)
-    l.join(r, keys)
+    blockedCosinePairs(keyed, Seq("block", "_sub"), idCol, vecCol, threshold)
+  }
+
+  // ─── the shared candidate → verify steps ────────────────────────────────────
+  //
+  // One copy of each decision the ANN family makes, called by every entry
+  // point here, in ProductQuantization and in ScalarQuantization.
+
+  /** Blocked cosine self-join — the verify step of every near-dup pair
+    * search: rows sharing all `keys` columns pair up once (`id_a < id_b`),
+    * and a pair is kept at exact cosine >= threshold. Output (id_a, id_b,
+    * cosine). */
+  private[operators] def blockedCosinePairs(keyed: DataFrame, keys: Seq[String],
+                                            idCol: String, vecCol: String,
+                                            threshold: Double): DataFrame = {
+    def side(id: String, vec: String) =
+      keyed.select((keys.map(col) :+ col(idCol).as(id) :+ col(vecCol).as(vec)): _*)
+    side("id_a", "vec_a").join(side("id_b", "vec_b"), keys)
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         NativeVec.cosine(col("vec_a"), col("vec_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
+  /** Ranked tail of every single-query search: (idCol, score as `name`),
+    * null scores dropped (a dirty row is never ranked — Spark's ascending
+    * sort is nulls-first, so it would surface as the nearest neighbor),
+    * ordered by score (descending for similarities) then id, top k.
+    *
+    * Nulls sort last and are dropped AFTER the limit: the top k of that
+    * order minus its nulls is the top k of the non-null rows. A filter
+    * ahead of the sort would be pushed below the projection and evaluate
+    * the score a second time on every row; here it sees k rows. */
+  private[operators] def rankedTopK(df: DataFrame, idCol: String, score: Column,
+                                    name: String, k: Int,
+                                    descending: Boolean = false): DataFrame =
+    df.select(col(idCol), score.as(name))
+      .orderBy(if (descending) col(name).desc_nulls_last else col(name).asc_nulls_last,
+        col(idCol))
+      .limit(k)
+      .filter(col(name).isNotNull)
+
+  /** Exact squared L2 from `v` to a query via the dot identity
+    * |v|² − 2·v·q + |q|² (native dot kernels; `qq` is |q|²). */
+  private[operators] def l2ToQuery(v: Column, q: Column, qq: Column): Column =
+    NativeVec.dot(v, v) - lit(2.0) * NativeVec.dot(v, q) + qq
+
+  /** [[l2ToQuery]] against a constant query: |q|² accumulated driver-side in
+    * ascending-dimension order. */
+  private[operators] def l2ToQuery(v: Column, query: Seq[Double]): Column = {
+    var qq = 0.0
+    query.foreach(x => qq += x * x)
+    l2ToQuery(v, vecLit(query), lit(qq))
+  }
+
   // ─── IVF with a trained coarse quantizer ────────────────────────────────────
 
-  private def cosineScala(a: Seq[Double], b: Seq[Double]): Double = {
+  private def cosine(a: Seq[Double], b: Seq[Double]): Double = {
     var (dot, na, nb) = (0.0, 0.0, 0.0)
     var i = 0
     val n = math.min(a.length, b.length)
     while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
+
+  /** The `nprobe` cosine-nearest cell ids for one query, ties toward the
+    * HIGHER index — the [[graft.expressions.NearestCentroid]] assignment
+    * rule. A probe ranked by any other metric or tie rule silently searches
+    * the wrong cells (fewer results, no error); with this one a row assigned
+    * to one of two tied cells is covered by a probe set that reaches either.
+    * Every single-query IVF entry point probes through it (the batch IVF-PQ
+    * join ranks the same way distributedly). */
+  private[operators] def probeCells(centroids: Seq[Seq[Double]],
+                                    query: Seq[Double], nprobe: Int): Seq[Int] =
+    centroids.zipWithIndex
+      .sortBy { case (c, i) => (-cosine(query, c), -i) }
+      .take(nprobe).map(_._2)
 
   /** Index of the cosine-nearest centroid: ONE native codegen expression over
     * the vector with the k×dims centroid matrix embedded as a reference
@@ -199,21 +258,13 @@ object SimilaritySearch {
     * brute force (the oracle identity q65 checks); `nprobe = 1` scans ~1/k of
     * the corpus. At scale the assignment column is precomputed once and used as
     * the parquet partition key, turning this filter into file pruning
-    * ([[partitionedTopK]] is that shape). */
+    * ([[partitionedTopK]] is that shape). This is [[ivfTopKAssigned]] over a
+    * [[nearestCentroid]] column computed on the fly. */
   def ivfTopK(df: DataFrame, vecCol: String, idCol: String,
               centroids: Seq[Seq[Double]], query: Seq[Double],
-              nprobe: Int, k: Int): DataFrame = {
-    require(nprobe > 0, s"nprobe must be positive: $nprobe")
-    // ties toward the HIGHER index — the NearestCentroid ASSIGNMENT rule, so
-    // at nprobe < kCent a row assigned to the higher of two tied cells is
-    // still reached by a probe set that covers either
-    val probed = centroids.zipWithIndex
-      .sortBy { case (c, i) => (-cosineScala(query, c), -i) }
-      .take(nprobe).map(_._2)
-    bruteForceTopK(
-      df.filter(nearestCentroid(col(vecCol), centroids).isin(probed: _*)),
-      vecCol, idCol, query, k)
-  }
+              nprobe: Int, k: Int): DataFrame =
+    ivfTopKAssigned(df.withColumn("_graft_ivf_cell", nearestCentroid(col(vecCol), centroids)),
+      vecCol, idCol, "_graft_ivf_cell", centroids, query, nprobe, k)
 
   /** Precompute the IVF cell assignment as a column — the index-BUILD step.
     * At corpus scale this runs once and the result is written with
@@ -231,11 +282,8 @@ object SimilaritySearch {
                       cellCol: String, centroids: Seq[Seq[Double]],
                       query: Seq[Double], nprobe: Int, k: Int): DataFrame = {
     require(nprobe > 0, s"nprobe must be positive: $nprobe")
-    // ties to the higher index — the assignment rule (see ivfTopK)
-    val probed = centroids.zipWithIndex
-      .sortBy { case (c, i) => (-cosineScala(query, c), -i) }
-      .take(nprobe).map(_._2)
-    bruteForceTopK(df.filter(col(cellCol).isin(probed: _*)), vecCol, idCol, query, k)
+    bruteForceTopK(df.filter(col(cellCol).isin(probeCells(centroids, query, nprobe): _*)),
+      vecCol, idCol, query, k)
   }
 
   /** Sign-LSH bucket id for an embedding: bit b = sign of dot(vec, plane_b),
@@ -268,13 +316,7 @@ object SimilaritySearch {
                                planes: Seq[Seq[Double]], threshold: Double): DataFrame = {
     val bucketed = df.select(signLshBucket(col(vecCol), planes).as("bucket"),
       col(idCol).as("id"), col(vecCol).as("vec"))
-    val l = bucketed.select(col("bucket"), col("id").as("id_a"), col("vec").as("vec_a"))
-    val r = bucketed.select(col("bucket"), col("id").as("id_b"), col("vec").as("vec_b"))
-    l.join(r, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        NativeVec.cosine(col("vec_a"), col("vec_b")).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    blockedCosinePairs(bucketed, Seq("bucket"), "id", "vec", threshold)
   }
 
   /** Batch kNN JOIN — every left row retrieves its top-k right-side neighbors
@@ -361,11 +403,7 @@ object SimilaritySearch {
                              cluster: Column, threshold: Double): DataFrame = {
     val bucketed = df.select(cluster.as("cluster"), col(idCol).as("id"),
       col(vecCol).as("vec"))
-    val l = bucketed.select(col("cluster"), col("id").as("id_a"), col("vec").as("vec_a"))
-    val r = bucketed.select(col("cluster"), col("id").as("id_b"), col("vec").as("vec_b"))
-    val dropped = l.join(r, Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(NativeVec.cosine(col("vec_a"), col("vec_b")) >= threshold)
+    val dropped = blockedCosinePairs(bucketed, Seq("cluster"), "id", "vec", threshold)
       .select(col("id_b").as("id")).distinct()
       .withColumn("_dup", lit(true))
     // no broadcast hint: at SemDeDup operating points the dropped set can be

@@ -55,14 +55,9 @@ object RelationalQueries {
     *
     * The DECIMAL(38,6) accumulation exists for oracle-hash fidelity (associative →
     * partitioning-independent bits). It costs ~40% on aggregation-heavy queries
-    * (q03-class), which at 100 TB is a verification-build tax you would not pay in
-    * production — so it is gated: `spark.conf.set("graft.verifyExact", "false")`
-    * switches to native double sums (plans otherwise identical). Verify/driver
-    * runs never set the conf, so every hash check stays on the exact path. */
+    * (q03-class) against native double sums (`bench/results/r3_sf0.1_fastsums.json`). */
   private def dsum(c: Column): Column =
-    if (SparkSession.active.conf.get("graft.verifyExact", "true").toBoolean)
-      sum(c.cast(DecimalType(38, 6))).cast("double")
-    else sum(c.cast("double"))
+    sum(c.cast(DecimalType(38, 6))).cast("double")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -391,6 +391,38 @@ class PipelineOpsSpec extends SparkSpec {
     assert(recalls.last == 1.0) // the q65 identity
     assert(recalls.zip(recalls.tail).forall { case (a, b) => a <= b }) // nested probe sets
     assert(recalls.head < 1.0)  // the trade is real: one list cannot hold all of top-12
+
+    // an exact cosine tie between two cells goes to the higher index on every
+    // probe path: (1,1) is equidistant from (1,0) and (0,1); row 3 sits on
+    // the tie and is assigned to the higher cell, so nprobe=1 must probe cell 1
+    val pq = ProductQuantization
+    val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
+    val tq = Seq(1.0, 1.0)
+    val tdf = Seq((1L, Seq(1.0, 0.1)), (2L, Seq(0.1, 1.0)), (3L, Seq(1.0, 1.0)))
+      .toDF("id", "v")
+    val tied = SimilaritySearch.assignCells(tdf, "v", cents, "cell")
+    def ids(out: org.apache.spark.sql.DataFrame) = out.select($"id").as[Long].collect().toSet
+    assert(ids(SimilaritySearch.ivfTopK(tdf, "v", "id", cents, tq, 1, 10)) == Set(2L, 3L))
+    assert(ids(SimilaritySearch.ivfTopKAssigned(tied, "v", "id", "cell", cents, tq, 1, 10))
+      == Set(2L, 3L))
+    val cb: pq.Codebooks = Seq(Seq(Seq(0.0, 0.0)))
+    val plain = pq.encode(tied, "v", cb)
+      .select($"id", pq.packCodes($"pq_codes", m = 1, ksub = 1).as("packed"), $"cell")
+    assert(ids(pq.ivfPqTopK(plain, "packed", "id", "cell", cents, cb, tq, 1, 10)) == Set(2L, 3L))
+    val residual = pq.encodeResidual(tied, "v", "cell", cents, cb)
+      .select($"id", pq.packCodes($"pq_codes", m = 1, ksub = 1).as("packed"), $"cell")
+    assert(ids(pq.ivfPqResidualTopK(residual, "packed", "id", "cell", cents, cb, tq, 1, 10))
+      == Set(2L, 3L))
+    // knnGraphSdc's cell adjacency: with (1,1) as cell 0's centroid, its one
+    // probe beyond its own cell ties between cells 1 and 2 and takes cell 2
+    val cents3 = Seq(Seq(1.0, 1.0), Seq(1.0, 0.0), Seq(0.0, 1.0))
+    val df3 = Seq((1L, Seq(1.0, 0.05)), (2L, Seq(0.05, 1.0)), (3L, Seq(1.0, 1.0)),
+      (4L, Seq(1.1, 1.0))).toDF("id", "v")
+    val enc3 = pq.encode(SimilaritySearch.assignCells(df3, "v", cents3, "cell"), "v", cb)
+      .select($"id", pq.packCodes($"pq_codes", m = 1, ksub = 1).as("packed"), $"cell")
+    val graph = pq.knnGraphSdc(enc3.filter($"id" === 3L), enc3, "id", "packed", "cell",
+      cents3, cb, nprobe = 2, k = 10)
+    assert(ids(graph) == Set(2L, 4L))
   }
 
   test("connected components: chains, stars, disjoint clusters resolve to min-id labels") {

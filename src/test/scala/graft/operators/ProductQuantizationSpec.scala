@@ -231,7 +231,9 @@ class ProductQuantizationSpec extends SparkSpec {
   test("adcTopK / refine exclude null-poisoned rows instead of ranking them first") {
     // a null embedding element → null codes → null packed → null adc_dist;
     // asc sort default is nulls-FIRST, so without the filter the dirty row
-    // would surface as the single nearest neighbor
+    // would surface as the single nearest neighbor. Exact cosine search and
+    // SQ8 hold the same contract: k = 3 is above the 2 clean rows, so a
+    // ranked dirty row would show as a third result
     val cb: pq.Codebooks = Seq(Seq(Seq(0.0, 0.0), Seq(9.0, 9.0)))
     val clean = Seq((1L, Seq[Option[Double]](Some(0.1), Some(0.1))),
       (2L, Seq[Option[Double]](Some(8.0), Some(8.0))),
@@ -245,6 +247,17 @@ class ProductQuantizationSpec extends SparkSpec {
       Seq(0.0, 0.0), k = 3, refineFactor = 1)
       .select($"id").as[Long].collect().toSeq
     assert(refined == Seq(1L, 2L), s"refine must also exclude dirty rows, got $refined")
+    // rows 1 and 2 are collinear, so their cosines tie up to rounding
+    val brute = SimilaritySearch.bruteForceTopK(clean, "v", "id", Seq(1.0, 1.0), k = 3)
+      .select($"id").as[Long].collect().toSeq
+    assert(brute.sorted == Seq(1L, 2L), s"exact search must exclude dirty rows, got $brute")
+    val sq = ScalarQuantization
+    val wide = clean.select($"id", concat($"v", array(Seq.fill(6)(lit(0.0)): _*)).as("v"))
+    val (mins, maxs) = sq.sqTrain(wide, "v")
+    val sqCodes = wide.select($"id", sq.sqPack(sq.sqEncode($"v", mins, maxs), 8).as("packed"))
+    val sqGot = sq.sqTopK(sqCodes, "packed", "id", Seq.fill(8)(0.0), mins, maxs, k = 3)
+      .select($"id").as[Long].collect().toSeq
+    assert(sqGot == Seq(1L, 2L), s"SQ8 search must exclude dirty rows, got $sqGot")
   }
 
   test("probe selection breaks exact cosine ties toward the HIGHER index — the assignment rule") {
@@ -252,8 +265,8 @@ class ProductQuantizationSpec extends SparkSpec {
     // NearestCentroid assigns tied rows to the higher index, so the probe
     // must pick index 2 over 1 or an nprobe=1 search misses those rows
     val cents = Seq(Seq(-1.0, 0.0), Seq(1.0, 1.0), Seq(2.0, 2.0))
-    assert(pq.probeCells(cents, Seq(1.0, 1.0), nprobe = 1) == Seq(2))
-    assert(pq.probeCells(cents, Seq(1.0, 1.0), nprobe = 2) == Seq(2, 1))
+    assert(SimilaritySearch.probeCells(cents, Seq(1.0, 1.0), nprobe = 1) == Seq(2))
+    assert(SimilaritySearch.probeCells(cents, Seq(1.0, 1.0), nprobe = 2) == Seq(2, 1))
     // end-to-end: a row exactly on the tied direction is assigned to cell 2
     // (higher), and the nprobe=1 residual search must find it
     val df = Seq((1L, Seq(1.0, 1.0)), (2L, Seq(-2.0, 0.1))).toDF("id", "v")
@@ -284,7 +297,7 @@ class ProductQuantizationSpec extends SparkSpec {
         .as[(Long, Double)].collect().toSeq
       // driver replay of the old branch formulation: per probed cell, that
       // cell's residual LUT summed over the row's (unpacked) codes
-      val probed = pq.probeCells(coarse, query, nprobe)
+      val probed = SimilaritySearch.probeCells(coarse, query, nprobe)
       val luts = probed.map(c => c -> pq.residualAdcLut(query, coarse, c, cb)).toMap
       val expect = encoded.select($"id", $"cell", $"pq_codes")
         .as[(Long, Int, Seq[Int])].collect()
