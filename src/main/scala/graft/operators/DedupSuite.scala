@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions._
   *   - candidate verification joins are equi-joins on band/block keys, never a
   *     cross join; pair output is bounded by bucket collisions (tunable bands);
   *   - exact dedup is one hash aggregate on a 16-byte digest.
+  *
+  * Hamming near-dup family (SimHash here; the media fingerprints of
+  * [[Multimodal]] and the streaming ingests): the `maxHamming` check, band
+  * keys, within test and band join live once, in [[HammingBands]].
   */
 object DedupSuite {
 
@@ -262,80 +266,80 @@ object DedupSuite {
     hammingBandedPairs(simHashFingerprintsPacked(df, idCol, textCol, bits),
       "id", "fp", bits, maxHamming)
 
-  /** Hamming-banded candidate pairs over an EXISTING packed fingerprint column
-    * — the blocking core of [[simHashPairs]], factored out so any 64-bit-or-
-    * less fingerprint family (SimHash, image aHash/dHash) shares one
-    * pigeonhole path: hamming <= maxHamming pairs agree on at least one of
-    * maxHamming+1 segments, so the band join finds every qualifying pair with
-    * NO all-pairs comparison; verification is one xor+popcount per candidate.
-    * Input `fps`: one row per item, (idCol, fpCol). Output (id_a, id_b,
-    * hamming), each qualifying pair exactly once. */
-  def hammingBandedPairs(fps: DataFrame, idCol: String, fpCol: String,
-                         bits: Int = 64, maxHamming: Int = 3): DataFrame = {
-    val bands = maxHamming + 1
-    require(bits % bands == 0, s"bits $bits not divisible by bands $bands")
-    val seg = bits / bands
-    val segMask = if (seg == 64) -1L else (1L << seg) - 1
+  /** The one pigeonhole band rule of the Hamming near-dup family (SimHash,
+    * image, audio and video fingerprints; batch, index and streaming): two
+    * `bits`-bit fingerprints within `maxHamming` agree on at least one of
+    * `bands` = maxHamming+1 equal segments, so a band join finds every
+    * qualifying pair with NO all-pairs comparison. Constructing it is the
+    * family's `maxHamming` check — every public entry point builds its rule
+    * before any hashing. */
+  private[graft] final case class HammingBands(bits: Int, maxHamming: Int) {
+    require(maxHamming >= 0 && bits % (maxHamming + 1) == 0,
+      s"maxHamming must be one of ${(1 to bits).filter(bits % _ == 0).map(_ - 1)
+        .mkString(", ")} for $bits-bit fingerprints (maxHamming + 1 segments " +
+        s"must split the bits evenly), got $maxHamming")
+    val bands: Int = maxHamming + 1
+    private val seg = bits / bands
+    // seg == 64 (maxHamming = 0, exact-dup mode): 1L << 64 wraps to 1 on the
+    // JVM and a zero mask would collapse every band key to 0
+    private val segMask = if (seg == 64) -1L else (1L << seg) - 1
+
+    /** Segment `b` of `fp`, MSB-first. */
     def segOf(fp: Column, b: Int): Column =
       shiftrightunsigned(fp, (bands - 1 - b) * seg).bitwiseAND(lit(segMask))
-    val fp = fps.select(col(idCol).as("id"), col(fpCol).as("fp"))
-    val banded = fp.select(col("id"), col("fp"), posexplode(
-      array((0 until bands).map(segOf(col("fp"), _)): _*)))
-      .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block_key")
-    val l = banded.select(col("block_idx"), col("block_key"),
-      col("id").as("id_a"), col("fp").as("fp_a"))
-    val r = banded.select(col("block_idx"), col("block_key"),
-      col("id").as("id_b"), col("fp").as("fp_b"))
-    // First-matching-band emission (segments recomputed from the carried fp):
-    // block b survives iff blocks 0..b-1 differ, so each qualifying pair is
-    // emitted exactly once and no distinct() shuffle is needed.
-    val firstBlockOnly = (0 until bands).map { b =>
-      (col("block_idx") === b) && (0 until b)
-        .map(p => segOf(col("fp_a"), p) =!= segOf(col("fp_b"), p))
-        .foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    l.join(r, Seq("block_idx", "block_key"))
-      .filter(col("id_a") < col("id_b") && firstBlockOnly)
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+
+    /** All `bands` segments of `fp` as one array, band index = position. */
+    def keys(fp: Column): Column = array((0 until bands).map(segOf(fp, _)): _*)
+
+    def within(fpA: Column, fpB: Column): Column =
+      bit_count(fpA.bitwiseXOR(fpB)) <= maxHamming
+
+    /** The self form: [[across]] of `fps` with itself, kept where
+      * `id_a < id_b` — each qualifying pair of rows exactly once (an item
+      * with several rows, e.g. a clip's frame hashes, pairs row by row). */
+    def pairs(fps: DataFrame, idCol: String, fpCol: String): DataFrame =
+      across(fps, fps, idCol, fpCol).filter(col("id_a") < col("id_b"))
+
+    /** The band join: every (left row, right row) pair within `maxHamming`,
+      * each exactly once — first-matching-band emission (segments recomputed
+      * from the carried fp: block b survives iff blocks 0..b-1 differ), so
+      * no distinct() shuffle. Output (id_a from left, id_b from right,
+      * hamming). */
+    def across(left: DataFrame, right: DataFrame,
+               idCol: String, fpCol: String): DataFrame = {
+      def banded(df: DataFrame, ida: String, fpa: String) = df
+        .select(col(idCol).as(ida), col(fpCol).as(fpa))
+        .select(col(ida), col(fpa), posexplode(keys(col(fpa))))
+        .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block_key")
+      val firstBlockOnly = (0 until bands).map { b =>
+        (col("block_idx") === b) && (0 until b)
+          .map(p => segOf(col("fp_a"), p) =!= segOf(col("fp_b"), p))
+          .foldLeft(lit(true))(_ && _)
+      }.reduce(_ || _)
+      banded(left, "id_a", "fp_a")
+        .join(banded(right, "id_b", "fp_b"), Seq("block_idx", "block_key"))
+        .filter(firstBlockOnly)
+        .select(col("id_a"), col("id_b"),
+          bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("long").as("hamming"))
+        .filter(col("hamming") <= maxHamming)
+    }
   }
 
-  /** [[hammingBandedPairs]] across TWO fingerprint frames — the probe-vs-
-    * index shape ([[MediaIndex]]'s near-dup-against-index, incremental media
-    * ingest): every (left item, right item) pair within `maxHamming` agrees
-    * on at least one of maxHamming+1 segments, found with NO all-pairs
-    * comparison and no `id_a < id_b` canonicalization (the sides are
-    * distinct id spaces — the append contract keeps probe ids disjoint from
-    * indexed ids). First-matching-band emission as in the self-join form,
-    * so no distinct() shuffle. Output (id_a from left, id_b from right,
-    * hamming). */
+  /** [[HammingBands.pairs]] over ONE fingerprint frame of (idCol, fpCol)
+    * rows. Output (id_a, id_b, hamming), id_a < id_b. */
+  def hammingBandedPairs(fps: DataFrame, idCol: String, fpCol: String,
+                         bits: Int = 64, maxHamming: Int = 3): DataFrame =
+    HammingBands(bits, maxHamming).pairs(fps, idCol, fpCol)
+
+  /** Hamming-banded pairs across TWO fingerprint frames — the probe-vs-index
+    * shape ([[MediaIndex]]'s near-dup-against-index): the [[HammingBands]]
+    * join with no `id_a < id_b` canonicalization (the sides are distinct id
+    * spaces — the append contract keeps probe ids disjoint from indexed
+    * ids). Output (id_a from left, id_b from right, hamming). */
   def hammingBandedPairsAcross(left: DataFrame, right: DataFrame,
                                idCol: String, fpCol: String,
-                               bits: Int = 64, maxHamming: Int = 3): DataFrame = {
-    val bands = maxHamming + 1
-    require(bits % bands == 0, s"bits $bits not divisible by bands $bands")
-    val seg = bits / bands
-    val segMask = if (seg == 64) -1L else (1L << seg) - 1
-    def segOf(fp: Column, b: Int): Column =
-      shiftrightunsigned(fp, (bands - 1 - b) * seg).bitwiseAND(lit(segMask))
-    def banded(df: DataFrame, ida: String, fpa: String) = df
-      .select(col(idCol).as(ida), col(fpCol).as(fpa))
-      .select(col(ida), col(fpa), posexplode(
-        array((0 until bands).map(segOf(col(fpa), _)): _*)))
-      .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block_key")
-    val firstBlockOnly = (0 until bands).map { b =>
-      (col("block_idx") === b) && (0 until b)
-        .map(p => segOf(col("fp_a"), p) =!= segOf(col("fp_b"), p))
-        .foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    banded(left, "id_a", "fp_a")
-      .join(banded(right, "id_b", "fp_b"), Seq("block_idx", "block_key"))
-      .filter(firstBlockOnly)
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
+                               bits: Int = 64, maxHamming: Int = 3): DataFrame =
+    HammingBands(bits, maxHamming).across(left, right, idCol, fpCol)
 
   // ── n-gram Jaccard ─────────────────────────────────────────────────────────
 

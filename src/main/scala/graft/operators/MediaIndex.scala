@@ -57,9 +57,7 @@ object MediaIndex {
     import spark.implicits._
     val op = "MediaIndex.append"
     GenCommit.append(newHashes, path, Seq("fingerprints"), op) { (staged, meta, gen) =>
-      val idxKind = meta.row.getAs[String]("kind")
-      require(idxKind == kind,
-        s"$op: index at $path holds '$idxKind' fingerprints, not '$kind'")
+      requireKind(op, path, meta.row.getAs[String]("kind"), Seq(kind))
       val committed = GenCommit.readGens(spark, path, "fingerprints", meta.gens)
       // names AND types: a same-named generation with drifted types (int vs
       // long ids, array<int> energies) would commit fine and poison every
@@ -92,4 +90,20 @@ object MediaIndex {
     Index(meta.row.getAs[String]("kind"), meta.row.getAs[Long]("n_items"),
       GenCommit.readGens(spark, path, "fingerprints", meta.gens))
   }
+
+  /** [[load]], rejecting an index whose kind is not one of `kinds` — the one
+    * kind check of every near-dup probe and streaming ingest, naming the
+    * `caller` (an ahash probe banded into an audio catalog would silently
+    * produce garbage candidates). */
+  private[graft] def loadKind(spark: SparkSession, path: String, caller: String,
+                              kinds: String*): Index = {
+    val idx = load(spark, path)
+    requireKind(caller, path, idx.kind, kinds)
+    idx
+  }
+
+  private def requireKind(caller: String, path: String, held: String,
+                          kinds: Seq[String]): Unit =
+    require(kinds.contains(held), s"$caller: index at $path holds '$held' " +
+      s"fingerprints, not ${kinds.map(k => s"'$k'").mkString(" or ")}")
 }

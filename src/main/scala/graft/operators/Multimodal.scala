@@ -6,7 +6,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,6 +22,14 @@ import org.apache.spark.sql.types._
   * binary column + metadata struct, `mapPartitions` batch processing with one
   * decoder init per partition (the Scala analog of `mapInPandas` batching),
   * partition sizing by byte budget.
+  *
+  * The media near-dup family is fingerprint → band → verify, each decision
+  * in one place: the band rule is [[DedupSuite.HammingBands]]; the image
+  * hash kinds (ahash/dhash ↔ bits function ↔ index kind) are
+  * [[ImageHashKinds]]; the exact verify is [[l1Verified]] for images and
+  * audio and [[containmentVerified]] (with [[requireMinOverlap]]) for video;
+  * GIF clips demux through [[gifDemux]] into [[frameHashSets]]; a persisted
+  * index is loaded and kind-checked by [[MediaIndex.loadKind]].
   */
 object Multimodal {
 
@@ -98,8 +106,22 @@ object Multimodal {
     * reduce it to [[ImageFeatures]]. Returns null-means for empty payloads the
     * caller filtered in. */
   def decodePng(id: Long, payload: Array[Byte]): ImageFeatures = {
+    val img = readImage(id, payload)
+    val (r, g, b) = rgbMeans(img)
+    ImageFeatures(id, img.getWidth, img.getHeight, r, g, b)
+  }
+
+  /** Decode one image payload with `javax.imageio`, loud on an undecodable
+    * one. */
+  private def readImage(id: Long, payload: Array[Byte]): BufferedImage = {
     val img = ImageIO.read(new ByteArrayInputStream(payload))
     require(img != null, s"media_id=$id: payload is not a decodable image")
+    img
+  }
+
+  /** Per-channel pixel means of a decoded image (exact integer sums, one
+    * division each). */
+  private def rgbMeans(img: BufferedImage): (Double, Double, Double) = {
     val w = img.getWidth; val h = img.getHeight
     var (sr, sg, sb) = (0L, 0L, 0L)
     var y = 0
@@ -113,7 +135,7 @@ object Multimodal {
       y += 1
     }
     val n = w.toLong * h
-    ImageFeatures(id, w, h, sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
+    (sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
   }
 
   /** Image decode / feature-extract stage: the real codec runs inside
@@ -237,19 +259,7 @@ object Multimodal {
     * through [[aHashBits]]. Invariant under global brightness shift (mean
     * shifts with the pixels) and under lossless recompression (same pixels ⇒
     * same thumbnail). Per-partition decoder init, scan-shaped. */
-  def imageAHashes(media: DataFrame): Dataset[ImageHash] = {
-    import media.sparkSession.implicits._
-    media.select(col("media_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        ImageIO.setUseCache(false) // per-partition init
-        it.map { case (id, payload) =>
-          val img = ImageIO.read(new ByteArrayInputStream(payload))
-          require(img != null, s"media_id=$id: payload is not a decodable image")
-          val gray = grayThumb(img, 8, 8)
-          ImageHash(id, aHashBits(gray), gray)
-        }
-      }
-  }
+  def imageAHashes(media: DataFrame): Dataset[ImageHash] = imageHashesOf(media, "ahash")
 
   /** dHash bits of a 9×8 grayscale thumbnail: bit (row-major over the 8×8
     * grid, MSB-first) set iff gray(x,y) > gray(x+1,y) — a horizontal
@@ -272,16 +282,36 @@ object Multimodal {
     * Like aHash it ignores global brightness; unlike aHash it also ignores
     * global contrast scaling (gradients scale with it). The carried `gray`
     * is the 72-int 9×8 thumbnail. */
-  def imageDHashes(media: DataFrame): Dataset[ImageHash] = {
+  def imageDHashes(media: DataFrame): Dataset[ImageHash] = imageHashesOf(media, "dhash")
+
+  /** One row of the image hash-kind table: the `hashKind` callers pass, the
+    * [[MediaIndex]] kind its persisted fingerprints carry, and the
+    * grayscale thumbnail size and bits function that compute it. */
+  private final case class ImageHashKind(hashKind: String, indexKind: String,
+                                         w: Int, h: Int, bitsOf: Array[Int] => Long)
+
+  /** The one image hash-kind table (ahash/dhash ↔ thumbnail + bits function
+    * ↔ index kind): every image hash, index save/append, index probe and
+    * streaming image ingest looks its kind up here. */
+  private val ImageHashKinds = Seq(
+    ImageHashKind("ahash", "image_ahash_64", 8, 8, aHashBits),
+    ImageHashKind("dhash", "image_dhash_64", 9, 8, dHashBits))
+
+  private def imageHashKind(hashKind: String): ImageHashKind =
+    ImageHashKinds.find(_.hashKind == hashKind).getOrElse(throw new IllegalArgumentException(
+      s"hashKind must be ahash|dhash, got '$hashKind'"))
+
+  /** [[imageAHashes]]/[[imageDHashes]] by table kind: one decode + thumbnail
+    * + bits per image, per-partition decoder init. */
+  private def imageHashesOf(media: DataFrame, hashKind: String): Dataset[ImageHash] = {
+    val k = imageHashKind(hashKind)
     import media.sparkSession.implicits._
     media.select(col("media_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
-        ImageIO.setUseCache(false)
+        ImageIO.setUseCache(false) // per-partition init
         it.map { case (id, payload) =>
-          val img = ImageIO.read(new ByteArrayInputStream(payload))
-          require(img != null, s"media_id=$id: payload is not a decodable image")
-          val gray = grayThumb(img, 9, 8)
-          ImageHash(id, dHashBits(gray), gray)
+          val gray = grayThumb(readImage(id, payload), k.w, k.h)
+          ImageHash(id, k.bitsOf(gray), gray)
         }
       }
   }
@@ -292,14 +322,27 @@ object Multimodal {
     * columns (event time). */
   def imageFingerprintOf(id: Long, payload: Array[Byte],
                          hashKind: String = "ahash"): Long = {
-    val img = ImageIO.read(new ByteArrayInputStream(payload))
-    require(img != null, s"media_id=$id: payload is not a decodable image")
-    hashKind match {
-      case "ahash" => aHashBits(grayThumb(img, 8, 8))
-      case "dhash" => dHashBits(grayThumb(img, 9, 8))
-      case other => throw new IllegalArgumentException(
-        s"hashKind must be ahash|dhash, got '$other'")
-    }
+    val k = imageHashKind(hashKind)
+    k.bitsOf(grayThumb(readImage(id, payload), k.w, k.h))
+  }
+
+  /** The one exact-L1 verify of the image/audio near-dup family: attach the
+    * integer array `arr` (grayscale thumbnail or frame energies) of both
+    * sides of each banded candidate (id_a, id_b, hamming) and sum |a − b|
+    * over the zipped arrays. `left`/`right` are keyed by media_id — the
+    * same hash frame for the self forms ([[imageNearDupPairs]],
+    * [[audioNearDupPairs]]), probes and index fingerprints for the
+    * against-index forms. Output (id_a, id_b, hamming, l1). */
+  private def l1Verified(cand: DataFrame, left: DataFrame, right: DataFrame,
+                         arr: String): DataFrame = {
+    // side columns named after the array (_ga/_gb, _ea/_eb)
+    val (va, vb) = (s"_${arr.head}a", s"_${arr.head}b")
+    cand
+      .join(left.select(col("media_id").as("id_a"), col(arr).as(va)), Seq("id_a"))
+      .join(right.select(col("media_id").as("id_b"), col(arr).as(vb)), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), col("hamming"),
+        aggregate(zip_with(col(va), col(vb), (a, b) => abs(a - b).cast("long")),
+          lit(0L), (acc, v) => acc + v).as("l1"))
   }
 
   /** Image near-duplicate pairs WITHOUT an external embedding model:
@@ -325,22 +368,9 @@ object Multimodal {
     * ever dominate. */
   def imageNearDupPairs(media: DataFrame, maxHamming: Int = 3,
                         hashKind: String = "ahash"): DataFrame = {
-    val hashed = hashKind match {
-      case "ahash" => imageAHashes(media)
-      case "dhash" => imageDHashes(media)
-      case other => throw new IllegalArgumentException(
-        s"imageNearDupPairs: hashKind must be ahash|dhash, got '$other'")
-    }
-    val hashes = hashed.toDF().localCheckpoint()
-    val cand = DedupSuite.hammingBandedPairs(
-      hashes.select(col("media_id"), col("fp")), "media_id", "fp",
-      bits = 64, maxHamming = maxHamming)
-    cand
-      .join(hashes.select(col("media_id").as("id_a"), col("gray").as("_ga")), Seq("id_a"))
-      .join(hashes.select(col("media_id").as("id_b"), col("gray").as("_gb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("hamming"),
-        aggregate(zip_with(col("_ga"), col("_gb"),
-          (a, b) => abs(a - b).cast("long")), lit(0L), (acc, v) => acc + v).as("l1"))
+    val bands = DedupSuite.HammingBands(64, maxHamming)
+    val hashes = imageHashesOf(media, hashKind).toDF().localCheckpoint()
+    l1Verified(bands.pairs(hashes, "media_id", "fp"), hashes, hashes, "gray")
   }
 
   // ─── REAL audio kernel (javax.sound.sampled, in-JDK WAV PCM round-trip) ─────
@@ -544,16 +574,9 @@ object Multimodal {
     * joins, so the WAV parse runs exactly once per clip; payload bytes never
     * ride a join (the verify carries 64 longs per CANDIDATE id only). */
   def audioNearDupPairs(media: DataFrame, maxHamming: Int = 3): DataFrame = {
+    val bands = DedupSuite.HammingBands(64, maxHamming)
     val hashes = audioEnergyHashes(media, frames = 64).toDF().localCheckpoint()
-    val cand = DedupSuite.hammingBandedPairs(
-      hashes.select(col("media_id"), col("fp")), "media_id", "fp",
-      bits = 64, maxHamming = maxHamming)
-    cand
-      .join(hashes.select(col("media_id").as("id_a"), col("energies").as("_ea")), Seq("id_a"))
-      .join(hashes.select(col("media_id").as("id_b"), col("energies").as("_eb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("hamming"),
-        aggregate(zip_with(col("_ea"), col("_eb"),
-          (a, b) => abs(a - b)), lit(0L), (acc, v) => acc + v).as("l1"))
+    l1Verified(bands.pairs(hashes, "media_id", "fp"), hashes, hashes, "energies")
   }
 
   /** Codec-agnostic feature-extract over payload batches (byte stats + digest +
@@ -614,45 +637,48 @@ object Multimodal {
   final case class VideoFrame(media_id: Long, frame_idx: Int, width: Int, height: Int,
                               mean_r: Double, mean_g: Double, mean_b: Double)
 
-  /** Real frame sampling over multi-frame GIF payloads: one `ImageReader` per
-    * payload, each payload demuxed by frame index, every `every`-th frame
-    * decoded and reduced. Sampled frames are decoded EAGERLY per payload under
-    * try/finally — clips are small (the sampled-frame stats are a few dozen
-    * rows), and a lazily-disposed iterator would leak the reader and its
-    * `ImageInputStream` whenever a downstream `limit`/`take`/task-kill
-    * short-circuits before exhausting it. */
-  def sampleGifFrames(media: DataFrame, every: Int): Dataset[VideoFrame] = {
+  /** The one GIF demux loop, behind [[sampleGifFrames]], [[gifFrameAHashes]]
+    * and [[videoFrameFingerprintsOf]]: checks `every` at once, then per
+    * (media_id, payload) opens one `ImageReader`, applies `frame` to every
+    * `every`-th decoded frame (media_id, frame index, image) and disposes
+    * the reader and its `ImageInputStream` in `finally`. EAGER per payload
+    * — clips are small (a few dozen sampled frames), and a lazily-disposed
+    * iterator would leak the reader whenever a downstream
+    * `limit`/`take`/task-kill short-circuits before exhausting it. */
+  private def gifDemux[T](every: Int)(frame: (Long, Int, BufferedImage) => T)
+  : (Long, Array[Byte]) => IndexedSeq[T] = {
     require(every > 0, "every must be positive")
+    (id, payload) => {
+      val reader = ImageIO.getImageReadersByFormatName("gif").next()
+      val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(payload))
+      try {
+        reader.setInput(iis)
+        (0 until reader.getNumImages(true) by every).map(f => frame(id, f, reader.read(f)))
+      } finally { reader.dispose(); iis.close() }
+    }
+  }
+
+  /** [[gifDemux]] over every payload of `media`, with the per-partition
+    * decoder init. */
+  private def demuxGifs[T: Encoder](media: DataFrame, every: Int)(
+      frame: (Long, Int, BufferedImage) => T): Dataset[T] = {
+    val demux = gifDemux(every)(frame)
     import media.sparkSession.implicits._
     media.select(col("media_id"), col("payload")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         ImageIO.setUseCache(false) // per-partition init
-        it.flatMap { case (id, payload) =>
-          val reader = ImageIO.getImageReadersByFormatName("gif").next()
-          val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(payload))
-          try {
-            reader.setInput(iis)
-            val n = reader.getNumImages(true)
-            (0 until n by every).map { f =>
-              val img = reader.read(f)
-              val w = img.getWidth; val h = img.getHeight
-              var (sr, sg, sb) = (0L, 0L, 0L)
-              var y = 0
-              while (y < h) {
-                var x = 0
-                while (x < w) {
-                  val p = img.getRGB(x, y)
-                  sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-                  x += 1
-                }
-                y += 1
-              }
-              val cnt = w.toLong * h
-              VideoFrame(id, f, w, h, sr.toDouble / cnt, sg.toDouble / cnt, sb.toDouble / cnt)
-            }
-          } finally { reader.dispose(); iis.close() }
-        }
+        it.flatMap { case (id, payload) => demux(id, payload) }
       }
+  }
+
+  /** Real frame sampling over multi-frame GIF payloads ([[gifDemux]]): every
+    * `every`-th frame decoded and reduced to its channel means. */
+  def sampleGifFrames(media: DataFrame, every: Int): Dataset[VideoFrame] = {
+    import media.sparkSession.implicits._
+    demuxGifs(media, every) { (id, f, img) =>
+      val (r, g, b) = rgbMeans(img)
+      VideoFrame(id, f, img.getWidth, img.getHeight, r, g, b)
+    }
   }
 
   /** Encode arbitrary GRAYSCALE frames as a real multi-frame GIF — the
@@ -689,87 +715,55 @@ object Multimodal {
   /** One sampled frame's perceptual fingerprint. */
   final case class FrameHash(media_id: Long, frame_idx: Int, fp: Long)
 
-  /** Per-frame aHash over multi-frame GIF payloads: demux by frame index
-    * (every `every`-th frame), 8×8 grayscale thumbnail, [[aHashBits]] — ONE
-    * decode pass per clip in the scan, the video twin of [[imageAHashes]].
-    * Eager per-payload decode under try/finally (the [[sampleGifFrames]]
-    * reader-leak rationale). */
+  /** Per-frame aHash over multi-frame GIF payloads ([[gifDemux]], every
+    * `every`-th frame): 8×8 grayscale thumbnail, [[aHashBits]] — ONE decode
+    * pass per clip in the scan, the video twin of [[imageAHashes]]. */
   def gifFrameAHashes(media: DataFrame, every: Int = 1): Dataset[FrameHash] = {
-    require(every > 0, "every must be positive")
     import media.sparkSession.implicits._
-    media.select(col("media_id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        ImageIO.setUseCache(false)
-        it.flatMap { case (id, payload) =>
-          val reader = ImageIO.getImageReadersByFormatName("gif").next()
-          val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(payload))
-          try {
-            reader.setInput(iis)
-            val n = reader.getNumImages(true)
-            (0 until n by every).map { f =>
-              FrameHash(id, f, aHashBits(grayThumb(reader.read(f), 8, 8)))
-            }
-          } finally { reader.dispose(); iis.close() }
-        }
-      }
+    demuxGifs(media, every)((id, f, img) => FrameHash(id, f, aHashBits(grayThumb(img, 8, 8))))
   }
 
   /** One clip's DISTINCT sampled-frame aHashes straight from its payload
-    * bytes, ascending — the per-row core of [[gifFrameAHashes]] + distinct,
-    * public so a STREAMING ingest can demux in-scan while carrying its own
-    * extra columns (event time). The sorted order makes the array a
+    * bytes, ascending — the per-row core of [[frameHashSets]], public so a
+    * STREAMING ingest can demux in-scan while carrying its own extra
+    * columns (event time). The sorted order makes the array a
     * deterministic per-clip signature: two clips have equal arrays iff
     * their distinct frame-hash SETS are equal. */
   def videoFrameFingerprintsOf(id: Long, payload: Array[Byte],
-                               every: Int = 1): Array[Long] = {
-    require(every > 0, "every must be positive")
-    val reader = ImageIO.getImageReadersByFormatName("gif").next()
-    val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(payload))
-    try {
-      reader.setInput(iis)
-      val n = reader.getNumImages(true)
-      (0 until n by every).map(f => aHashBits(grayThumb(reader.read(f), 8, 8)))
-        .distinct.sorted.toArray
-    } finally { reader.dispose(); iis.close() }
-  }
+                               every: Int = 1): Array[Long] =
+    gifDemux(every)((_, _, img) => aHashBits(grayThumb(img, 8, 8)))(id, payload)
+      .distinct.sorted.toArray
 
-  /** VIDEO near-duplicate pairs — re-encoded, trimmed, and partially-edited
-    * clips — without an external embedding model: per-frame aHash
-    * fingerprints ([[gifFrameAHashes]]) → per-clip DISTINCT frame-hash sets
-    * → Hamming-banded candidate clip pairs ([[DedupSuite
-    * .hammingBandedPairs]] applied at FRAME level: clips with some frame pair
-    * within `maxHamming`, found by the pigeonhole segment join with NO
-    * all-pairs comparison) → EXACT verify on the
-    * sampled frames: per direction, the fraction of one clip's distinct
-    * frame hashes whose best match in the other is within `maxHamming`;
-    * a pair survives when the LARGER directional containment reaches
-    * `minOverlap` (max handles trims: a trimmed clip is fully contained in
-    * its original while the reverse fraction reports the trim).
-    *
-    * Output: (id_a, id_b, m_a, n_a, m_b, n_b, overlap) — matched/total
-    * distinct frame hashes per side (exact integers) and the containment
-    * score (one IEEE division per side + greatest, oracle-replayable).
-    *
-    * Scale shape: one demux+hash pass per clip (the frame table is
-    * materialized once, localCheckpoint, before the band and verify joins —
-    * payload bytes never ride any join); the band join keys on 16-bit
-    * segments; the verify join carries candidate clips' frame hashes only
-    * (#cand × frames² small rows — frames per clip are bounded by the
-    * sampling, candidates by the banding). */
-  def videoNearDupPairs(media: DataFrame, every: Int = 1, maxHamming: Int = 3,
-                        minOverlap: Double = 0.5): DataFrame = {
+  /** The per-clip DISTINCT frame-hash relation (media_id, fp): what every
+    * video near-dup path bands and verifies, and what the video index
+    * stores. */
+  private def frameHashSets(media: DataFrame, every: Int): DataFrame =
+    gifFrameAHashes(media, every).toDF().select(col("media_id"), col("fp")).distinct()
+
+  /** The `minOverlap` check of the video near-dup family (batch, index and
+    * streaming). */
+  private[graft] def requireMinOverlap(minOverlap: Double): Unit =
     require(minOverlap > 0.0 && minOverlap <= 1.0, s"bad minOverlap=$minOverlap")
-    val vf = gifFrameAHashes(media, every).toDF()
-      .select(col("media_id"), col("fp")).distinct().localCheckpoint()
-    // candidate clips: some frame pair within maxHamming. A pair that only
-    // shares a segment has no such frame pair, so m_a = m_b = 0 and its
-    // overlap 0 is below any minOverlap > 0 — dropping it early changes no
-    // output row
-    val cand = DedupSuite.hammingBandedPairs(vf, "media_id", "fp", 64, maxHamming)
-      .select(col("id_a"), col("id_b")).distinct()
-    val pf = cand
-      .join(vf.select(col("media_id").as("id_a"), col("fp").as("_fpa")), Seq("id_a"))
-      .join(vf.select(col("media_id").as("id_b"), col("fp").as("_fpb")), Seq("id_b"))
+
+  /** The one directional-containment verify of the video near-dup family
+    * ([[videoNearDupPairs]], [[videoNearDupAgainstIndex]]). From the
+    * frame-level banded pairs `framePairs` (id_a, id_b, …) it takes the
+    * candidate clip pairs, attaches both clips' distinct frame hashes
+    * (`left`/`right`: media_id, fp) and, per direction, counts the clip's
+    * frames whose best match in the other is within `maxHamming` (m) out of
+    * its distinct frames (n); a pair survives when the LARGER m/n reaches
+    * `minOverlap` (max handles trims: a trimmed clip is fully contained in
+    * its original while the reverse fraction reports the trim). A clip pair
+    * that only shares a segment has no frame pair within maxHamming, so its
+    * overlap 0 is below any minOverlap > 0 — taking candidates from the
+    * verified frame pairs drops it early and changes no output row. Output
+    * (id_a, id_b, m_a, n_a, m_b, n_b, overlap). */
+  private def containmentVerified(framePairs: DataFrame, left: DataFrame,
+                                  right: DataFrame, maxHamming: Int,
+                                  minOverlap: Double): DataFrame = {
+    val pf = framePairs.select(col("id_a"), col("id_b")).distinct()
+      .join(left.select(col("media_id").as("id_a"), col("fp").as("_fpa")), Seq("id_a"))
+      .join(right.select(col("media_id").as("id_b"), col("fp").as("_fpb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), col("_fpa"), col("_fpb"),
         bit_count(col("_fpa").bitwiseXOR(col("_fpb"))).as("h"))
     def side(fpCol: String, mName: String, nName: String) = pf
@@ -785,6 +779,33 @@ object Multimodal {
       .filter(col("overlap") >= minOverlap)
   }
 
+  /** VIDEO near-duplicate pairs — re-encoded, trimmed, and partially-edited
+    * clips — without an external embedding model: per-frame aHash
+    * fingerprints ([[gifFrameAHashes]]) → per-clip DISTINCT frame-hash sets
+    * ([[frameHashSets]]) → Hamming-banded candidate clip pairs (the
+    * [[DedupSuite.HammingBands]] self join applied at FRAME level: clips
+    * with some frame pair within `maxHamming`, NO all-pairs comparison) →
+    * EXACT directional-containment verify on the sampled frames
+    * ([[containmentVerified]]).
+    *
+    * Output: (id_a, id_b, m_a, n_a, m_b, n_b, overlap) — matched/total
+    * distinct frame hashes per side (exact integers) and the containment
+    * score (one IEEE division per side + greatest, oracle-replayable).
+    *
+    * Scale shape: one demux+hash pass per clip (the frame table is
+    * materialized once, localCheckpoint, before the band and verify joins —
+    * payload bytes never ride any join); the band join keys on 16-bit
+    * segments; the verify join carries candidate clips' frame hashes only
+    * (#cand × frames² small rows — frames per clip are bounded by the
+    * sampling, candidates by the banding). */
+  def videoNearDupPairs(media: DataFrame, every: Int = 1, maxHamming: Int = 3,
+                        minOverlap: Double = 0.5): DataFrame = {
+    val bands = DedupSuite.HammingBands(64, maxHamming)
+    requireMinOverlap(minOverlap)
+    val vf = frameHashSets(media, every).localCheckpoint()
+    containmentVerified(bands.pairs(vf, "media_id", "fp"), vf, vf, maxHamming, minOverlap)
+  }
+
   // ─── persisted fingerprint indexes ([[MediaIndex]] compositions) ───────────
   //
   // The batch near-dup operators above re-decode every payload every run;
@@ -795,9 +816,8 @@ object Multimodal {
   // the indexed side), exact-verify on the stored arrays. The q76/q150
   // incremental-ingest shape for the three media modalities.
 
-  private val AudioIndexKind = "audio_energy_64"
-  private val VideoIndexKind = "video_frame_ahash_64"
-  private def imageIndexKind(hashKind: String) = s"image_${hashKind}_64"
+  private[graft] val AudioIndexKind = "audio_energy_64"
+  private[graft] val VideoIndexKind = "video_frame_ahash_64"
 
   /** Persist the audio energy-fingerprint index for `media` (one decode per
     * clip, then never again). */
@@ -817,20 +837,12 @@ object Multimodal {
     * hamming, l1), the q153 verify arithmetic. */
   def audioNearDupAgainstIndex(newMedia: DataFrame, path: String,
                                maxHamming: Int = 3): DataFrame = {
-    val idx = MediaIndex.load(newMedia.sparkSession, path)
-    require(idx.kind == AudioIndexKind,
-      s"audioNearDupAgainstIndex: index at $path holds '${idx.kind}', not '$AudioIndexKind'")
+    val bands = DedupSuite.HammingBands(64, maxHamming)
+    val idx = MediaIndex.loadKind(newMedia.sparkSession, path,
+      "audioNearDupAgainstIndex", AudioIndexKind)
     val probes = audioEnergyHashes(newMedia, frames = 64).toDF().localCheckpoint()
-    val cand = DedupSuite.hammingBandedPairsAcross(
-      probes.select(col("media_id"), col("fp")),
-      idx.fingerprints.select(col("media_id"), col("fp")),
-      "media_id", "fp", bits = 64, maxHamming = maxHamming)
-    cand
-      .join(probes.select(col("media_id").as("id_a"), col("energies").as("_ea")), Seq("id_a"))
-      .join(idx.fingerprints.select(col("media_id").as("id_b"), col("energies").as("_eb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("hamming"),
-        aggregate(zip_with(col("_ea"), col("_eb"),
-          (a, b) => abs(a - b)), lit(0L), (acc, v) => acc + v).as("l1"))
+    l1Verified(bands.across(probes, idx.fingerprints, "media_id", "fp"),
+      probes, idx.fingerprints, "energies")
   }
 
   /** Persist the image perceptual-hash index ("ahash" or "dhash" — the kind
@@ -838,93 +850,61 @@ object Multimodal {
   def saveImageIndex(media: DataFrame, path: String,
                      hashKind: String = "ahash"): Unit =
     MediaIndex.save(imageHashesOf(media, hashKind).toDF(),
-      imageIndexKind(hashKind), path)
+      imageHashKind(hashKind).indexKind, path)
 
   /** Append new images' fingerprints as a fresh committed generation. */
   def appendToImageIndex(media: DataFrame, path: String,
                          hashKind: String = "ahash"): Unit =
     MediaIndex.append(imageHashesOf(media, hashKind).toDF(),
-      imageIndexKind(hashKind), path)
+      imageHashKind(hashKind).indexKind, path)
 
-  private def imageHashesOf(media: DataFrame, hashKind: String): Dataset[ImageHash] =
-    hashKind match {
-      case "ahash" => imageAHashes(media)
-      case "dhash" => imageDHashes(media)
-      case other => throw new IllegalArgumentException(
-        s"hashKind must be ahash|dhash, got '$other'")
-    }
+  /** Load an image index, rejecting a non-image kind, with the probe hash
+    * family its kind maps to in [[ImageHashKinds]] — a caller cannot band
+    * ahash probes into a dhash catalog. */
+  private[graft] def loadImageIndex(spark: SparkSession, path: String,
+                                    caller: String): (MediaIndex.Index, String) = {
+    val idx = MediaIndex.loadKind(spark, path, caller, ImageHashKinds.map(_.indexKind): _*)
+    (idx, ImageHashKinds.find(_.indexKind == idx.kind).get.hashKind)
+  }
 
   /** Near-dup NEW images against the persisted index; the probe hash family
-    * comes from the INDEX meta (a caller cannot band ahash probes into a
-    * dhash catalog). Output (id_a = new, id_b = indexed, hamming, l1). */
+    * comes from the INDEX meta ([[loadImageIndex]]). Output (id_a = new,
+    * id_b = indexed, hamming, l1). */
   def imageNearDupAgainstIndex(newMedia: DataFrame, path: String,
                                maxHamming: Int = 3): DataFrame = {
-    val idx = MediaIndex.load(newMedia.sparkSession, path)
-    val hashKind = idx.kind match {
-      case "image_ahash_64" => "ahash"
-      case "image_dhash_64" => "dhash"
-      case other => throw new IllegalArgumentException(
-        s"imageNearDupAgainstIndex: index at $path holds '$other', not an image kind")
-    }
+    val bands = DedupSuite.HammingBands(64, maxHamming)
+    val (idx, hashKind) = loadImageIndex(newMedia.sparkSession, path,
+      "imageNearDupAgainstIndex")
     val probes = imageHashesOf(newMedia, hashKind).toDF().localCheckpoint()
-    val cand = DedupSuite.hammingBandedPairsAcross(
-      probes.select(col("media_id"), col("fp")),
-      idx.fingerprints.select(col("media_id"), col("fp")),
-      "media_id", "fp", bits = 64, maxHamming = maxHamming)
-    cand
-      .join(probes.select(col("media_id").as("id_a"), col("gray").as("_ga")), Seq("id_a"))
-      .join(idx.fingerprints.select(col("media_id").as("id_b"), col("gray").as("_gb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("hamming"),
-        aggregate(zip_with(col("_ga"), col("_gb"),
-          (a, b) => abs(a - b).cast("long")), lit(0L), (acc, v) => acc + v).as("l1"))
+    l1Verified(bands.across(probes, idx.fingerprints, "media_id", "fp"),
+      probes, idx.fingerprints, "gray")
   }
 
   /** Persist the video frame-hash index: per-clip DISTINCT frame aHashes
-    * (media_id, fp) — the banding/verify relation of [[videoNearDupPairs]],
-    * demuxed once. */
+    * ([[frameHashSets]]) — the banding/verify relation of
+    * [[videoNearDupPairs]], demuxed once. */
   def saveVideoIndex(media: DataFrame, path: String, every: Int = 1): Unit =
-    MediaIndex.save(gifFrameAHashes(media, every).toDF()
-      .select(col("media_id"), col("fp")).distinct(), VideoIndexKind, path)
+    MediaIndex.save(frameHashSets(media, every), VideoIndexKind, path)
 
   /** Append new clips' distinct frame hashes as a fresh committed generation. */
   def appendToVideoIndex(media: DataFrame, path: String, every: Int = 1): Unit =
-    MediaIndex.append(gifFrameAHashes(media, every).toDF()
-      .select(col("media_id"), col("fp")).distinct(), VideoIndexKind, path)
+    MediaIndex.append(frameHashSets(media, every), VideoIndexKind, path)
 
   /** Near-dup NEW clips against the persisted frame-hash index — the
     * [[videoNearDupPairs]] chain with the catalog side's frames read from
-    * parquet: frame-level banding across probe/index, then the directional
-    * containment verify on both sides' distinct frame-hash sets. Output
+    * parquet: frame-level banding across probe/index, then
+    * [[containmentVerified]] on both sides' distinct frame-hash sets. Output
     * (id_a = new clip, id_b = indexed clip, m_a, n_a, m_b, n_b, overlap). */
   def videoNearDupAgainstIndex(newMedia: DataFrame, path: String,
                                every: Int = 1, maxHamming: Int = 3,
                                minOverlap: Double = 0.5): DataFrame = {
-    require(minOverlap > 0.0 && minOverlap <= 1.0, s"bad minOverlap=$minOverlap")
-    val idx = MediaIndex.load(newMedia.sparkSession, path)
-    require(idx.kind == VideoIndexKind,
-      s"videoNearDupAgainstIndex: index at $path holds '${idx.kind}', not '$VideoIndexKind'")
-    val vfNew = gifFrameAHashes(newMedia, every).toDF()
-      .select(col("media_id"), col("fp")).distinct().localCheckpoint()
-    val vfIdx = idx.fingerprints
-    val cand = DedupSuite.hammingBandedPairsAcross(vfNew, vfIdx,
-        "media_id", "fp", bits = 64, maxHamming = maxHamming)
-      .select(col("id_a"), col("id_b")).distinct()
-    val pf = cand
-      .join(vfNew.select(col("media_id").as("id_a"), col("fp").as("_fpa")), Seq("id_a"))
-      .join(vfIdx.select(col("media_id").as("id_b"), col("fp").as("_fpb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("_fpa"), col("_fpb"),
-        bit_count(col("_fpa").bitwiseXOR(col("_fpb"))).as("h"))
-    def side(fpCol: String, mName: String, nName: String) = pf
-      .groupBy(col("id_a"), col("id_b"), col(fpCol))
-      .agg(min(col("h")).as("_mh"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as(nName),
-        sum(when(col("_mh") <= maxHamming, 1L).otherwise(0L)).as(mName))
-    side("_fpa", "m_a", "n_a").join(side("_fpb", "m_b", "n_b"), Seq("id_a", "id_b"))
-      .select(col("id_a"), col("id_b"), col("m_a"), col("n_a"), col("m_b"), col("n_b"),
-        greatest(col("m_a").cast("double") / col("n_a").cast("double"),
-          col("m_b").cast("double") / col("n_b").cast("double")).as("overlap"))
-      .filter(col("overlap") >= minOverlap)
+    val bands = DedupSuite.HammingBands(64, maxHamming)
+    requireMinOverlap(minOverlap)
+    val idx = MediaIndex.loadKind(newMedia.sparkSession, path,
+      "videoNearDupAgainstIndex", VideoIndexKind)
+    val vfNew = frameHashSets(newMedia, every).localCheckpoint()
+    containmentVerified(bands.across(vfNew, idx.fingerprints, "media_id", "fp"),
+      vfNew, idx.fingerprints, maxHamming, minOverlap)
   }
 
   final case class MediaFrame(media_id: Long, frame_idx: Int, frame: Array[Byte])

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import graft.operators.DedupSuite.HammingBands
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -21,6 +22,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale: state is partitioned by project id (thousands of keys, tiny payloads);
   * watermarked windows bound the state store; both run identically on a real
   * cluster with checkpointed exactly-once sinks.
+  *
+  * Streaming near-dup family: band keys and the within-`maxHamming` test come
+  * from `DedupSuite.HammingBands`, the index kind check from
+  * `MediaIndex.loadKind`; the in-window min-id election is
+  * [[minIdBandElection]] and the stateless index probe is
+  * [[saltedBandLookup]], each written once here. The video ingest's
+  * containment verify stays a per-row function over two arrays (the batch
+  * one is a join + aggregate) and shares only the band rule and
+  * `Multimodal.requireMinOverlap`.
   */
 object EventPipeline {
 
@@ -129,31 +139,6 @@ object EventPipeline {
       .dropDuplicatesWithinWatermark("canonical_url")
   }
 
-  /** Streaming NEAR-dup ingest dedup — the streaming twin of
-    * `DedupSuite.incrementalDedup`, with each event-time window as the
-    * dedup scope. Two chained stateful windowed aggregations (Append mode):
-    *
-    *   1. each doc's MinHash band keys (computed per-row with the pure
-    *      column-fold signature — no mid-stream aggregate, unlike the batch
-    *      path's staged groupBy) explode to (band_idx, band_key) rows, and a
-    *      windowed aggregation elects a DETERMINISTIC winner per band key:
-    *      the minimum doc id seen in the window — bounded state (one id per
-    *      live band key), finalized when the watermark closes the window;
-    *   2. a second windowed count re-assembles verdicts: a doc survives iff
-    *      it won ALL `bands` of its keys. Survivors emit as
-    *      (window_start, doc id).
-    *
-    * The min-id winner makes same-batch (and same-window) near-dup clusters
-    * safe: within a window, every band bucket of the cluster's minimum-id doc
-    * contains only docs with ids >= it, so that doc wins all its bands and
-    * survives — exactly the batch twin's min-id canonical
-    * (`DedupSuite.canonicalByCluster`). An arbitrary-order first-seen dedup
-    * (`dropDuplicatesWithinWatermark`) could instead split a cluster's bands
-    * across two same-batch arrivals and drop EVERY copy.
-    *
-    * Recall contract: near-dups are only detected within one `windowLen`
-    * window of each other; a copy arriving in a later window is kept. (The
-    * watermark bounds state and lateness, as everywhere else.) */
   /** Streaming decontamination — the streaming twin of
     * [[graft.operators.Decontamination.decontaminate]]: drop arriving docs that
     * share any word n-gram shingle with the STATIC eval set. The eval-set
@@ -320,17 +305,16 @@ object EventPipeline {
     *   1. hash in-scan: each arriving clip decodes ONCE to its 64-bit energy
     *      fingerprint ([[graft.operators.Multimodal.audioFingerprintOf]]) —
     *      payload bytes never survive past this projection;
-    *   2. index check, STATELESS: the committed index fingerprints group
-    *      into a per-band-key bucket table (built once, materialized), and
-    *      each probe row looks up its maxHamming+1 band keys via
-    *      stream-static left joins — a clip drops iff any bucket holds an
-    *      index fingerprint within `maxHamming` (the q153/q161 near-dup
-    *      criterion; the exact-L1 report stays a batch concern);
-    *   3. in-window banding, the two chained stateful aggregations of
-    *      [[streamingNearDupDedup]]: min-id winner per (window, band
-    *      segment), survive iff all bands won — same-window re-encodes and
-    *      nudges collapse to the minimum id, emitted when the watermark
-    *      closes the window.
+    *   2. index check, STATELESS ([[saltedBandLookup]]): each probe row
+    *      looks up its maxHamming+1 band keys in the committed index's
+    *      bucket table via stream-static left joins — a clip drops iff any
+    *      bucket holds an index fingerprint within `maxHamming` (the
+    *      q153/q161 near-dup criterion; the exact-L1 report stays a batch
+    *      concern);
+    *   3. in-window banding ([[minIdBandElection]]): min-id winner per
+    *      (window, band segment), survive iff all bands won — same-window
+    *      re-encodes and nudges collapse to the minimum id, emitted when
+    *      the watermark closes the window.
     *
     * Recall contract (inherited): in-window banding only pairs clips within
     * one `windowLen` of each other; the index catches everything CATALOGED
@@ -348,17 +332,17 @@ object EventPipeline {
                                 maxHamming: Int = 3,
                                 maxBucket: Int = DefaultMaxBandBucket): DataFrame = {
     import graft.operators.{MediaIndex, Multimodal}
+    val bands = HammingBands(64, maxHamming)
     val spark = media.sparkSession
     import spark.implicits._
-    val idx = MediaIndex.load(spark, indexPath)
-    require(idx.kind == "audio_energy_64",
-      s"streamingAudioIngestDedup: index at $indexPath holds '${idx.kind}'")
+    val idx = MediaIndex.loadKind(spark, indexPath, "streamingAudioIngestDedup",
+      Multimodal.AudioIndexKind)
     val hashed = media.select(col("media_id"), col(tsCol).as("_ts"), col("payload"))
       .as[(Long, Timestamp, Array[Byte])]
       .mapPartitions(_.map { case (id, ts, payload) =>
         (id, ts, Multimodal.audioFingerprintOf(id, payload))
       }).toDF("media_id", "_ts", "fp")
-    scalarFpIngestDedup(hashed, idx.fingerprints, watermark, windowLen, maxHamming, maxBucket)
+    scalarFpIngestDedup(hashed, idx.fingerprints, watermark, windowLen, bands, maxBucket)
   }
 
   /** Streaming IMAGE ingest dedup — [[streamingAudioIngestDedup]]'s shape
@@ -375,16 +359,12 @@ object EventPipeline {
                                 windowLen: String = "10 minutes",
                                 maxHamming: Int = 3,
                                 maxBucket: Int = DefaultMaxBandBucket): DataFrame = {
-    import graft.operators.{MediaIndex, Multimodal}
+    import graft.operators.Multimodal
+    val bands = HammingBands(64, maxHamming)
     val spark = media.sparkSession
     import spark.implicits._
-    val idx = MediaIndex.load(spark, indexPath)
-    val hashKind = idx.kind match {
-      case "image_ahash_64" => "ahash"
-      case "image_dhash_64" => "dhash"
-      case other => throw new IllegalArgumentException(
-        s"streamingImageIngestDedup: index at $indexPath holds '$other', not an image kind")
-    }
+    val (idx, hashKind) = Multimodal.loadImageIndex(spark, indexPath,
+      "streamingImageIngestDedup")
     val hashed = media.select(col("media_id"), col(tsCol).as("_ts"), col("payload"))
       .as[(Long, Timestamp, Array[Byte])]
       .mapPartitions { it =>
@@ -393,7 +373,7 @@ object EventPipeline {
           (id, ts, Multimodal.imageFingerprintOf(id, payload, hashKind))
         }
       }.toDF("media_id", "_ts", "fp")
-    scalarFpIngestDedup(hashed, idx.fingerprints, watermark, windowLen, maxHamming, maxBucket)
+    scalarFpIngestDedup(hashed, idx.fingerprints, watermark, windowLen, bands, maxBucket)
   }
 
   /** Per-row candidate cap for the streaming twins' static band-bucket
@@ -440,69 +420,57 @@ object EventPipeline {
       .agg(collect_list(col("_pay")).as("_cands")))
   }
 
+  /** The one salted stream-static band lookup of the streaming media
+    * ingests: the static `catalog` (a frame with an `fp` column) explodes to
+    * one row per band segment carrying `payload`, groups into salt-split
+    * per-(band, key) candidate arrays ([[saltedBandBuckets]], materialized
+    * once at query start, not per micro-batch), and each `probes` row looks
+    * up its band keys with one stateless left join per (band, salt)
+    * sub-bucket. Each join is 1:1 on the unique (band, key, salt) key, so a
+    * probe stays ONE ROW (no stateful re-aggregation) with every candidate
+    * array bounded; nSalt is 1 for healthy catalogs — the plan is then
+    * exactly the unsalted one. Returns the joined probes and the candidate
+    * array columns (null where a band key has no bucket). */
+  private def saltedBandLookup(probes: DataFrame, catalog: DataFrame, payload: Column,
+                               bands: HammingBands,
+                               maxBucket: Int, what: String): (DataFrame, Seq[Column]) = {
+    val exploded = catalog.select(payload.as("_pay"),
+      posexplode(bands.keys(col("fp"))).as(Seq("_bidx", "_bkey")))
+    val (nSalt, buckets0) = saltedBandBuckets(exploded, maxBucket, what)
+    val buckets = buckets0.localCheckpoint()
+    val slots = for { b <- 0 until bands.bands; s <- 0 until nSalt } yield (b, s)
+    val joined = slots.foldLeft(probes) { case (acc, (b, s)) =>
+      acc.join(buckets.filter(col("_bidx") === b && col("_salt") === s)
+        .select(col("_bkey").as(s"_k${b}_$s"), col("_cands").as(s"_c${b}_$s")),
+        bands.segOf(col("fp"), b) === col(s"_k${b}_$s"), "left_outer")
+    }
+    (joined, slots.map { case (b, s) => col(s"_c${b}_$s") })
+  }
+
   /** The shared scalar-fingerprint ingest-dedup chain behind the audio and
-    * image streaming twins: a stateless per-band stream-static lookup
-    * against the persisted index (drop iff any bucket holds a catalog
-    * fingerprint within `maxHamming`), then the [[streamingNearDupDedup]]
-    * two-stage min-id election for same-window duplicates.
+    * image streaming twins: a [[saltedBandLookup]] against the persisted
+    * index (drop iff any bucket holds a catalog fingerprint within
+    * `maxHamming`), then the [[minIdBandElection]] for same-window
+    * duplicates.
     *
     * Recall contract: in-window banding only pairs items within one
     * `windowLen` of each other; the index catches everything CATALOGED
     * regardless of arrival time. State: one id per live band bucket. */
   private def scalarFpIngestDedup(hashed: DataFrame, idxFps: DataFrame,
                                   watermark: String, windowLen: String,
-                                  maxHamming: Int,
-                                  maxBucket: Int = DefaultMaxBandBucket): DataFrame = {
-    val bands = maxHamming + 1
-    require(64 % bands == 0, s"64 bits not divisible by $bands bands")
-    val seg = 64 / bands
-    // seg == 64 (maxHamming = 0, exact-dup mode): 1L << 64 wraps to 1 on the
-    // JVM and a zero mask would collapse every band key to 0
-    val segMask = if (seg == 64) -1L else (1L << seg) - 1
-    def segOf(fp: Column, b: Int): Column =
-      shiftrightunsigned(fp, (bands - 1 - b) * seg).bitwiseAND(lit(segMask))
-    // static per-band bucket table, one row per (band, key, salt) with its
-    // indexed fingerprints — materialized once, not re-derived per
-    // micro-batch. The fingerprints DEDUP first (a degenerate catalog slice
+                                  bands: HammingBands,
+                                  maxBucket: Int): DataFrame = {
+    // the catalog fingerprints DEDUP first (a degenerate catalog slice
     // sharing one fingerprint — all-black frames, silence — is one set
-    // entry as far as the within-maxHamming verdict cares), and what
-    // remains is salt-split so no bucket row's array exceeds `maxBucket`.
-    val exploded = idxFps.select(col("fp")).distinct()
-      .select(col("fp").as("_pay"),
-        posexplode(array((0 until bands).map(segOf(col("fp"), _)): _*))
-          .as(Seq("_bidx", "_bkey")))
-    val (nSalt, idxBands0) = saltedBandBuckets(exploded, maxBucket, "scalar-fp")
-    val idxBands = idxBands0.localCheckpoint()
-    // one stateless stream-static lookup per (band, salt) sub-bucket — each
-    // join is 1:1 on the unique (band, key, salt) key, so the probe stays
-    // ONE ROW (no stateful re-aggregation needed) with every candidate
-    // array bounded; a probe drops iff ANY of its sub-buckets holds an
-    // indexed fingerprint within maxHamming. nSalt is 1 for healthy
-    // catalogs — the plan is then exactly the unsalted one.
-    val slots = for { b <- 0 until bands; s <- 0 until nSalt } yield (b, s)
-    val joined = slots.foldLeft(hashed) { case (acc, (b, s)) =>
-      acc.join(
-        idxBands.filter(col("_bidx") === b && col("_salt") === s)
-          .select(col("_bkey").as(s"_k${b}_$s"), col("_cands").as(s"_fps${b}_$s")),
-        segOf(col("fp"), b) === col(s"_k${b}_$s"), "left_outer")
-    }
-    val idxHit = slots.map { case (b, s) =>
-      coalesce(exists(col(s"_fps${b}_$s"), f =>
-        bit_count(f.bitwiseXOR(col("fp"))) <= maxHamming), lit(false)) }
-      .reduce(_ || _)
+    // entry as far as the within-maxHamming verdict cares)
+    val (joined, cands) = saltedBandLookup(hashed, idxFps.select(col("fp")).distinct(),
+      col("fp"), bands, maxBucket, "scalar-fp")
+    val idxHit = cands.map(c =>
+      coalesce(exists(c, f => bands.within(f, col("fp"))), lit(false))).reduce(_ || _)
     val clean = joined.filter(!idxHit).select(col("media_id"), col("_ts"), col("fp"))
-    // in-window banding: the streamingNearDupDedup two-stage min-id election
-    clean
-      .select(col("media_id"), col("_ts"), posexplode(
-        array((0 until bands).map(segOf(col("fp"), _)): _*))
-        .as(Seq("band_idx", "band_key")))
-      .withWatermark("_ts", watermark)
-      .groupBy(window(col("_ts"), windowLen), col("band_idx"), col("band_key"))
-      .agg(min(col("media_id")).as("winner"))
-      .groupBy(col("window"), col("winner"))
-      .agg(count(lit(1)).as("n_won"))
-      .filter(col("n_won") === bands)
-      .select(col("window.start").as("window_start"), col("winner").as("media_id"))
+    minIdBandElection(clean.select(col("media_id"), col("_ts"),
+      posexplode(bands.keys(col("fp"))).as(Seq("band_idx", "band_key"))),
+      "media_id", "_ts", watermark, windowLen, bands.bands)
   }
 
   /** Streaming VIDEO ingest dedup — the modality-completing twin: each
@@ -535,29 +503,13 @@ object EventPipeline {
                                 minOverlap: Double = 0.5,
                                 maxBucket: Int = DefaultMaxBandBucket): DataFrame = {
     import graft.operators.{MediaIndex, Multimodal}
-    require(minOverlap > 0.0 && minOverlap <= 1.0, s"bad minOverlap=$minOverlap")
+    val bands = HammingBands(64, maxHamming)
+    Multimodal.requireMinOverlap(minOverlap)
     val spark = media.sparkSession
     import spark.implicits._
-    val idx = MediaIndex.load(spark, indexPath)
-    require(idx.kind == "video_frame_ahash_64",
-      s"streamingVideoIngestDedup: index at $indexPath holds '${idx.kind}'")
-    val bands = maxHamming + 1
-    require(64 % bands == 0, s"64 bits not divisible by $bands bands")
-    val seg = 64 / bands
-    val segMask = if (seg == 64) -1L else (1L << seg) - 1
-    def segOf(fp: Column, b: Int): Column =
-      shiftrightunsigned(fp, (bands - 1 - b) * seg).bitwiseAND(lit(segMask))
-    // static side 1: per-band FRAME buckets carrying (id_b, fp) — the
-    // candidate generator (materialized once, not re-derived per batch),
-    // salt-split so a degenerate frame hash shared by a large catalog slice
-    // (all-black frames) cannot balloon one bucket row past `maxBucket`
-    val bandExploded = idx.fingerprints
-      .select(struct(col("media_id").as("id_b"), col("fp")).as("_pay"),
-        posexplode(array((0 until bands).map(segOf(col("fp"), _)): _*))
-          .as(Seq("_bidx", "_bkey")))
-    val (nSalt, idxBands0) = saltedBandBuckets(bandExploded, maxBucket, "video-frame")
-    val idxBands = idxBands0.localCheckpoint()
-    // static side 2: per-clip distinct frame arrays — the verify side
+    val idx = MediaIndex.loadKind(spark, indexPath, "streamingVideoIngestDedup",
+      Multimodal.VideoIndexKind)
+    // static verify side: per-clip distinct frame arrays
     val idxClips = idx.fingerprints
       .groupBy(col("media_id").as("id_b"))
       .agg(collect_list(col("fp")).as("_fps_b"))
@@ -571,21 +523,18 @@ object EventPipeline {
         }
       }.toDF("media_id", "_ts", "fps")
     // frame-level band probes; every frame row keeps the clip's full array
-    // so the verify below is a per-row HOF, not another aggregation
+    // so the verify below is a per-row HOF, not another aggregation. The
+    // static candidate buckets carry (id_b, fp) per catalog FRAME — salt-split
+    // so a degenerate frame hash shared by a large catalog slice
+    // (all-black frames) cannot balloon one bucket row past `maxBucket`
     val frames = hashed.select(col("media_id"), col("_ts"), col("fps"),
       explode(col("fps")).as("fp"))
-    val slots = for { b <- 0 until bands; s <- 0 until nSalt } yield (b, s)
-    val withCands = slots.foldLeft(frames) { case (acc, (b, s)) =>
-      acc.join(idxBands.filter(col("_bidx") === b && col("_salt") === s)
-        .select(col("_bkey").as(s"_k${b}_$s"), col("_cands").as(s"_c${b}_$s")),
-        segOf(col("fp"), b) === col(s"_k${b}_$s"), "left_outer")
-    }
+    val (withCands, cands) = saltedBandLookup(frames, idx.fingerprints,
+      struct(col("media_id").as("id_b"), col("fp")), bands, maxBucket, "video-frame")
     // candidate catalog clips for THIS frame: ids whose bucketed frame is
     // within maxHamming (null band joins drop out of the flatten)
-    val perBand = slots.map { case (b, s) =>
-      transform(filter(col(s"_c${b}_$s"), st =>
-        bit_count(st.getField("fp").bitwiseXOR(col("fp"))) <= maxHamming),
-        st => st.getField("id_b")) }
+    val perBand = cands.map(c => transform(
+      filter(c, st => bands.within(st.getField("fp"), col("fp"))), st => st.getField("id_b")))
     val candIds = array_distinct(flatten(
       filter(array(perBand: _*), a => a.isNotNull)))
     // pair-level dedup FIRST (the batch twin's cand.distinct() discipline):
@@ -604,10 +553,8 @@ object EventPipeline {
     // per-pair containment verify, q163's exact arithmetic: m/n per side
     // over the two distinct frame-hash arrays, IEEE divisions, greatest
     // (candidate-less clips ride the null-id_b row with overlap 0)
-    val mA = size(filter(col("fps"), fa =>
-      exists(col("_fps_b"), fb => bit_count(fa.bitwiseXOR(fb)) <= maxHamming)))
-    val mB = size(filter(col("_fps_b"), fb =>
-      exists(col("fps"), fa => bit_count(fa.bitwiseXOR(fb)) <= maxHamming)))
+    val mA = size(filter(col("fps"), fa => exists(col("_fps_b"), fb => bands.within(fa, fb))))
+    val mB = size(filter(col("_fps_b"), fb => exists(col("fps"), fa => bands.within(fa, fb))))
     val overlap = when(col("id_b").isNull, lit(0.0)).otherwise(
       greatest(mA.cast("double") / size(col("fps")).cast("double"),
         mB.cast("double") / size(col("_fps_b")).cast("double")))
@@ -648,6 +595,24 @@ object EventPipeline {
     graft.operators.UnigramLm.encodeUnigramToIds(docs, idCol, textCol,
       model, maxPieceLen)
 
+  /** Streaming NEAR-dup ingest dedup — the streaming twin of
+    * `DedupSuite.incrementalDedup`, with each event-time window as the
+    * dedup scope. Two chained stateful windowed aggregations (Append mode):
+    *
+    *   1. each doc's MinHash band keys (computed per-row with the pure
+    *      column-fold signature — no mid-stream aggregate, unlike the batch
+    *      path's staged groupBy) explode to (band_idx, band_key) rows;
+    *   2. [[minIdBandElection]] keeps the docs that won ALL `bands` of their
+    *      keys. Survivors emit as (window_start, doc id).
+    *
+    * The min-id winner makes same-batch (and same-window) near-dup clusters
+    * safe; an arbitrary-order first-seen dedup
+    * (`dropDuplicatesWithinWatermark`) could instead split a cluster's bands
+    * across two same-batch arrivals and drop EVERY copy.
+    *
+    * Recall contract: near-dups are only detected within one `windowLen`
+    * window of each other; a copy arriving in a later window is kept. (The
+    * watermark bounds state and lateness, as everywhere else.) */
   def streamingNearDupDedup(docs: DataFrame, idCol: String, textCol: String,
                             tsCol: String, watermark: String = "1 hour",
                             windowLen: String = "10 minutes",
@@ -657,17 +622,33 @@ object EventPipeline {
     import graft.operators.DedupSuite
     val sig = DedupSuite.minHashSignature(
       TextFunctions.wordShingles(col(textCol), shingleSize), numHashes)
-    docs
+    minIdBandElection(docs
       .withColumn("bnd", DedupSuite.lshBands(sig, numHashes, bands))
       .select(col(idCol), col(tsCol), posexplode(col("bnd"))
-        .as(Seq("band_idx", "band_key")))
+        .as(Seq("band_idx", "band_key"))), idCol, tsCol, watermark, windowLen, bands)
+  }
+
+  /** The one in-window min-id band election of the streaming near-dup
+    * family ([[streamingNearDupDedup]] and the audio/image ingests): over
+    * (idCol, tsCol, band_idx, band_key) rows, a windowed aggregation elects
+    * a DETERMINISTIC winner per band key — the minimum id seen in the
+    * window; bounded state (one id per live band key), finalized when the
+    * watermark closes the window — then a second windowed count keeps the
+    * ids that won ALL `bands` of their keys. Output (window_start, idCol).
+    *
+    * Within a window, every band bucket of a near-dup cluster's minimum-id
+    * item holds only ids >= it, so that item wins all its bands and
+    * survives — the batch twin's min-id canonical
+    * (`DedupSuite.canonicalByCluster`). */
+  private def minIdBandElection(banded: DataFrame, idCol: String, tsCol: String,
+                                watermark: String, windowLen: String,
+                                bands: Int): DataFrame =
+    banded
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowLen), col("band_idx"), col("band_key"))
       .agg(min(col(idCol)).as("winner"))
       .groupBy(col("window"), col("winner"))
       .agg(count(lit(1)).as("n_won"))
       .filter(col("n_won") === bands)
-      .select(col("window.start").as("window_start"),
-        col("winner").as(idCol))
-  }
+      .select(col("window.start").as("window_start"), col("winner").as(idCol))
 }

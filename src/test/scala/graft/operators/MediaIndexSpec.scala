@@ -1,7 +1,11 @@
 package graft.operators
 
+import java.sql.Timestamp
+
 import graft.SparkSpec
+import graft.streaming.EventPipeline
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class MediaIndexSpec extends SparkSpec {
@@ -17,6 +21,15 @@ class MediaIndexSpec extends SparkSpec {
     val df = rows.map { case (id, g) =>
       (id, Multimodal.encodePngGray(8, 8, g)) }.toDF("media_id", "payload")
     Multimodal.asMediaFrame(df, "media_id", "payload", "image")
+  }
+
+  private def gifMedia(rows: (Long, Array[Byte])*): DataFrame = Multimodal.asMediaFrame(
+    rows.toSeq.toDF("media_id", "payload"), "media_id", "payload", "video")
+
+  /** An arriving (media_id, payload, ts) stream, as the streaming ingests take it. */
+  private def mediaStream(): DataFrame = {
+    implicit val sc = spark.sqlContext
+    MemoryStream[(Long, Array[Byte], Timestamp)].toDF().toDF("media_id", "payload", "ts")
   }
 
   private val baseClip = Array.tabulate(2048)(t => (((t * 37 + 11) % 1000) + 100).toShort)
@@ -205,9 +218,31 @@ class MediaIndexSpec extends SparkSpec {
       Multimodal.appendToAudioIndex(wavMedia(1L -> otherClip), path))
     assert(clash.getMessage.contains("already indexed"))
     assert(MediaIndex.load(spark, path).nItems === 1L, "failed append must not commit")
-    val kind = intercept[IllegalArgumentException](
+    // kind mismatch: the append and all six loaders reject with the one
+    // shared message, naming the caller
+    def kindError(caller: String, p: String, held: String, want: String)(f: => Any) =
+      assert(intercept[IllegalArgumentException](f).getMessage ===
+        s"requirement failed: $caller: index at $p holds '$held' fingerprints, not $want")
+    val audio = "'audio_energy_64'"
+    kindError("MediaIndex.append", path, "audio_energy_64", "'image_ahash_64'")(
       MediaIndex.append(Seq((9L, 1L)).toDF("media_id", "fp"), "image_ahash_64", path))
-    assert(kind.getMessage.contains("audio_energy_64"))
+    val ipath = tempDir().resolve("imgidx_kind").toString
+    Multimodal.saveImageIndex(grayMedia(1L -> Array.tabulate(64)(p => p * 3)), ipath)
+    kindError("audioNearDupAgainstIndex", ipath, "image_ahash_64", audio)(
+      Multimodal.audioNearDupAgainstIndex(wavMedia(2L -> baseClip), ipath))
+    kindError("streamingAudioIngestDedup", ipath, "image_ahash_64", audio)(
+      EventPipeline.streamingAudioIngestDedup(mediaStream(), ipath, "ts"))
+    val images = "'image_ahash_64' or 'image_dhash_64'"
+    kindError("imageNearDupAgainstIndex", path, "audio_energy_64", images)(
+      Multimodal.imageNearDupAgainstIndex(grayMedia(2L -> Array.fill(64)(7)), path))
+    kindError("streamingImageIngestDedup", path, "audio_energy_64", images)(
+      EventPipeline.streamingImageIngestDedup(mediaStream(), path, "ts"))
+    val video = "'video_frame_ahash_64'"
+    val clip = Multimodal.encodeGifGray(Seq(Array.fill(64)(9)), 8, 8)
+    kindError("videoNearDupAgainstIndex", path, "audio_energy_64", video)(
+      Multimodal.videoNearDupAgainstIndex(gifMedia(2L -> clip), path))
+    kindError("streamingVideoIngestDedup", path, "audio_energy_64", video)(
+      EventPipeline.streamingVideoIngestDedup(mediaStream(), path, "ts"))
     val cols = intercept[IllegalArgumentException](
       MediaIndex.append(Seq((9L, 1L)).toDF("media_id", "fp"), "audio_energy_64", path))
     assert(cols.getMessage.contains("columns"))
@@ -252,8 +287,6 @@ class MediaIndexSpec extends SparkSpec {
     val full = Multimodal.encodeGifGray(frames(0 until 6, 0), 8, 8)
     val trimmed = Multimodal.encodeGifGray(frames(1 to 4, 0), 8, 8)
     val unrelated = Multimodal.encodeGifGray(frames(0 until 6, 131), 8, 8)
-    def gifMedia(rows: (Long, Array[Byte])*) = Multimodal.asMediaFrame(
-      rows.toSeq.toDF("media_id", "payload"), "media_id", "payload", "video")
     val path = tempDir().resolve("vididx").toString
     Multimodal.saveVideoIndex(gifMedia(1L -> full), path)
     Multimodal.appendToVideoIndex(gifMedia(2L -> unrelated), path)
@@ -263,5 +296,30 @@ class MediaIndexSpec extends SparkSpec {
     val r = out.head
     assert(r.getLong(0) === 60L && r.getLong(1) === 1L)
     assert(r.getDouble(6) === 1.0, "trimmed side must be fully contained")
+  }
+
+  test("a bad maxHamming fails before any Spark work: batch, index, streaming and SQL") {
+    // undecodable payloads and a missing index: any hashing or index read
+    // ahead of the check would fail with a different error
+    val junk = Multimodal.asMediaFrame(
+      Seq((1L, Array.fill[Byte](16)(0x5a))).toDF("media_id", "payload"),
+      "media_id", "payload", "image")
+    junk.createOrReplaceTempView("junk_media")
+    graft.expressions.SqlFunctions.registerAll(spark)
+    val missing = tempDir().resolve("no_index").toString
+    Seq(-1, 2, 5).foreach { mh =>
+      def rejects(f: => Any) = {
+        val msg = intercept[IllegalArgumentException](f).getMessage
+        assert(msg === "requirement failed: maxHamming must be one of 0, 1, 3, 7, 15, 31, 63 for " +
+          s"64-bit fingerprints (maxHamming + 1 segments must split the bits evenly), got $mh")
+      }
+      rejects(Multimodal.imageNearDupPairs(junk, maxHamming = mh))
+      rejects(Multimodal.audioNearDupPairs(junk, maxHamming = mh))
+      rejects(Multimodal.videoNearDupPairs(junk, maxHamming = mh))
+      rejects(Multimodal.imageNearDupAgainstIndex(junk, missing, maxHamming = mh))
+      rejects(EventPipeline.streamingAudioIngestDedup(mediaStream(), missing, "ts",
+        maxHamming = mh))
+      rejects(spark.sql(s"SELECT * FROM graft_image_neardup('junk_media', $mh)"))
+    }
   }
 }

@@ -123,6 +123,43 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("banded Hamming pairs ≡ naive all-pairs popcount, self and across forms") {
+    val rnd = new Random(64)
+    def flip(fp: Long, d: Int): Long =
+      rnd.shuffle((0 until 64).toList).take(d).foldLeft(fp)((f, b) => f ^ (1L << b))
+    def ham(a: Long, b: Long): Long = java.lang.Long.bitCount(a ^ b).toLong
+    Seq(0, 1, 3, 7).foreach { maxH =>
+      // random fingerprints, each with planted neighbours at every distance
+      // 0 … maxH+1 (0 = an exact copy, maxH+1 = just outside the bound)
+      val fps = Seq.fill(10)(rnd.nextLong())
+        .flatMap(b => b +: (0 to maxH + 1).map(flip(b, _)))
+        .zipWithIndex.map { case (fp, i) => (i.toLong, fp) }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+      // self form: each unordered pair once, with unique ids and with ids
+      // that own several rows (a clip's frame hashes: rows pair only across
+      // ids, id_a < id_b)
+      Seq(fps.size, 7).foreach { nIds =>
+        val byId = fps.map { case (i, fp) => (i % nIds, fp) }
+        val naive = for {
+          (ia, fa) <- byId; (ib, fb) <- byId if ia < ib && ham(fa, fb) <= maxH
+        } yield (ia, ib, ham(fa, fb))
+        assert(rows(DedupSuite.hammingBandedPairs(byId.toDF("id", "fp"), "id", "fp",
+          maxHamming = maxH)) === naive.sorted, s"self maxHamming=$maxH nIds=$nIds")
+        assert(naive.nonEmpty)
+      }
+      // across form: every (left, right) pair once, no id canonicalization
+      val (left, right) = fps.partition(_._1 % 3 == 0)
+      val naive = for {
+        (ia, fa) <- left; (ib, fb) <- right if ham(fa, fb) <= maxH
+      } yield (ia, ib, ham(fa, fb))
+      assert(rows(DedupSuite.hammingBandedPairsAcross(left.toDF("id", "fp"),
+        right.toDF("id", "fp"), "id", "fp", maxHamming = maxH)) === naive.sorted,
+        s"across maxHamming=$maxH")
+      assert(naive.nonEmpty)
+    }
+  }
+
   test("matrix pivot/unpivot round-trips the long table") {
     val rnd = new Random(42)
     val samples = Seq("s1", "s2", "s3")
