@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Benchmark decontamination — flag/drop training documents that share word
@@ -19,30 +18,23 @@ import org.apache.spark.sql.functions._
   */
 object Decontamination {
 
-  /** (id, gram) rows: distinct n-gram shingles per doc. Tokens are STAGED into
-    * a column before shingling — HOF lambdas re-evaluate their child tree per
-    * element, so an inlined split() would re-tokenize per shingle (O(n²)). */
-  private def docGrams(docs: DataFrame, idCol: String, textCol: String,
+  /** `keep` plus one `gram` row per DISTINCT n-gram shingle of each doc
+    * ([[DedupSuite.shingled]]). */
+  private def docGrams(docs: DataFrame, keep: Seq[Column], textCol: String,
                        n: Int): DataFrame =
-    docs
-      .select(col(idCol), TextFunctions.tokens(col(textCol)).as("_toks"))
-      .select(col(idCol), explode(array_distinct(
-        TextFunctions.wordShinglesOf(col("_toks"), n))).as("gram"))
+    DedupSuite.shingled(docs, keep, textCol, n)(g => explode(array_distinct(g)).as("gram"))
 
-  /** Distinct n-gram shingles of the eval set — one small frame to broadcast. */
-  private def evalGrams(evalDocs: DataFrame, textCol: String, n: Int): DataFrame =
-    evalDocs
-      .select(TextFunctions.tokens(col(textCol)).as("_toks"))
-      .select(explode(array_distinct(
-        TextFunctions.wordShinglesOf(col("_toks"), n))).as("gram"))
-      .distinct()
+  /** Distinct n-gram shingles of the eval set — one small frame to broadcast
+    * (or, for the streaming twin, to collect). */
+  private[graft] def evalGrams(evalDocs: DataFrame, textCol: String, n: Int): DataFrame =
+    docGrams(evalDocs, Nil, textCol, n).distinct()
 
   /** Per-contaminated-doc report: (id, n_hits) where n_hits counts the DISTINCT
     * corpus-doc shingles also present in the eval set. Docs with zero overlap
     * do not appear (at corpus scale the report is the small output). */
   def contaminationReport(docs: DataFrame, evalDocs: DataFrame,
                           idCol: String, textCol: String, n: Int): DataFrame =
-    docGrams(docs, idCol, textCol, n)
+    docGrams(docs, Seq(col(idCol)), textCol, n)
       .join(broadcast(evalGrams(evalDocs, textCol, n)), Seq("gram"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hits"))
@@ -63,12 +55,8 @@ object Decontamination {
     // materialized once: the gram frame feeds BOTH the hits join and the
     // n_grams totals — without this the eval set tokenizes+shingles twice
     // (the incrementalDedup inKeys discipline)
-    val ev = docGrams(evalDocs, idCol, textCol, n).localCheckpoint(true)
-    val corpusGrams = docs
-      .select(TextFunctions.tokens(col(textCol)).as("_toks"))
-      .select(explode(array_distinct(
-        TextFunctions.wordShinglesOf(col("_toks"), n))).as("gram"))
-    val hits = corpusGrams.join(broadcast(ev), Seq("gram"))
+    val ev = docGrams(evalDocs, Seq(col(idCol)), textCol, n).localCheckpoint(true)
+    val hits = docGrams(docs, Nil, textCol, n).join(broadcast(ev), Seq("gram"))
       .select(col(idCol), col("gram")).distinct()
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_hit"))
     ev.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))

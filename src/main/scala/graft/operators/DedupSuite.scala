@@ -20,6 +20,13 @@ import org.apache.spark.sql.functions._
   * Hamming near-dup family (SimHash here; the media fingerprints of
   * [[Multimodal]] and the streaming ingests): the `maxHamming` check, band
   * keys, within test and band join live once, in [[HammingBands]].
+  *
+  * Text near-dup family (MinHash, n-gram Jaccard and containment,
+  * [[Decontamination]], [[HeavyHitters]] and the streaming twins): the
+  * per-doc shingle relation ([[shingled]]), the MinHash band rule
+  * ([[MinHashBands]]), the first-matching-band predicate shared with the
+  * Hamming join ([[firstMatchingBand]]), the PPJoin prefix ([[prefixGrams]])
+  * and the verify regime ([[GramVerify]]) each live once, here.
   */
 object DedupSuite {
 
@@ -33,98 +40,114 @@ object DedupSuite {
 
   // ── MinHash + LSH ──────────────────────────────────────────────────────────
 
-  /** Per-row MinHash signature: array of `numHashes` minima over the document's
-    * shingles under a seeded 32-bit hash family built from ONE md5 per shingle
-    * (Broder's 2-universal construction): h_i = (a + i·b) mod 2³², where a/b
-    * are the digest's first two big-endian 32-bit hex words ([[md5Word]]). The
-    * independence across i is the standard pairwise guarantee MinHash sketches
-    * assume, and the family is DuckDB-expressible. Shingles are md5'd ONCE
-    * (inner transform); the per-seed passes reread the staged digests. No
-    * shuffle. */
+  /** The one MinHash band rule of the text near-dup family (batch
+    * [[minHashBandKeys]], the SQL `graft_minhash`/`graft_lsh_bands` and the
+    * streaming ingest): `numHashes` seeded minima cut into `bands` equal
+    * slices of `rows` consecutive hashes. Constructing it is the
+    * `numHashes % bands` check — every entry point builds its rule before
+    * any hashing. */
+  private[graft] final case class MinHashBands(numHashes: Int, bands: Int) {
+    require(numHashes % bands == 0, s"numHashes $numHashes not divisible by bands $bands")
+    private val rows = numHashes / bands
+
+    /** One key per band: `key` over the band's slice, `h(i)` the i-th hash. */
+    def keys(h: Int => Column, key: Seq[Column] => Column): Column =
+      array((0 until bands).map(b => key((0 until rows).map(r => h(b * rows + r)))): _*)
+  }
+
+  object MinHashBands {
+    /** Seed `i` of the hash family over one md5 per shingle (Broder's
+      * 2-universal construction): h_i = (a + i·b) mod 2³², where a/b are the
+      * digest's first two big-endian 32-bit hex words ([[md5Word]]). The
+      * independence across i is the standard pairwise guarantee MinHash
+      * sketches assume, and the family is DuckDB-expressible. */
+    def seeded(a: Column, b: Column, i: Int): Column =
+      (a + lit(i.toLong) * b) % lit(4294967296L)
+  }
+
+  /** Per-row MinHash signature: array of `numHashes` minima over the
+    * document's shingles under the [[MinHashBands.seeded]] family. Shingles
+    * are md5'd ONCE (inner transform); the per-seed passes reread the staged
+    * digests. No shuffle. */
   def minHashSignature(shingles: Column, numHashes: Int): Column = {
     val digests = transform(shingles, s => md5(s))
     array((0 until numHashes).map(i => array_min(transform(digests, d =>
-      (md5Word(d, 0) + lit(i.toLong) * md5Word(d, 1)) % lit(4294967296L)))): _*)
+      MinHashBands.seeded(md5Word(d, 0), md5Word(d, 1), i)))): _*)
   }
 
   /** LSH banding: split the signature into `bands` equal groups; band key = md5 of
     * the concatenated group. Docs sharing ANY band key become candidate pairs. */
-  def lshBands(signature: Column, numHashes: Int, bands: Int): Column = {
-    require(numHashes % bands == 0, s"numHashes $numHashes not divisible by bands $bands")
-    val rows = numHashes / bands
-    array((0 until bands).map { b =>
-      md5(concat_ws("|", (0 until rows).map(r => element_at(signature, b * rows + r + 1)): _*))
-    }: _*)
-  }
+  def lshBands(signature: Column, numHashes: Int, bands: Int): Column =
+    MinHashBands(numHashes, bands).keys(i => element_at(signature, i + 1),
+      slice => md5(concat_ws("|", slice: _*)))
 
-  /** Candidate near-duplicate pairs via MinHash LSH over word shingles.
-    * Output: (id_a, id_b) with id_a < id_b, distinct.
-    *
-    * Shape: explode shingles → hash-aggregate `numHashes` minima per doc (map-side
-    * partial agg; shuffles only (id, shingle-hash) bytes) → band keys from the
-    * signature attributes → equi-join on (band_idx, band_key). The per-row-HOF
-    * alternative re-evaluates the tokenizer inside every lambda element
-    * (interpreted, O(shingles × tokens) per seed per row) — measurably pathological
-    * even at 5k docs, hence the explicit staging here. */
   /** Exploded LSH band keys per document: (id, bnd, band_idx, band_key), where
     * `bnd` is the full band-key array (carried so joins can do first-matching-band
     * emission). This is the INDEX side of incremental dedup — at scale it is
     * computed once per corpus and persisted, then each new batch joins against it.
     *
-    * One md5 per shingle, staged into its two 32-bit words BEFORE the aggregate
-    * (an md5 inside each min() would be re-evaluated once per seed — common
-    * subexpression elimination does not span aggregate buffers); the seeded
-    * minima are then integer affine maps of the staged words. */
+    * Shape: explode shingles → hash-aggregate `numHashes` minima per doc (map-side
+    * partial agg; shuffles only (id, shingle-hash) bytes) → band keys from the
+    * signature attributes. The per-row-HOF alternative re-evaluates the
+    * tokenizer inside every lambda element (interpreted, O(shingles × tokens)
+    * per seed per row) — measurably pathological even at 5k docs, hence the
+    * explicit staging here. One md5 per shingle, staged into its two 32-bit
+    * words BEFORE the aggregate (an md5 inside each min() would be
+    * re-evaluated once per seed — common subexpression elimination does not
+    * span aggregate buffers); the seeded minima are then integer affine maps
+    * of the staged words. */
   def minHashBandKeys(df: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int = 3, numHashes: Int = 8, bands: Int = 4): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes $numHashes not divisible by bands $bands")
-    val rows = numHashes / bands
+    val rule = MinHashBands(numHashes, bands)
     // widen first: tokenize + shingle + per-shingle md5 is the heavy per-row
     // leg, and a single-row-group corpus file plans as a 1-task scan
-    val sh = Spread.widen(df.select(col(idCol), col(textCol)))
-      .select(col(idCol).as("id"), TextFunctions.tokens(col(textCol)).as("toks"))
-      .select(col("id"), explode(TextFunctions.wordShinglesOf(col("toks"), shingleSize)).as("s"))
+    val sh = shingled(Spread.widen(df.select(col(idCol), col(textCol))),
+        Seq(col(idCol).as("id")), textCol, shingleSize)(explode(_).as("s"))
       .select(col("id"), md5(col("s")).as("d"))
       .select(col("id"), md5Word(col("d"), 0).as("a"), md5Word(col("d"), 1).as("b"))
     val aggs = (0 until numHashes).map(i =>
-      min((col("a") + lit(i.toLong) * col("b")) % lit(4294967296L)).as(s"h$i"))
+      min(MinHashBands.seeded(col("a"), col("b"), i)).as(s"h$i"))
     val sig = sh.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
     // Band key: 8-byte xxhash64 of the band's signature slice. Only band-key
     // EQUALITY matters (keys never reach the output), so this produces the same
     // pair set as the oracle's md5-hex band keys while shuffling 8 bytes/band
     // instead of 32-char strings and skipping an md5+concat per band.
-    val bandArr = array((0 until bands).map { b =>
-      xxhash64((0 until rows).map(r => col(s"h${b * rows + r}")): _*)
-    }: _*)
+    val bandArr = rule.keys(i => col(s"h$i"), slice => xxhash64(slice: _*))
     sig.select(col("id"), bandArr.as("bnd"), posexplode(bandArr))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_key")
   }
 
+  /** Candidate near-duplicate pairs via MinHash LSH over word shingles.
+    * Output: (id_a, id_b) with id_a < id_b, distinct. */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int = 3, numHashes: Int = 8, bands: Int = 4): DataFrame =
     pairsFromBandKeys(
       minHashBandKeys(df, idCol, textCol, shingleSize, numHashes, bands), bands)
 
+  /** The one first-matching-band predicate of both band joins ([[pairsFromBandKeys]]
+    * and [[HammingBands.across]]): a row joined on band `idx` survives iff
+    * `differs(p)` holds for every earlier band p, so a pair colliding in k
+    * bands is emitted once, from its FIRST matching band, and the output
+    * needs NO distinct() — at scale that removes a full shuffle of the
+    * candidate set (candidates >> output). */
+  private[graft] def firstMatchingBand(bands: Int, idx: Column,
+                                       differs: Int => Column): Column =
+    (0 until bands).map { b =>
+      (idx === b) && (0 until b).map(differs).foldLeft(lit(true))(_ && _)
+    }.reduce(_ || _)
+
   /** Candidate pairs from a PRECOMPUTED [[minHashBandKeys]] frame — split out so
     * callers holding a persisted or checkpointed index don't recompute
     * signatures ([[incrementalDedup]], or a 100 TB corpus index read from
-    * parquet).
-    *
-    * Carries the whole band-key array through the join (bands×8 bytes/row) so a
-    * pair colliding in k bands can be emitted from its FIRST matching band only:
-    * `band_idx = b` survives iff bands 0..b-1 differ. Each pair then appears
-    * exactly once and the output needs NO distinct() — at scale that removes a
-    * full shuffle of the candidate set (candidates >> output). */
+    * parquet). Carries the whole band-key array through the join (bands×8
+    * bytes/row) for the [[firstMatchingBand]] emission. */
   def pairsFromBandKeys(banded: DataFrame, bands: Int): DataFrame = {
     val l = banded.select(col("band_idx"), col("band_key"),
       col("id").as("id_a"), col("bnd").as("bnd_a"))
     val r = banded.select(col("band_idx"), col("band_key"),
       col("id").as("id_b"), col("bnd").as("bnd_b"))
-    val firstBandOnly = (0 until bands).map { b =>
-      (col("band_idx") === b) && (0 until b)
-        .map(p => element_at(col("bnd_a"), p + 1) =!= element_at(col("bnd_b"), p + 1))
-        .foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
+    val firstBandOnly = firstMatchingBand(bands, col("band_idx"), p =>
+      element_at(col("bnd_a"), p + 1) =!= element_at(col("bnd_b"), p + 1))
     l.join(r, Seq("band_idx", "band_key"))
       .filter(col("id_a") < col("id_b") && firstBandOnly)
       .select(col("id_a"), col("id_b"))
@@ -301,9 +324,8 @@ object DedupSuite {
       across(fps, fps, idCol, fpCol).filter(col("id_a") < col("id_b"))
 
     /** The band join: every (left row, right row) pair within `maxHamming`,
-      * each exactly once — first-matching-band emission (segments recomputed
-      * from the carried fp: block b survives iff blocks 0..b-1 differ), so
-      * no distinct() shuffle. Output (id_a from left, id_b from right,
+      * each exactly once — [[firstMatchingBand]] emission (segments
+      * recomputed from the carried fp), so no distinct() shuffle. Output (id_a from left, id_b from right,
       * hamming). */
     def across(left: DataFrame, right: DataFrame,
                idCol: String, fpCol: String): DataFrame = {
@@ -311,11 +333,8 @@ object DedupSuite {
         .select(col(idCol).as(ida), col(fpCol).as(fpa))
         .select(col(ida), col(fpa), posexplode(keys(col(fpa))))
         .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block_key")
-      val firstBlockOnly = (0 until bands).map { b =>
-        (col("block_idx") === b) && (0 until b)
-          .map(p => segOf(col("fp_a"), p) =!= segOf(col("fp_b"), p))
-          .foldLeft(lit(true))(_ && _)
-      }.reduce(_ || _)
+      val firstBlockOnly = firstMatchingBand(bands, col("block_idx"), p =>
+        segOf(col("fp_a"), p) =!= segOf(col("fp_b"), p))
       banded(left, "id_a", "fp_a")
         .join(banded(right, "id_b", "fp_b"), Seq("block_idx", "block_key"))
         .filter(firstBlockOnly)
@@ -341,254 +360,279 @@ object DedupSuite {
                                bits: Int = 64, maxHamming: Int = 3): DataFrame =
     HammingBands(bits, maxHamming).across(left, right, idCol, fpCol)
 
-  // ── n-gram Jaccard ─────────────────────────────────────────────────────────
+  // ── shingles ───────────────────────────────────────────────────────────────
 
-  /** Verify candidate id pairs against the materialized gram index: attach both
-    * docs' sorted hash arrays and the exact `inter` count. Shared tail of
-    * [[ngramJaccardPairs]] and [[ngramContainmentPairs]] (they differ only in
-    * the score computed from `inter`/`size_a`/`size_b`).
+  /** The one per-doc shingle relation of the text near-dup family (n-gram
+    * Jaccard and containment, MinHash, decontamination, heavy grams and their
+    * streaming twins): `keep` plus the single column `perDoc(grams)`, where
+    * `grams` is the doc's word n-gram shingle array. Tokens are STAGED into a
+    * column first — HOF lambdas re-evaluate their child tree per element, so
+    * an inlined tokens() would re-tokenize per shingle (O(n²)).
+    *
+    * `tokenUnigrams`: for n = 1, read the token array itself instead of
+    * shingling it. The two agree on every non-null text; null text has no
+    * grams on the token path and one null shingle through `wordShinglesOf`,
+    * so each caller keeps the form its answers are defined by (the n-gram
+    * verify and heavy grams take the token path). */
+  private[graft] def shingled(df: DataFrame, keep: Seq[Column], textCol: String,
+                              n: Int, tokenUnigrams: Boolean = false)
+                             (perDoc: Column => Column): DataFrame = {
+    val staged = df.select(keep :+ TextFunctions.tokens(col(textCol)).as("_toks"): _*)
+    val toks = col("_toks")
+    val grams = if (tokenUnigrams && n == 1) toks else TextFunctions.wordShinglesOf(toks, n)
+    staged.select(staged.columns.toSeq.filter(_ != "_toks").map(col) :+ perDoc(grams): _*)
+  }
+
+  // ── n-gram Jaccard and containment ───────────────────────────────────────
+
+  /** The verify regime of [[ngramJaccardPairs]] and [[ngramContainmentPairs]]:
+    * one pure decision over counts the verify measures anyway, and the one
+    * seam ([[GramVerify.forcing]]) that specs and `LocalClusterVerify` force
+    * a regime through. Results are byte-identical in every regime
+    * (spec-pinned); only cost moves. */
+  private[graft] object GramVerify {
+    sealed trait Regime
+    /** The two-join tail over the whole gram index — zero added jobs. */
+    case object Plain extends Regime
+    /** The gram index bloom-pruned to the candidate ids before each join. */
+    case object Pruned extends Regime
+    /** Candidate docs cover the corpus: verify the checkpointed pair set in
+      * `k` disjoint hash slices (k = 1: one pass); `estimate` is the
+      * evidence when the measured decision sized k. */
+    final case class Dense(k: Int, estimate: Option[Estimate] = None) extends Regime
+
+    /** Bytes entering the two verify joins: each candidate pair carries both
+      * docs' sorted 8-byte gram arrays between the joins. */
+    final case class Estimate(pairs: Long, meanGramSz: Double, budget: Long) {
+      val bytes: Double = 2.0 * pairs * meanGramSz * 8.0
+      val k: Int = math.min(64L, math.ceil(bytes / budget).toLong).toInt
+      override def toString: String = String.format(java.util.Locale.ROOT,
+        "pairs=%d meanGramSz=%.1f estBytes=%.2e budget=%d -> k=%d",
+        Long.box(pairs), Double.box(meanGramSz), Double.box(bytes),
+        Long.box(budget), Int.box(k))
+    }
+
+    /** What the verify measures. Each count is one Spark job, run the first
+      * time a decision reads it (the docs count is the only one every
+      * measured decision pays). */
+    final class Counts(docs0: => Long, candidateDocs0: => Long,
+                       candidatePairs0: => Long, meanGramSz0: => Double) {
+      lazy val docs: Long = docs0
+      lazy val candidateDocs: Long = candidateDocs0
+      lazy val candidatePairs: Long = candidatePairs0
+      lazy val meanGramSz: Double = meanGramSz0
+    }
+
+    /** Docs below which the verify never measures candidate selectivity: the
+      * gram index shuffles fine as-is and the count jobs would be pure
+      * overhead (no record measures this bound). */
+    val MinDocs = 200000L
+    /** The prune engages below this candidate-doc coverage: on a dense
+      * near-dup corpus (coverage ≈ 1) the unconditional prune doubled q45
+      * (26.1 → 49.9 s at ×100: two 8 MB bloom literals in every task binary,
+      * ~zero rows pruned), gated 28.0 s ≈ plain, while sparse corpora
+      * (coverage ≈ 0.05) engage it — bench/results/README.md, "Addendum —
+      * selectivity-gated verify prune" and the r7_prune_* table. */
+    val MaxCoverage = 0.25
+    /** Pair sets below this never segment: the estimate's extra aggregate
+      * would cost more than the join (no record measures this bound). */
+    val MinSegmentPairs = 1000000L
+    /** Executor-disk budget for one verify pass: dense q84 at ×1000
+      * (1.46e10 B estimated) stays one pass, 286.9 s, where a forced 2 GiB
+      * budget took 7 passes and 554.6 s, while dense q45 (~226 GB) must
+      * segment on a 75 GB disk — r8_q45_dense_x1000 and
+      * r9_q84_dense_{default_clean,budget2g}. */
+    val DiskBudget: Long = 24L << 30
+    /** Input estimate (Catalyst `sizeInBytes`, compressed parquet bytes for
+      * a scan) below which the gram index is always checkpointed: the n = 1
+      * recompute win (241 → 171 s) was measured on a 5M-doc corpus of ~890 MB
+      * parquet (r7_gmat_{mat,nomat}), while sf0.1-class corpora are tens of
+      * MB, where four recomputes cost q45 ~1.3×. */
+    val SmallInputBytes: BigInt = BigInt(256L << 20)
+
+    def prunes(docs: Long, candidateDocs: Long): Boolean =
+      candidateDocs.toDouble < MaxCoverage * docs
+
+    /** The dense branch: one pass unless the estimate exceeds `budget`. */
+    def dense(c: Counts, budget: Long = DiskBudget): Regime =
+      if (c.candidatePairs < MinSegmentPairs) Dense(1)
+      else {
+        val e = Estimate(c.candidatePairs, c.meanGramSz, budget)
+        Dense(math.max(1, e.k), Some(e))
+      }
+
+    def regime(c: Counts, budget: Long = DiskBudget): Regime =
+      if (c.docs < MinDocs) Plain
+      else if (prunes(c.docs, c.candidateDocs)) Pruned
+      else dense(c, budget)
+
+    /** Checkpoint the gram index once, or recompute it per consuming
+      * subtree. n ≥ 2 shingles (a string concat per shingle before the hash)
+      * always checkpoint — recompute lost 4.4× at 5M docs (304 → 1,337 s,
+      * r7_gmat); n = 1 token hashes recompute unless the input is small. */
+    def checkpointGrams(n: Int, inputBytes: => Option[BigInt]): Boolean =
+      n > 1 || inputBytes.exists(_ < SmallInputBytes)
+
+    private val policy = new scala.util.DynamicVariable[(Counts => Regime, Option[Boolean])](
+      (regime(_), None))
+
+    /** The seam: run `body` with `regime` in place of the measured decision
+      * and, when set, `checkpointGrams` in place of the gram-index one.
+      * Scoped to the calling thread, so a forced regime never reaches
+      * another query. */
+    def forcing[T](regime: Counts => Regime = GramVerify.regime(_),
+                   checkpointGrams: Option[Boolean] = None)(body: => T): T =
+      policy.withValue((regime, checkpointGrams))(body)
+
+    private[operators] def decide(c: Counts): Regime = policy.value._1(c)
+
+    private[operators] def decideCheckpoint(n: Int, inputBytes: => Option[BigInt]): Boolean =
+      policy.value._2.getOrElse(checkpointGrams(n, inputBytes))
+  }
+
+  /** Verify candidate id pairs against the gram index: attach both docs'
+    * sorted hash arrays and the exact `inter` count, score each pair as
+    * `metric` and keep those at or above `threshold` (inside the regime, so
+    * the segmented path materializes only surviving rows). Output (id_a,
+    * id_b, inter, size_a, size_b, metric).
     *
     * The naive `cand ⋈ gramArr ⋈ gramArr` shuffles the FULL gram index — the
     * corpus's arrays, the widest frame in the whole pipeline — twice, even
     * when only a sliver of docs appears in any candidate pair (the common
-    * web-corpus case: near-dups are rare). When that sliver is small, the
-    * gram index is pruned IN-SCAN with a bloom filter over the candidate id
-    * set before each join (no false negatives, so pruned-join ≡ join — the
-    * same q97 identity [[BloomJoin]] rests on; false positives only cost a
-    * little pruning efficiency), and the verify shuffles carry candidate-doc
-    * arrays only.
-    *
-    * The regime is chosen DRIVER-SIDE from actual counts, not assumed: below
-    * `pruneMinDocs` docs the plain two-join tail runs untouched (zero added
-    * jobs at oracle scale); above it, one exact distinct-id count over the
-    * materialized candidate pairs measures selectivity, and the prune engages
-    * only when candidate docs cover less than a quarter of the corpus —
-    * measured on a dense near-dup corpus (×100 synthetic, candidate ids ≈
-    * every doc) the unconditional prune DOUBLED q45 (26 → 50 s: two 8 MB
-    * bloom literals in every task binary, extra driver jobs, ~zero rows
-    * pruned), while on sparse corpora it removes the dominant shuffle
-    * entirely. Results are byte-identical on every path (spec-pinned). */
-  private def verifiedIntersections(cand: DataFrame, gramArr: DataFrame,
-                                    pruneMinDocs: Long,
-                                    finish: DataFrame => DataFrame = identity)
-  : DataFrame = {
-    import graft.expressions.BloomFilters
-    val spark = cand.sparkSession
-    val conf = spark.conf
-    // Session-conf override for the docs gate — the A/B experimentation knob
-    // (set it above the corpus size to force the plain two-join tail, e.g. to
-    // measure the prune's win on a sparse corpus). Results are identical on
-    // every path, so this only moves the regime choice.
-    val minDocs = conf.getOption("graft.verifyPruneMinDocs").map(_.toLong)
-      .getOrElse(pruneMinDocs)
-    // Coverage bound for the prune gate: engage below 1/4 coverage, the
-    // measured break-even.
-    val covMax = 0.25
-    def join3(c: DataFrame, ga: DataFrame, gb: DataFrame): DataFrame =
-      c.join(ga.select(col("id").as("id_a"), col("harr").as("harr_a"),
-          col("sz").as("size_a")), Seq("id_a"))
-        .join(gb.select(col("id").as("id_b"), col("harr").as("harr_b"),
-          col("sz").as("size_b")), Seq("id_b"))
-        .withColumn("inter",
-          graft.expressions.NativeArr.sortedIntersectSize(col("harr_a"), col("harr_b")))
-    // ~16 bits/key at the candidate-id cardinality, clamped to [1 MB, 16 MB]
-    def bloomBits(nKeys: Long): Int = math.min(1L << 27, math.max(1L << 23,
-      java.lang.Long.highestOneBit(math.max(1L, nKeys * 16)) << 1)).toInt
-    // `gram` defaults to the outer (possibly unmaterialized) index; the
-    // segmented branch passes its DISK_ONLY checkpoint instead — filtering
-    // the outer frame there would recompute the full scan+tokenize+shingle
-    // gram pipeline twice per pass, defeating the reason the checkpoint
-    // exists on exactly the ×1000 corpora that branch targets.
-    def prunedBy(c: DataFrame, numBits: Int, side: String,
-                 gram: DataFrame = gramArr): DataFrame = {
-      val bytes = c
-        .agg(BloomFilters.bloomAgg(xxhash64(col(side)), numBits, 5).as("bf"))
-        .collect()(0).getAs[Array[Byte]](0)
-      gram.filter(BloomFilters.mightContain(lit(bytes), xxhash64(col("id"))))
+    * web-corpus case: near-dups are rare). [[GramVerify.Pruned]] filters the
+    * gram index IN-SCAN with a bloom filter over the candidate id set before
+    * each join (no false negatives, so pruned-join ≡ join — the same q97
+    * identity [[BloomJoin]] rests on). [[GramVerify.Dense]] with k > 1
+    * bounds peak disk on a dense corpus instead: the pair×gram-array join
+    * intermediate (2·pairs·meanGram bytes, the [[GramVerify.Estimate]]) is
+    * split into k eagerly-materialized passes. The regime is chosen
+    * DRIVER-SIDE by [[GramVerify.regime]] from actual counts. */
+  private def verifiedIntersections(cand: DataFrame, gramArr: DataFrame, metric: String,
+                                    score: Column, threshold: Double): DataFrame = {
+    import GramVerify.{Counts, Dense, Plain, Pruned}
+    def finish(pairs: DataFrame): DataFrame =
+      pairs.withColumn(metric, score).filter(col(metric) >= threshold)
+        .select(col("id_a"), col("id_b"), col("inter"), col("size_a"), col("size_b"),
+          col(metric))
+    // Candidate pairs are consumed up to four times off the plain path
+    // (distinct-id count, two bloom aggregates, the verify join) —
+    // materialized once, pair-count sized (ids only). DISK_ONLY: on a dense
+    // corpus the pair set reaches 10⁸–10⁹ rows (×1000 measured 6.1×10⁸) and
+    // a MEMORY_AND_DISK put competes with the distinct's execution memory —
+    // the r8 dense leg OOM'd a 48g heap exactly there.
+    lazy val c2 = cand.localCheckpoint(true,
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    // one docs count: gramArr may be unmaterialized (checkpointGrams), so a
+    // second count() could re-run the whole scan+tokenize+hash pipeline
+    val counts = new Counts(gramArr.count(), candidateDocs(c2), c2.count(),
+      gramArr.agg(avg(col("sz"))).collect()(0).getDouble(0))
+    val chosen = GramVerify.decide(counts)
+    if (chosen != Plain) {
+      // driver-side state that never appears in a plan or result: logged so
+      // scale-leg logs carry the decision (Locale.ROOT: the scrapers grep it)
+      System.err.println(s"[graft.dedup] verify-prune gate: docs=${counts.docs} " +
+        s"candidateDocs=${counts.candidateDocs} coverage=${String.format(
+          java.util.Locale.ROOT, "%.4f",
+          Double.box(counts.candidateDocs.toDouble / counts.docs))} " +
+        s"engaged=${chosen == Pruned}")
     }
-    // One count job only: gramArr may or may not be materialized (the
-    // shape-dependent maybeMaterializeGrams default skips the checkpoint for
-    // n=1 grams), so a second count() could re-run the whole
-    // scan+tokenize+hash pipeline — compute docsN once and reuse it for both
-    // the gate and the coverage ratio.
-    val docsN = gramArr.count()
-    if (docsN < minDocs) finish(join3(cand, gramArr, gramArr))
-    else {
-      // candidate pairs are consumed up to four times on this path (distinct-id
-      // count, two bloom aggregates, the verify join) — materialize once;
-      // pair-count sized (ids only), far narrower than the gram index.
-      // DISK_ONLY: above the gate the pair set can reach 10⁸–10⁹ rows (dense
-      // ×1000 measured 6.1×10⁸), and the default MEMORY_AND_DISK put competes
-      // with the distinct's execution memory for the same unified pool — the
-      // r8 dense leg OOM'd a 48g heap exactly there. Sequential disk re-reads
-      // of 16-byte pairs are cheap; heap is the scarce resource.
-      val c2 = cand.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val dIds = c2.select(explode(array(col("id_a"), col("id_b"))).as("id"))
-        .distinct().count()
-      val engaged = dIds.toDouble < covMax * docsN
-      // The regime choice is driver-side state that never appears in a plan or
-      // result; record it so scale-leg logs carry the decision as evidence.
-      // Locale.ROOT: "%.4f" under a comma-decimal locale would break the
-      // scale-leg log scrapers that grep this line.
-      System.err.println(s"[graft.dedup] verify-prune gate: docs=$docsN " +
-        s"candidateDocs=$dIds coverage=${String.format(java.util.Locale.ROOT,
-          "%.4f", Double.box(dIds.toDouble / docsN))} " +
-        s"engaged=$engaged")
-      if (engaged)
-        finish(join3(c2, prunedBy(c2, bloomBits(dIds), "id_a"),
-          prunedBy(c2, bloomBits(dIds), "id_b")))
-      else {
-        // DENSE regime: candidate docs cover the corpus, so the bloom prune
-        // cannot shrink the verify joins — on a one-box ×1000 dense corpus
-        // the verify stages spill past local disk (~185 GB extrapolated vs
-        // 75 GB available, the round-7 open cell). SEGMENTED verify bounds
-        // peak disk instead: split the pair set into K disjoint hash slices
-        // and run the verify join per slice as its own eagerly-materialized
-        // pass. The term that actually scales with K is the dominant one —
-        // the pair×gram-array join intermediate (each pair carries a full
-        // sorted hash array between the two joins, 2·pairs·meanGram bytes;
-        // the verifySegmentCount estimate is exactly this term) — while the
-        // two gram-index shuffles repeat per pass at full size (bounded: the
-        // index is corpus-sized, not pair-sized). On low-degree corpora a
-        // slice can also be doc-sparse; the per-slice bloom prune re-arms
-        // under the SAME coverage gate as the global one (on high-degree
-        // dense corpora every doc lands in ~every slice, and skipping the
-        // prune avoids its measured 16 MB-filter-per-task overhead).
-        // `finish` (the caller's threshold filter) runs inside the pass, so
-        // only surviving near-dup rows are checkpointed — pass results are
-        // output-sized, not join-sized. Between passes an explicit GC lets
-        // the ContextCleaner drop the finished pass's shuffle files, which
-        // is what bounds peak disk. Results are byte-identical to the
-        // unsegmented join (spec-pinned): the slices partition the pair set.
-        val k = verifySegmentCount(conf, c2, gramArr, docsN)
-        if (k <= 1) finish(join3(c2, gramArr, gramArr))
-        else {
-          System.err.println(s"[graft.dedup] segmented verify: k=$k")
-          // The gram index feeds 2k pass subtrees — the recompute-vs-
-          // materialize trade that favored recompute at 4 subtrees flips
-          // decisively here. DISK_ONLY: ~250 B/doc of blocks vs heap.
-          val gramM = gramArr.localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          val passes = (0 until k).map { i =>
-            // Deterministic per-pass reclaim — the r8 dense leg died of disk
-            // exhaustion at pass 12/18 relying on GC-triggered ContextCleaner
-            // waves alone (async; lagged the pass rate). Run the pass under a
-            // tracked-shuffle scope (job-group listener ∩ registration
-            // delta — so a concurrent query's live shuffle can never land in
-            // the reclaim set), eagerly checkpoint its (output-sized)
-            // result, then synchronously delete exactly the shuffles this
-            // pass created: once `out` is materialized nothing can re-read
-            // them (cs/gramM are checkpointed blocks, not shuffles, and each
-            // pass is its own execution — no cross-pass exchange reuse).
-            val (out, passShuffles) =
-              ColumnBridge.withTrackedShuffles(spark, s"verify-pass-$i") {
-                val cs = c2.filter(
-                  pmod(xxhash64(col("id_a"), col("id_b")), lit(k)) === i)
-                  .localCheckpoint(true,
-                    org.apache.spark.storage.StorageLevel.DISK_ONLY)
-                val csIds = cs.select(explode(array(col("id_a"), col("id_b"))).as("id"))
-                  .distinct().count()
-                val slicePrune = csIds.toDouble < covMax * docsN
-                val (ga, gb) = if (slicePrune) {
-                  val nb = bloomBits(csIds)
-                  (prunedBy(cs, nb, "id_a", gramM), prunedBy(cs, nb, "id_b", gramM))
-                } else (gramM, gramM)
-                System.err.println(s"[graft.dedup] segmented verify pass $i/$k: " +
-                  s"sliceDocs=$csIds prune=$slicePrune")
-                // DISK_ONLY: pass results are retained until the final union is
-                // consumed, and on an adversarially dense corpus "output-sized"
-                // is join-sized (nearly every candidate pair survives the
-                // threshold — measured 4.4 GB/pass × 18 passes at dense ×1000,
-                // itself a disk wall). Serialized disk blocks honor
-                // spark.rdd.compress (the scale legs set it), cutting the
-                // retained bytes ~3×; the default deserialized level would also
-                // compete with the join stages for the 48g heap.
-                val o = finish(join3(cs, ga, gb)).localCheckpoint(true,
-                  org.apache.spark.storage.StorageLevel.DISK_ONLY)
-                ColumnBridge.unpersistFrame(cs, blocking = true)
-                o
-              }
-            ColumnBridge.cleanupShuffles(spark, passShuffles)
-            out
-          }
-          ColumnBridge.unpersistFrame(gramM, blocking = true)
-          passes.reduce(_ union _)
-        }
-      }
+    chosen match {
+      case Plain => finish(intersections(cand, gramArr, gramArr))
+      case Pruned =>
+        val (ga, gb) = bloomPruned(c2, counts.candidateDocs, gramArr)
+        finish(intersections(c2, ga, gb))
+      case Dense(k, estimate) =>
+        // logged for k = 1 too: a leg that stays unsegmented still shows the
+        // estimate ran
+        estimate.foreach(e =>
+          System.err.println(s"[graft.dedup] segmented verify estimate: $e"))
+        if (k <= 1) finish(intersections(c2, gramArr, gramArr))
+        else segmentedVerify(c2, gramArr, k, counts.docs, finish)
     }
   }
 
-  /** Segment count for the dense-regime verify: conf `graft.verifySegments`
-    * forces a value (1 disables); otherwise the estimated bytes entering the
-    * two verify joins (2 · pairs · mean gram bytes) are divided by the
-    * executor-disk budget `graft.verifyDiskBudgetBytes` (default 24 GiB —
-    * comfortably under this box's 75 GB free, leaving room for the pass's own
-    * sort spill). Small pair sets (<1M) never segment: the estimate itself
-    * would cost more than the join. The mean-size aggregate is one extra pass
-    * over the gram index — accepted only here, where the alternative is a
-    * disk-wall abort. */
-  private def verifySegmentCount(conf: org.apache.spark.sql.RuntimeConfig,
-                                 c2: DataFrame, gramArr: DataFrame,
-                                 docsN: Long): Int =
-    conf.getOption("graft.verifySegments").map(_.toInt).getOrElse {
-      val candN = c2.count()
-      if (candN < 1000000L) 1
-      else {
-        val budget = conf.getOption("graft.verifyDiskBudgetBytes").map(_.toLong)
-          .getOrElse(24L << 30)
-        val meanSz = gramArr.agg(avg(col("sz"))).collect()(0).getDouble(0)
-        val estBytes = 2.0 * candN * meanSz * 8.0
-        val k = math.min(64L, math.ceil(estBytes / budget).toLong).toInt
-        // Logged for k=1 too: a leg that stays unsegmented should still show
-        // the gate saw it (est under budget), not that the gate never ran.
-        System.err.println(String.format(java.util.Locale.ROOT,
-          "[graft.dedup] segmented verify estimate: pairs=%d meanGramSz=%.1f estBytes=%.2e budget=%d -> k=%d",
-          Long.box(candN), Double.box(meanSz), Double.box(estBytes),
-          Long.box(budget), Int.box(k)))
-        math.max(1, k)
-      }
+  /** Pairs with both docs' gram arrays and sizes and their exact `inter`. */
+  private def intersections(c: DataFrame, ga: DataFrame, gb: DataFrame): DataFrame =
+    c.join(ga.select(col("id").as("id_a"), col("harr").as("harr_a"),
+        col("sz").as("size_a")), Seq("id_a"))
+      .join(gb.select(col("id").as("id_b"), col("harr").as("harr_b"),
+        col("sz").as("size_b")), Seq("id_b"))
+      .withColumn("inter",
+        graft.expressions.NativeArr.sortedIntersectSize(col("harr_a"), col("harr_b")))
+
+  /** Distinct doc ids over a candidate pair set — one count job. */
+  private def candidateDocs(c: DataFrame): Long =
+    c.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct().count()
+
+  /** `gram` filtered in-scan, once per pair side, by a bloom filter over the
+    * candidate ids: ~16 bits/key at `nKeys`, clamped to [1 MB, 16 MB]. */
+  private def bloomPruned(c: DataFrame, nKeys: Long,
+                          gram: DataFrame): (DataFrame, DataFrame) = {
+    import graft.expressions.BloomFilters
+    val numBits = math.min(1L << 27, math.max(1L << 23,
+      java.lang.Long.highestOneBit(math.max(1L, nKeys * 16)) << 1)).toInt
+    def side(idCol: String): DataFrame = {
+      val bytes = c
+        .agg(BloomFilters.bloomAgg(xxhash64(col(idCol)), numBits, 5).as("bf"))
+        .collect()(0).getAs[Array[Byte]](0)
+      gram.filter(BloomFilters.mightContain(lit(bytes), xxhash64(col("id"))))
     }
+    (side("id_a"), side("id_b"))
+  }
 
-  /** Docs-count gate below which the verify tail never even measures
-    * candidate selectivity: the corpus' gram index shuffles fine as-is and
-    * the extra count jobs would be pure overhead. Above it, selectivity
-    * decides (see [[verifiedIntersections]]). */
-  private val VerifyPruneMinDocs = 200000L
-
-  /** Gram-index materialization policy: localCheckpoint once, or recompute
-    * the gram pipeline per consuming subtree. SHAPE-DEPENDENT, measured at
-    * 5M docs (r7_gmat_{mat,nomat}.json): for n=1 grams (xxhash64 of the
-    * token itself — ~6 s for the whole corpus, commit f571be4) the block-store
-    * write path costs more than four recomputes, and skipping it wins 1.4×
-    * (241 → 171 s); for n≥2 shingles (per-shingle string concat before the
-    * hash) recompute loses 4.4× (304 → 1,337 s). Callers pass the
-    * shape-derived default (`n > 1`); `graft.gramIndexMaterialize` overrides
-    * both ways for A/B. Results are identical on every path.
-    *
-    * SCALE-AWARE refinement (r8): the n=1 recompute win only exists when the
-    * checkpoint blocks are big enough for the block-store write to dominate —
-    * at oracle scale the same default cost q45 ~1.3× (r8 vs r6 series: four
-    * recomputes of a pipeline whose checkpoint would have been ~15 MB).
-    * Below [[SmallCorpusBytes]] of optimizer-estimated input the checkpoint
-    * is always taken; the estimate comes from Catalyst plan stats (driver
-    * metadata, zero jobs — for a parquet scan this is the COMPRESSED file
-    * size, so the bound is deliberately conservative: the 5M-doc corpus where
-    * recompute won measures ~890 MB of parquet). */
-  private def maybeMaterializeGrams(df: DataFrame, default: Boolean): DataFrame =
-    if (df.sparkSession.conf.getOption("graft.gramIndexMaterialize")
-        .map(_.toBoolean).getOrElse(default)) df.localCheckpoint(true)
-    else df
-
-  /** Input-size bound (Catalyst `sizeInBytes` estimate) below which the gram
-    * index is checkpointed regardless of gram shape: the r7 5M-doc corpora
-    * where n=1 recompute won were multi-GB; sf0.1-class corpora are tens of
-    * MB and the checkpoint is strictly cheaper there. */
-  private val SmallCorpusBytes = BigInt(256L << 20)
-
-  private def isSmallCorpus(df: DataFrame): Boolean =
-    try df.queryExecution.optimizedPlan.stats.sizeInBytes < SmallCorpusBytes
-    catch { case scala.util.control.NonFatal(_) => false }
+  /** The k-pass verify of [[GramVerify.Dense]]: on a one-box ×1000 dense
+    * corpus the unsegmented verify spills past local disk (~185 GB
+    * extrapolated vs 75 GB available). Each pass verifies one disjoint hash
+    * slice of the pair set as its own eagerly-materialized unit, so the
+    * dominant pair×gram-array intermediate scales with 1/k (the two
+    * gram-index shuffles repeat per pass at corpus size). A doc-sparse slice
+    * re-arms the bloom prune under the same coverage rule. `finish` runs
+    * inside the pass, so pass results are output-sized; each pass's own
+    * shuffles are deleted synchronously once its result is materialized,
+    * which is what bounds peak disk. Results are byte-identical to the
+    * unsegmented join (spec-pinned): the slices partition the pair set. */
+  private def segmentedVerify(c2: DataFrame, gramArr: DataFrame, k: Int, docs: Long,
+                              finish: DataFrame => DataFrame): DataFrame = {
+    val spark = c2.sparkSession
+    System.err.println(s"[graft.dedup] segmented verify: k=$k")
+    // The gram index feeds 2k pass subtrees — DISK_ONLY: ~250 B/doc of
+    // blocks vs heap. Filtering the outer (possibly unmaterialized) index
+    // instead would recompute scan+tokenize+shingle twice per pass.
+    val gramM = gramArr.localCheckpoint(true,
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val passes = (0 until k).map { i =>
+      // Deterministic per-pass reclaim — the r8 dense leg died of disk
+      // exhaustion at pass 12/18 relying on GC-triggered ContextCleaner
+      // waves alone. The pass runs under a tracked-shuffle scope (job-group
+      // listener ∩ registration delta — a concurrent query's live shuffle
+      // never lands in the reclaim set); once `out` is materialized nothing
+      // re-reads its shuffles (cs/gramM are checkpointed blocks, and each
+      // pass is its own execution).
+      val (out, passShuffles) =
+        ColumnBridge.withTrackedShuffles(spark, s"verify-pass-$i") {
+          val cs = c2.filter(
+            pmod(xxhash64(col("id_a"), col("id_b")), lit(k)) === i)
+            .localCheckpoint(true,
+              org.apache.spark.storage.StorageLevel.DISK_ONLY)
+          val csIds = candidateDocs(cs)
+          val slicePrune = GramVerify.prunes(docs, csIds)
+          val (ga, gb) = if (slicePrune) bloomPruned(cs, csIds, gramM) else (gramM, gramM)
+          System.err.println(s"[graft.dedup] segmented verify pass $i/$k: " +
+            s"sliceDocs=$csIds prune=$slicePrune")
+          // DISK_ONLY: on an adversarially dense corpus "output-sized" is
+          // join-sized (4.4 GB/pass × 18 passes measured at dense ×1000);
+          // serialized disk blocks honor spark.rdd.compress (~3×)
+          val o = finish(intersections(cs, ga, gb)).localCheckpoint(true,
+            org.apache.spark.storage.StorageLevel.DISK_ONLY)
+          ColumnBridge.unpersistFrame(cs, blocking = true)
+          o
+        }
+      ColumnBridge.cleanupShuffles(spark, passShuffles)
+      out
+    }
+    ColumnBridge.unpersistFrame(gramM, blocking = true)
+    passes.reduce(_ union _)
+  }
 
   /** The gram index shared by [[ngramJaccardPairs]] and
     * [[ngramContainmentPairs]]: (id, block, harr, sz) where `harr` is the
@@ -597,90 +641,70 @@ object DedupSuite {
     * intersection compares longs. A cross-doc hash collision would need two
     * DIFFERENT grams of the same block to collide in 64 bits (~n²/2⁶⁵) —
     * negligible at any corpus size this targets, and it only perturbs one
-    * `inter` count by 1. Materialization is shape- and scale-dependent — see
-    * [[maybeMaterializeGrams]]; extracting the builder keeps that policy in
-    * ONE place so a change cannot half-land across the two callers. */
+    * `inter` count by 1. The index feeds four subtrees (two candidate sides,
+    * two verify joins); [[GramVerify.checkpointGrams]] decides whether it is
+    * materialized once. */
   private def gramIndex(df: DataFrame, idCol: String, textCol: String,
-                        blockCol: String, n: Int): DataFrame =
-    Spread.widen(df.select(col(idCol), col(blockCol), col(textCol)))
-    .select(col(idCol).as("id"), col(blockCol).as("block"),
-      TextFunctions.tokens(col(textCol)).as("toks"))
-    .select(col("id"), col("block"),
-      array_sort(array_distinct(transform(
-        if (n == 1) col("toks")
-        else TextFunctions.wordShinglesOf(col("toks"), n), g => xxhash64(g)))).as("harr"))
-    .withColumn("sz", size(col("harr")).cast("long"))
-    .transform(maybeMaterializeGrams(_, default = n > 1 || isSmallCorpus(df)))
+                        blockCol: String, n: Int): DataFrame = {
+    val idx = shingled(Spread.widen(df.select(col(idCol), col(blockCol), col(textCol))),
+        Seq(col(idCol).as("id"), col(blockCol).as("block")), textCol, n,
+        tokenUnigrams = true)(g =>
+        array_sort(array_distinct(transform(g, x => xxhash64(x)))).as("harr"))
+      .withColumn("sz", size(col("harr")).cast("long"))
+    val inputBytes =
+      try Some(df.queryExecution.optimizedPlan.stats.sizeInBytes)
+      catch { case scala.util.control.NonFatal(_) => None }
+    if (GramVerify.decideCheckpoint(n, inputBytes)) idx.localCheckpoint(true) else idx
+  }
+
+  /** PPJoin-style prefix filter (exact, no false negatives): under ANY global
+    * gram order — here the hash order itself, so no frequency pass is needed
+    * — a set whose overlap with a partner must reach t·|A| shares a gram with
+    * it inside its first |A| − ceil(t·|A|) + 1 grams. One (id, block, sz, gh)
+    * row per prefix gram. */
+  private def prefixGrams(gramArr: DataFrame, threshold: Double): DataFrame =
+    gramArr.select(col("id"), col("block"), col("sz"),
+      explode(slice(col("harr"), lit(1),
+        (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast("int"))).as("gh"))
 
   /** Jaccard similarity over distinct word n-grams, blocked by `blockCol` (only
     * same-block pairs are compared — at scale the block is an LSH bucket or a
     * cheap partition key; a cross join is never formed).
     * Output: (id_a, id_b, inter, size_a, size_b, jaccard) filtered to >= threshold. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, blockCol: String,
-                        n: Int = 1, threshold: Double = 0.8,
-                        verifyPruneMinDocs: Long = VerifyPruneMinDocs): DataFrame = {
-    // The gram index feeds four subtrees (two candidate sides, two
-    // verification joins); whether to MATERIALIZE it once or recompute per
-    // subtree is shape-dependent — see maybeMaterializeGrams for the 5M-doc
-    // measurements (n=1 token-hash grams: recompute wins; n≥2 shingles:
-    // materialize wins 4.4×). At full corpus scale persist the frame to
-    // storage instead (the incrementalDedup pattern).
+                        n: Int = 1, threshold: Double = 0.8): DataFrame = {
     val gramArr = gramIndex(df, idCol, textCol, blockCol, n)
-    // PPJoin-style prefix filter (exact, no false negatives): under ANY global
-    // gram order — here the hash order itself, so no frequency pass is needed —
-    // two sets with Jaccard >= t must share a gram inside their first
-    // (|A| - ceil(t·|A|) + 1) grams. Only prefixes are exploded and joined, so
-    // high-frequency grams stop generating O(block²) candidate rows unless they
-    // land in a prefix; the full co-occurrence groupBy disappears entirely.
-    // (Measured alternative: carrying prefix arrays through the join and keeping
-    // only the min-shared-prefix-gram row — "emit once, no distinct" — is 2×
+    // Two sets with Jaccard >= t share a gram inside both prefixes, so only
+    // prefixes are exploded and joined: high-frequency grams stop generating
+    // O(block²) candidate rows unless they land in a prefix. (Measured
+    // alternative: carrying prefix arrays through the join and keeping only
+    // the min-shared-prefix-gram row — "emit once, no distinct" — is 2×
     // SLOWER here: array_intersect allocates a per-row hash set on every
     // collision row, while distinct() pays one narrow shuffle of id pairs.)
-    val pref = gramArr.select(col("id"), col("block"),
-      explode(slice(col("harr"), lit(1),
-        (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast("int"))).as("gh"))
+    val pref = prefixGrams(gramArr, threshold)
     val l = pref.select(col("block"), col("gh"), col("id").as("id_a"))
     val r = pref.select(col("block"), col("gh"), col("id").as("id_b"))
     val cand = l.join(r, Seq("block", "gh"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-    // Verify candidates per-row: |A∩B| via sorted-array intersection —
-    // candidates are few (near-dups + prefix collisions), so the per-pair set
-    // intersection replaces a shuffle of every co-occurrence row; above the
-    // docs gate the gram index is bloom-pruned to candidate ids first.
-    // the metric filter travels INTO the verify as `finish` so the segmented
-    // path materializes only surviving rows, never raw join output
-    verifiedIntersections(cand, gramArr, verifyPruneMinDocs, _
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("size_a") + col("size_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold))
-      .select(col("id_a"), col("id_b"), col("inter"), col("size_a"), col("size_b"),
-        col("jaccard"))
+    verifiedIntersections(cand, gramArr, "jaccard", col("inter").cast("double") /
+      (col("size_a") + col("size_b") - col("inter")).cast("double"), threshold)
   }
 
   /** One-sided CONTAINMENT near-dup pairs: |A∩B| / min(|A|,|B|) >= threshold —
     * catches a short doc embedded in a longer one (quote farms, page-plus-
     * boilerplate wrappers), which symmetric Jaccard misses because the union
     * term punishes the size gap. Same blocked, hashed-gram machinery as
-    * [[ngramJaccardPairs]]; the prefix filter is ASYMMETRIC: only the
-    * candidate's own size bounds its prefix (containment is measured against
-    * the smaller set, and the smaller set must share a gram within its first
-    * |S| − ceil(t·|S|) + 1 sorted grams — pigeonhole), while the containing
-    * side cannot prune (its bound would depend on the unknown partner size),
-    * so one side explodes prefixes and the other explodes all grams. Output:
-    * (id_a, id_b, inter, size_a, size_b, containment) with id_a < id_b. */
+    * [[ngramJaccardPairs]]; the prefix filter is ASYMMETRIC: only the smaller
+    * set's prefix bounds the pair (containment is measured against it), while
+    * the containing side cannot prune (its bound would depend on the unknown
+    * partner size), so one side explodes prefixes and the other all grams.
+    * Output: (id_a, id_b, inter, size_a, size_b, containment) with id_a < id_b. */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
                             blockCol: String, n: Int = 3,
-                            threshold: Double = 0.8,
-                            verifyPruneMinDocs: Long = VerifyPruneMinDocs): DataFrame = {
-    // same four-subtree gram index as ngramJaccardPairs; the default n=3
-    // shingle shape materializes (measured 7.9 s → 1.2 s at sf0.1, and 4.4×
-    // at 5M docs — see maybeMaterializeGrams)
+                            threshold: Double = 0.8): DataFrame = {
     val gramArr = gramIndex(df, idCol, textCol, blockCol, n)
-    val pref = gramArr.select(col("id"), col("block"), col("sz"),
-      explode(slice(col("harr"), lit(1),
-        (col("sz") - ceil(lit(threshold) * col("sz")) + 1).cast("int"))).as("gh"))
+    val pref = prefixGrams(gramArr, threshold)
     // (smaller-set prefix) × (any doc's full gram list); only rows where the
     // prefix side IS the smaller (or equal) doc can witness a qualifying pair,
     // so the size guard halves the candidate volume with zero recall loss.
@@ -693,12 +717,8 @@ object DedupSuite {
       .select(least(col("id_pref"), col("id_other")).as("id_a"),
         greatest(col("id_pref"), col("id_other")).as("id_b"))
       .distinct()
-    verifiedIntersections(cand, gramArr, verifyPruneMinDocs, _
-      .withColumn("containment",
-        col("inter").cast("double") / least(col("size_a"), col("size_b")).cast("double"))
-      .filter(col("containment") >= threshold))
-      .select(col("id_a"), col("id_b"), col("inter"), col("size_a"), col("size_b"),
-        col("containment"))
+    verifiedIntersections(cand, gramArr, "containment", col("inter").cast("double") /
+      least(col("size_a"), col("size_b")).cast("double"), threshold)
   }
 
   // ── cluster resolution ─────────────────────────────────────────────────────

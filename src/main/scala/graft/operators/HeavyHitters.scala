@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.expressions.MisraGries.misraGries
-import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -38,13 +37,8 @@ object HeavyHitters {
     require(phi > 1.0 / k,
       s"phi=$phi must exceed 1/k=${1.0 / k} for the sketch superset guarantee")
     require(fanin > 0, s"fanin must be positive: $fanin")
-    // Stage tokens into a column BEFORE shingling: an inlined tokens(text)
-    // inside the shingle lambda is re-evaluated per element (O(tokens²)).
-    val grams = Spread.widen(df.select(col(textCol)))
-      .select(TextFunctions.tokens(col(textCol)).as("toks"))
-      .select(explode(
-        if (n == 1) col("toks")
-        else TextFunctions.wordShinglesOf(col("toks"), n)).as("gram"))
+    val grams = DedupSuite.shingled(Spread.widen(df.select(col(textCol))), Nil,
+      textCol, n, tokenUnigrams = true)(explode(_).as("gram"))
     val sketchRows = grams
       .groupBy(pmod(spark_partition_id().cast("long"), lit(fanin.toLong)).as("_g"))
       .agg(misraGries(col("gram"), k).as("cand"), count(lit(1)).as("total"))

@@ -782,24 +782,19 @@ object ProductQuantization {
 
   /** Load a [[savePqIndex]] index. The geometry tables collect driver-side
     * (they are the same small reference objects every search builds); the
-    * code frame stays lazy and cell-partitioned. */
+    * code frame stays lazy and cell-partitioned. A tree with no committed
+    * meta — nothing saved, or the pre-generational plain `meta` layout —
+    * fails loudly ([[GenCommit.requireMeta]]). */
   def loadPqIndex(spark: SparkSession, path: String): PqIndex = {
     import spark.implicits._
-    // committed generational meta first (its code frame filtered to the
-    // committed gens — pruning composes with every probe's `cell` isin); a
-    // PRE-GENERATIONAL index (plain `meta` dir, codes partitioned by cell
-    // only) loads via the legacy branch — read the resolved layout, not an
-    // assumption about it (the events-table lesson, same as the
-    // has_rotation_matrix probe below)
-    val (meta, codesDf) = GenCommit.committedMeta(spark, path) match {
-      case Some(c) => (c.row, GenCommit.readGens(spark, path, "codes", c.gens))
-      case None => (spark.read.parquet(s"$path/meta").collect().head,
-        spark.read.parquet(s"$path/codes"))
-    }
+    // the committed generational meta; its code frame filtered to the
+    // committed gens (pruning composes with every probe's `cell` isin)
+    val committed = GenCommit.requireMeta(spark, path, "loadPqIndex")
+    val meta = committed.row
+    val codesDf = GenCommit.readGens(spark, path, "codes", committed.gens)
     val m = meta.getAs[Int]("m")
     val ksub = meta.getAs[Int]("ksub")
-    val hasRot = meta.schema.fieldNames.contains("has_rotation_matrix") &&
-      meta.getAs[Boolean]("has_rotation_matrix")
+    val hasRot = meta.getAs[Boolean]("has_rotation_matrix")
     val rotation =
       if (!hasRot) None
       else Some(spark.read.parquet(s"$path/rotation")

@@ -307,12 +307,16 @@ object PipelineQueries {
   /** The per-round c/b/d/e/f/g/h/t replay chain over a `t0(word, freq, i, s)`
     * exploded symbol table — shared by the code-point ([[bpeTrainCtes]]) and
     * byte-level ([[bpeTrainCtesByteLevel]]) preambles: the round machinery is
-    * alphabet-agnostic. */
+    * alphabet-agnostic. `c`, `b` and `t` are MATERIALIZED: `c` is read by
+    * `b` and `d`, `b` twice inside `d`, and DuckDB inlines an unmarked CTE
+    * into every reference, so each round would multiply the work of all
+    * earlier ones — q136's oracle ran out of a 4 GB cap after 103 s inlined
+    * and takes 0.6 s at 206 MB materialized (DuckDB 1.0.0). */
   private def bpeRoundCtes(rounds: Int): String = {
     val roundCtes = (1 to rounds).map { r =>
-      s"""c$r AS (SELECT word, freq, i, s,
+      s"""c$r AS MATERIALIZED (SELECT word, freq, i, s,
          |    lead(s) OVER (PARTITION BY word ORDER BY i) AS nxt FROM t${r - 1}),
-         |b$r AS (SELECT s AS lft, nxt AS rgt, sum(freq) AS cnt FROM c$r
+         |b$r AS MATERIALIZED (SELECT s AS lft, nxt AS rgt, sum(freq) AS cnt FROM c$r
          |  WHERE nxt IS NOT NULL GROUP BY 1, 2 ORDER BY cnt DESC, lft, rgt LIMIT 1),
          |d$r AS (SELECT word, freq, i, s, nxt,
          |    coalesce(s = (SELECT lft FROM b$r) AND nxt = (SELECT rgt FROM b$r),
@@ -324,7 +328,7 @@ object PipelineQueries {
          |g$r AS (SELECT *, coalesce(cand AND runpos % 2 = 1, false) AS sel FROM f$r),
          |h$r AS (SELECT *, coalesce(lag(sel) OVER (PARTITION BY word ORDER BY i),
          |    false) AS absorbed FROM g$r),
-         |t$r AS (SELECT word, freq,
+         |t$r AS MATERIALIZED (SELECT word, freq,
          |    CAST(row_number() OVER (PARTITION BY word ORDER BY i) AS INT) AS i,
          |    CASE WHEN sel THEN s || nxt ELSE s END AS s
          |  FROM h$r WHERE NOT absorbed)""".stripMargin

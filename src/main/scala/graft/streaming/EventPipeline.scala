@@ -150,20 +150,15 @@ object EventPipeline {
     * broadcast join on exploded grams — same shape, still stateless. */
   def streamingDecontaminate(docs: DataFrame, evalDocs: DataFrame,
                              textCol: String, n: Int = 3): DataFrame = {
-    import graft.functions.TextFunctions
+    import graft.operators.{Decontamination, DedupSuite}
     val evalSpark = evalDocs.sparkSession
     import evalSpark.implicits._
-    val grams = evalDocs
-      .select(TextFunctions.tokens(col(textCol)).as("_toks"))
-      .select(explode(array_distinct(
-        TextFunctions.wordShinglesOf(col("_toks"), n))).as("gram"))
-      .distinct().as[String].collect().toSeq
-    docs
-      .withColumn("_toks", TextFunctions.tokens(col(textCol)))
-      .withColumn("_grams", array_distinct(
-        TextFunctions.wordShinglesOf(col("_toks"), n)))
+    val grams = Decontamination.evalGrams(evalDocs, textCol, n)
+      .as[String].collect().toSeq
+    DedupSuite.shingled(docs, docs.columns.toSeq.map(col), textCol, n)(g =>
+        array_distinct(g).as("_grams"))
       .filter(!arrays_overlap(col("_grams"), typedlit(grams)))
-      .drop("_toks", "_grams")
+      .drop("_grams")
   }
 
   /** Streaming twin of [[graft.operators.LineDedup.removeRepeatedLines]]'s
@@ -618,14 +613,13 @@ object EventPipeline {
                             windowLen: String = "10 minutes",
                             shingleSize: Int = 3, numHashes: Int = 8,
                             bands: Int = 4): DataFrame = {
-    import graft.functions.TextFunctions
     import graft.operators.DedupSuite
-    val sig = DedupSuite.minHashSignature(
-      TextFunctions.wordShingles(col(textCol), shingleSize), numHashes)
-    minIdBandElection(docs
-      .withColumn("bnd", DedupSuite.lshBands(sig, numHashes, bands))
+    val banded = DedupSuite.shingled(docs, Seq(col(idCol), col(tsCol)), textCol,
+        shingleSize)(g => DedupSuite.lshBands(
+        DedupSuite.minHashSignature(g, numHashes), numHashes, bands).as("bnd"))
       .select(col(idCol), col(tsCol), posexplode(col("bnd"))
-        .as(Seq("band_idx", "band_key"))), idCol, tsCol, watermark, windowLen, bands)
+        .as(Seq("band_idx", "band_key")))
+    minIdBandElection(banded, idCol, tsCol, watermark, windowLen, bands)
   }
 
   /** The one in-window min-id band election of the streaming near-dup

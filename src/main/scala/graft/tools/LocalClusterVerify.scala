@@ -68,7 +68,7 @@ object LocalClusterVerify {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,16,4096]")
     val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
       "/root/repo/bench/tmp/lcluster")
-    val budget = sys.env.getOrElse("SPARK_GRAFT_VERIFY_BUDGET", (4L << 30).toString)
+    val budget = sys.env.get("SPARK_GRAFT_VERIFY_BUDGET").map(_.toLong).getOrElse(4L << 30)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT",
       "bench/results/r9_lcluster_verify.json")
     new File(localDir).mkdirs()
@@ -141,15 +141,17 @@ object LocalClusterVerify {
     // warm the scan/codegen path untimed so leg A doesn't absorb it
     spark.read.parquet(s"$sfDir/documents.parquet").limit(1000).count()
 
+    // the segmented leg sizes k from the estimate against `budget`; the
+    // unsegmented leg forces one dense pass
+    import graft.operators.DedupSuite.GramVerify
     val segStart = System.currentTimeMillis()
-    spark.conf.set("graft.verifyDiskBudgetBytes", budget)
-    val (segWall, segN, segSi, segChk, segErr) = leg()
+    val (segWall, segN, segSi, segChk, segErr) =
+      GramVerify.forcing(GramVerify.regime(_, budget))(leg())
     val segEnd = System.currentTimeMillis()
     Thread.sleep(1500) // let post-leg cleanup settle before the B baseline
     val unsegStart = System.currentTimeMillis()
-    spark.conf.unset("graft.verifyDiskBudgetBytes")
-    spark.conf.set("graft.verifySegments", "1")
-    val (unsegWall, unsegN, unsegSi, unsegChk, unsegErr) = leg()
+    val (unsegWall, unsegN, unsegSi, unsegChk, unsegErr) =
+      GramVerify.forcing(_ => GramVerify.Dense(1))(leg())
     val unsegEnd = System.currentTimeMillis()
     sampling = false
     sampler.join(2000)

@@ -1073,14 +1073,15 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("bloom-pruned verify join equals plain verify join (q45/q84 scale path)") {
-    // same docs through both verify regimes: verifyPruneMinDocs=0 forces the
-    // bloom-pruned gram-index path that replaces the full-corpus array shuffle
-    // at scale; default gate keeps the plain two-join tail at this size.
+    // same docs through both verify regimes: the seam forces the bloom-pruned
+    // gram-index path that replaces the full-corpus array shuffle at scale;
+    // the measured decision keeps the plain two-join tail at this size.
     // A bloom filter has no false negatives and the candidate join is exact,
     // so the two must produce identical rows.
+    import DedupSuite.GramVerify
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    // filler docs keep candidate selectivity under the 25% engage bar so the
-    // bloom path actually runs (near-dup ids 1/2/4/5 out of 25 docs)
+    // filler docs keep candidate selectivity under the 25% coverage bound
+    // (near-dup ids 1/2/4/5 out of 25 docs), the shape the prune is for
     val filler = (10L to 29L).map(i =>
       (i, s"f${i}a f${i}b f${i}c f${i}d f${i}e f${i}g", "b1"))
     val docs = (Seq(
@@ -1090,45 +1091,40 @@ class PipelineOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "src")
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))
-    val plainJ = DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src",
+    def jac() = DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src",
       n = 2, threshold = 0.5).collect().map(key).toSet
-    val prunedJ = DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src",
-      n = 2, threshold = 0.5, verifyPruneMinDocs = 0L).collect().map(key).toSet
-    assert(prunedJ == plainJ && plainJ.nonEmpty)
-    val plainC = DedupSuite.ngramContainmentPairs(docs, "doc_id", "text", "src",
+    def con() = DedupSuite.ngramContainmentPairs(docs, "doc_id", "text", "src",
       n = 2, threshold = 0.8).collect().map(key).toSet
-    val prunedC = DedupSuite.ngramContainmentPairs(docs, "doc_id", "text", "src",
-      n = 2, threshold = 0.8, verifyPruneMinDocs = 0L).collect().map(key).toSet
+    val plainJ = jac()
+    val prunedJ = GramVerify.forcing(_ => GramVerify.Pruned)(jac())
+    assert(prunedJ == plainJ && plainJ.nonEmpty)
+    val plainC = con()
+    val prunedC = GramVerify.forcing(_ => GramVerify.Pruned)(con())
     assert(prunedC == plainC && plainC.nonEmpty)
     // materialization × prune matrix: the gram index checkpointed or
-    // recomputed per subtree (graft.gramIndexMaterialize overrides the
-    // shape-derived default) must be byte-identical on the pruned path too
-    for (mat <- Seq("true", "false")) {
-      spark.conf.set("graft.gramIndexMaterialize", mat)
-      try {
-        val pj = DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src",
-          n = 2, threshold = 0.5, verifyPruneMinDocs = 0L).collect().map(key).toSet
-        assert(pj == plainJ, s"materialize=$mat pruned Jaccard diverged")
-        val pc = DedupSuite.ngramContainmentPairs(docs, "doc_id", "text", "src",
-          n = 2, threshold = 0.8, verifyPruneMinDocs = 0L).collect().map(key).toSet
-        assert(pc == plainC, s"materialize=$mat pruned containment diverged")
-      } finally spark.conf.unset("graft.gramIndexMaterialize")
+    // recomputed per subtree must be byte-identical on the pruned path too
+    for (mat <- Seq(true, false)) {
+      GramVerify.forcing(_ => GramVerify.Pruned, checkpointGrams = Some(mat)) {
+        assert(jac() == plainJ, s"materialize=$mat pruned Jaccard diverged")
+        assert(con() == plainC, s"materialize=$mat pruned containment diverged")
+      }
     }
     // empty candidate set through the pruned path stays empty (no NPE on the
     // empty bloom aggregate)
     val distinctDocs = Seq((1L, "aa bb cc", "b1"), (2L, "dd ee ff", "b1"))
       .toDF("doc_id", "text", "src")
-    assert(DedupSuite.ngramJaccardPairs(distinctDocs, "doc_id", "text", "src",
-      n = 1, threshold = 0.9, verifyPruneMinDocs = 0L).count() == 0L)
+    assert(GramVerify.forcing(_ => GramVerify.Pruned)(
+      DedupSuite.ngramJaccardPairs(distinctDocs, "doc_id", "text", "src",
+        n = 1, threshold = 0.9).count()) == 0L)
   }
 
   test("segmented verify equals unsegmented (dense-regime disk-bounded path)") {
-    // a corpus where EVERY doc is a candidate: coverage 1.0 keeps the bloom
-    // prune disengaged, so verifyPruneMinDocs=0 routes through the dense
-    // branch, and graft.verifySegments forces the K-pass segmented verify
-    // (the ×1000 one-box disk-wall path). Slices partition the pair set, so
+    // a corpus where EVERY doc is a candidate (coverage 1.0, the dense
+    // regime's shape); the seam forces the K-pass segmented verify (the
+    // ×1000 one-box disk-wall path). Slices partition the pair set, so
     // results must be byte-identical, including an empty slice (k=4 over few
     // pairs leaves some slices pairless).
+    import DedupSuite.GramVerify
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = Seq(
       (1L, base, "b1"), (2L, base + " lambda", "b1"), (3L, base + " mu", "b1"),
@@ -1136,28 +1132,97 @@ class PipelineOpsSpec extends SparkSpec {
       .toDF("doc_id", "text", "src")
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))
-    val plainJ = DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src",
+    def jac() = DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src",
       n = 2, threshold = 0.5).collect().map(key).toSet
-    val plainC = DedupSuite.ngramContainmentPairs(docs, "doc_id", "text", "src",
+    def con() = DedupSuite.ngramContainmentPairs(docs, "doc_id", "text", "src",
       n = 2, threshold = 0.8).collect().map(key).toSet
-    for (k <- Seq("2", "4")) {
-      spark.conf.set("graft.verifySegments", k)
-      try {
-        val segJ = DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src",
-          n = 2, threshold = 0.5, verifyPruneMinDocs = 0L).collect().map(key).toSet
+    val plainJ = jac()
+    val plainC = con()
+    for (k <- Seq(2, 4)) {
+      GramVerify.forcing(_ => GramVerify.Dense(k)) {
+        val segJ = jac()
         assert(segJ == plainJ && plainJ.nonEmpty, s"k=$k segmented Jaccard diverged")
-        val segC = DedupSuite.ngramContainmentPairs(docs, "doc_id", "text", "src",
-          n = 2, threshold = 0.8, verifyPruneMinDocs = 0L).collect().map(key).toSet
+        val segC = con()
         assert(segC == plainC && plainC.nonEmpty, s"k=$k segmented containment diverged")
-      } finally spark.conf.unset("graft.verifySegments")
+      }
     }
     // auto sizing never segments small pair sets even under a 1-byte budget
-    spark.conf.set("graft.verifyDiskBudgetBytes", "1")
-    try {
-      val autoJ = DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src",
-        n = 2, threshold = 0.5, verifyPruneMinDocs = 0L).collect().map(key).toSet
-      assert(autoJ == plainJ)
-    } finally spark.conf.unset("graft.verifyDiskBudgetBytes")
+    val autoJ = GramVerify.forcing(GramVerify.dense(_, budget = 1L))(jac())
+    assert(autoJ == plainJ)
+  }
+
+  test("gram verify regime: the measured decision at each bound") {
+    import DedupSuite.GramVerify._
+    def unread[T]: T = throw new AssertionError("count read by a decision that needs none")
+    // below the docs floor nothing else is measured
+    assert(regime(new Counts(MinDocs - 1, unread, unread, unread)) == Plain)
+    // coverage under the bound prunes without counting pairs
+    val docs = 1000000L
+    assert(regime(new Counts(docs, (MaxCoverage * docs).toLong - 1, unread, unread)) == Pruned)
+    // dense: small pair sets stay one pass without the mean-size aggregate
+    val cov = (MaxCoverage * docs).toLong
+    assert(regime(new Counts(docs, cov, MinSegmentPairs - 1, unread)) == Dense(1))
+    // above it the estimate sizes k: ceil(2 · pairs · meanGramSz · 8 / budget)
+    val e = Estimate(MinSegmentPairs * 100, 50.0, DiskBudget)
+    assert(e.k == math.ceil(2.0 * MinSegmentPairs * 100 * 50.0 * 8.0 / DiskBudget).toInt)
+    assert(regime(new Counts(docs, docs, MinSegmentPairs * 100, 50.0)) == Dense(e.k, Some(e)))
+    assert(regime(new Counts(docs, docs, MinSegmentPairs, 1.0)) ==
+      Dense(1, Some(Estimate(MinSegmentPairs, 1.0, DiskBudget))))
+    // k is capped at 64 passes
+    assert(dense(new Counts(docs, docs, MinSegmentPairs, 1.0), budget = 1L) ==
+      Dense(64, Some(Estimate(MinSegmentPairs, 1.0, 1L))))
+    assert(Estimate(1000000L, 23.2, 1L << 30).toString ==
+      "pairs=1000000 meanGramSz=23.2 estBytes=3.71e+08 budget=1073741824 -> k=1")
+    // gram index: shingles always checkpoint; token unigrams only when small
+    assert(checkpointGrams(2, unread))
+    assert(checkpointGrams(1, Some(SmallInputBytes - 1)))
+    assert(!checkpointGrams(1, Some(SmallInputBytes)))
+    assert(!checkpointGrams(1, None))
+  }
+
+  test("text near-dup family: null, empty, blank and short docs") {
+    // null text, "", whitespace-only text (trim keeps the tab) and docs with
+    // fewer tokens than n, through every consumer of the shared shingle
+    // relation. The n = 1 token path gives null text no grams while the
+    // shingle form gives it one null shingle; each caller keeps its own
+    // answer (rows pinned from the implementation before the relation was
+    // shared).
+    import graft.streaming.EventPipeline
+    val docs = Seq[(Long, String, String)](
+      (1L, null, "b"), (2L, "", "b"), (3L, " \t  ", "b"), (4L, "solo pair", "b"),
+      (5L, "Solo  pair", "b"), (6L, null, "b"), (7L, "alpha beta gamma delta", "b"),
+      (8L, "", "b")).toDF("doc_id", "text", "src")
+    val evalDocs = Seq[(Long, String)](
+      (101L, null), (102L, "solo pair"), (103L, ""), (104L, "gamma delta epsilon"))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame): String =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.mkString(";")
+    val same13 = "1|6|1|1|1|1.0;2|8|1|1|1|1.0;4|5|1|1|1|1.0"
+    val expected = Map(
+      1 -> Seq("2|3|1|1|1|1.0;2|8|1|1|1|1.0;3|8|1|1|1|1.0;4|5|2|2|2|1.0",
+        "2|3|1|1|1|1.0;2|8|1|1|1|1.0;3|8|1|1|1|1.0;4|5|2|2|2|1.0",
+        "1|6;2|3;2|8;3|8;4|5", "2|1;3|1;4|2;5|2;7|2;8|1",
+        "101|1|0|0.0;102|2|2|1.0;103|1|1|1.0;104|3|2|0.6666666666666666",
+        "alpha|1;beta|1;delta|1;gamma|1;pair|2;solo|2;|4", "", ""),
+      2 -> Seq(same13, same13, "1|6;2|8;4|5", "2|1;4|1;5|1;7|1;8|1",
+        "101|1|0|0.0;102|1|1|1.0;103|1|1|1.0;104|2|1|0.5",
+        " |1;alpha beta|1;beta gamma|1;gamma delta|1;solo pair|2;|2", "", "3"),
+      3 -> Seq(same13, same13, "1|6;2|8;4|5", "2|1;4|1;5|1;8|1",
+        "101|1|0|0.0;102|1|1|1.0;103|1|1|1.0;104|1|0|0.0",
+        " |1;alpha beta gamma|1;beta gamma delta|1;solo pair|2;|2", "", "3;7"))
+    for (n <- Seq(1, 2, 3)) {
+      val got = Seq(
+        DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src", n, 0.5),
+        DedupSuite.ngramContainmentPairs(docs, "doc_id", "text", "src", n, 0.5),
+        DedupSuite.minHashLshPairs(docs, "doc_id", "text", n),
+        Decontamination.contaminationReport(docs, evalDocs, "doc_id", "text", n),
+        Decontamination.evalContaminationReport(docs, evalDocs, "doc_id", "text", n),
+        HeavyHitters.heavyGrams(docs, "text", n, 0.05),
+        EventPipeline.streamingDecontaminate(docs, evalDocs, "text", n).select("doc_id"),
+        EventPipeline.streamingDecontaminate(docs, evalDocs.filter($"text".isNotNull),
+          "text", n).select("doc_id")).map(rows)
+      assert(got == expected(n), s"n=$n")
+    }
   }
 
   test("tracked-shuffle scope reclaims exactly the unit's own shuffles") {

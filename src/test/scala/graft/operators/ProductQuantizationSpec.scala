@@ -725,7 +725,9 @@ class ProductQuantizationSpec extends SparkSpec {
     assert(pq.loadPqIndex(spark, path).codes.count() === 50L)
   }
 
-  test("loadPqIndex legacy fallback: a pre-generational index (plain meta, ungenerated codes) still loads") {
+  test("loadPqIndex rejects a plain-meta tree loudly") {
+    // the pre-generational layout (cell-only codes + a plain `meta`) is no
+    // longer loaded: the tree has no committed meta, and the load names it
     val dims = 8; val m = 4; val ksub = 3; val kCent = 3
     val df = syntheticCorpus(30, dims).cache()
     val coarse = SimilaritySearch.kmeansCentroids(df, "v", "id", kCent, iters = 2)
@@ -735,7 +737,6 @@ class ProductQuantizationSpec extends SparkSpec {
       .select($"id".as("vec_id"), pq.packCodes($"pq_codes", m, ksub).as("packed"),
         $"cell")
     val path = tempDir().resolve("pqlegacy").toString
-    // hand-write the pre-round-16 layout: cell-only codes + a plain `meta`
     enc.write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
     coarse.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
       .coalesce(1).write.parquet(s"$path/coarse")
@@ -745,17 +746,11 @@ class ProductQuantizationSpec extends SparkSpec {
     Seq((m, ksub, true, Option.empty[Long], false))
       .toDF("m", "ksub", "residual", "rotation_seed", "has_rotation_matrix")
       .coalesce(1).write.parquet(s"$path/meta")
-    val idx = pq.loadPqIndex(spark, path)
-    assert(idx.m === m && idx.ksub === ksub && idx.residual)
-    assert(idx.codes.count() === 30L)
-    val q = df.filter($"id" === 3L).select($"v").as[Seq[Double]].collect().head
-    val got = pq.ivfPqResidualTopK(idx.codes, "packed", "vec_id", "cell",
-        idx.coarse, idx.codebooks, q, nprobe = kCent, k = 5)
-      .as[(Long, Double)].collect().toSeq
-    val direct = pq.ivfPqResidualTopK(enc, "packed", "vec_id", "cell",
-        coarse, cb, q, nprobe = kCent, k = 5)
-      .as[(Long, Double)].collect().toSeq
-    assert(got === direct)
+    val e = intercept[IllegalArgumentException](pq.loadPqIndex(spark, path))
+    assert(e.getMessage == s"loadPqIndex: no committed index meta at $path — save first")
+    // the same tree saved through savePqIndex loads
+    pq.savePqIndex(enc, "vec_id", "packed", "cell", coarse, cb, residual = true, path)
+    assert(pq.loadPqIndex(spark, path).codes.count() === 30L)
   }
 
   test("codeWidth: ceil(log2 ksub) with a floor of one bit") {

@@ -61,27 +61,55 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** Every gram verify regime through the seam: the measured default
+    * (plain at this size), bloom-pruned, dense unsegmented and segmented. */
+  private val regimes: Seq[(String, Option[DedupSuite.GramVerify.Regime])] = {
+    import DedupSuite.GramVerify._
+    Seq("measured" -> None, "pruned" -> Some(Pruned), "dense" -> Some(Dense(1)),
+      "k=2" -> Some(Dense(2)), "k=4" -> Some(Dense(4)))
+  }
+
+  private def inRegime[T](r: Option[DedupSuite.GramVerify.Regime])(body: => T): T =
+    r.fold(body)(forced => DedupSuite.GramVerify.forcing(_ => forced)(body))
+
+  /** Distinct word n-gram shingles, joined like `wordShinglesOf`: a doc
+    * shorter than n is one shingle. */
+  private def naiveGrams(s: String, n: Int): Set[Seq[String]] = {
+    val toks = s.split("\\s+").toSeq
+    if (toks.size >= n) toks.sliding(n).toSet else Set(toks)
+  }
+
   test("jaccard pairs ≡ naive set arithmetic within blocks") {
     val rnd = new Random(7)
     val vocab = Vector("aa", "bb", "cc", "dd", "ee", "ff", "gg", "hh")
+    val pairsSeen = scala.collection.mutable.Map(1 -> 0, 2 -> 0, 3 -> 0)
     (1 to rounds).foreach { round =>
       val docs = (1 to 25).map { i =>
         val words = Seq.fill(3 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size)))
         (i.toLong, words.mkString(" "), s"b${rnd.nextInt(2)}")
       }
-      val naive = (for {
-        a <- docs; b <- docs
-        if a._3 == b._3 && a._1 < b._1
-        sa = a._2.split("\\s+").toSet; sb = b._2.split("\\s+").toSet
-        j = sa.intersect(sb).size.toDouble / sa.union(sb).size.toDouble
-        if j >= 0.6
-      } yield (a._1, b._1)).toSet
-      val got = DedupSuite.ngramJaccardPairs(
-        docs.toDF("doc_id", "text", "source"), "doc_id", "text", "source",
-        n = 1, threshold = 0.6)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == naive, s"round=$round")
+      val df = docs.toDF("doc_id", "text", "source")
+      for (n <- Seq(1, 2, 3)) {
+        // longer grams over an 8-word vocabulary rarely reach 0.6; lower
+        // thresholds keep pairs (pairsSeen below)
+        val t = Map(1 -> 0.6, 2 -> 0.3, 3 -> 0.1)(n)
+        val naive = (for {
+          a <- docs; b <- docs
+          if a._3 == b._3 && a._1 < b._1
+          sa = naiveGrams(a._2, n); sb = naiveGrams(b._2, n)
+          j = sa.intersect(sb).size.toDouble / sa.union(sb).size.toDouble
+          if j >= t
+        } yield (a._1, b._1)).toSet
+        pairsSeen(n) += naive.size
+        // the forced regimes on every third round: each pass is several jobs
+        for ((name, r) <- if (round % 3 == 0) regimes else regimes.take(1)) {
+          val got = inRegime(r)(DedupSuite.ngramJaccardPairs(df, "doc_id", "text", "source",
+            n = n, threshold = t).collect().map(row => (row.getLong(0), row.getLong(1))).toSet)
+          assert(got == naive, s"round=$round n=$n regime=$name")
+        }
+      }
     }
+    assert(pairsSeen.values.forall(_ > 0), s"some n never produced a pair: $pairsSeen")
   }
 
   test("heavy hitters ≡ exact groupBy/having, across random corpora and sketch sizes") {
@@ -358,22 +386,21 @@ class PropertySpec extends SparkSpec {
       val all = docs ++ wrapped
       val df = all.map { case (id, t) => (id, t, "blk") }.toDF("doc_id", "text", "src")
       val t = 0.8
-      def grams(s: String): Set[Seq[String]] = {
-        val toks = s.split("\\s+").toSeq
-        if (toks.size >= 3) toks.sliding(3).map(_.toSeq).toSet else Set(toks)
-      }
       val naive = (for {
         a <- all; b <- all
         if a._1 < b._1
-        ga = grams(a._2); gb = grams(b._2)
+        ga = naiveGrams(a._2, 3); gb = naiveGrams(b._2, 3)
         inter = (ga intersect gb).size
         if inter.toDouble / math.min(ga.size, gb.size) >= t
       } yield (a._1, b._1)).toSet
-      val got = DedupSuite.ngramContainmentPairs(df, "doc_id", "text", "src", 3, t)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == naive, s"round=$round")
-      docs.filter(_._1 % 5 == 0).foreach { case (id, _) =>
-        assert(got.contains((id, id + 1000L)), s"round=$round wrapped twin of $id missed")
+      for ((name, r) <- if (round % 3 == 0) regimes else regimes.take(1)) {
+        val got = inRegime(r)(DedupSuite.ngramContainmentPairs(df, "doc_id", "text", "src", 3, t)
+          .collect().map(row => (row.getLong(0), row.getLong(1))).toSet)
+        assert(got == naive, s"round=$round regime=$name")
+        docs.filter(_._1 % 5 == 0).foreach { case (id, _) =>
+          assert(got.contains((id, id + 1000L)),
+            s"round=$round regime=$name wrapped twin of $id missed")
+        }
       }
     }
   }
