@@ -37,7 +37,7 @@ object BpeTrainer {
     * merge iterations. */
   def preTokenFrequencies(docs: DataFrame, textCol: String,
                           byteLevel: Boolean = false): DataFrame =
-    Spread.widen(docs.select(col(textCol)))
+    docs.select(col(textCol))
       .select(explode(preTokens(textCol, byteLevel)).as("pre_token"))
       .groupBy(col("pre_token")).agg(count(lit(1)).as("freq"))
 
@@ -193,7 +193,7 @@ object BpeTrainer {
     * (symbols are byte-level; the remap is a bijection). */
   def encode(docs: DataFrame, textCol: String, merges: DataFrame,
              outCol: String = "bpe_tokens", byteLevel: Boolean = false): DataFrame =
-    Spread.widen(docs).withColumn(outCol, graft.expressions.BpeApply.symbols(
+    docs.withColumn(outCol, graft.expressions.BpeApply.symbols(
       preTokens(textCol, byteLevel), collectMerges(merges)))
 
   /** Append `outCol`: BPE token IDS of `textCol` under (merges, vocab) — the
@@ -211,7 +211,7 @@ object BpeTrainer {
                   oovId: Option[Int] = None, byteLevel: Boolean = false): DataFrame = {
     val v = vocabDf.orderBy(col("id")).select(col("sym"), col("id").cast("int"))
       .collect()
-    Spread.widen(docs).withColumn(outCol, graft.expressions.BpeApply.ids(
+    docs.withColumn(outCol, graft.expressions.BpeApply.ids(
       preTokens(textCol, byteLevel), collectMerges(merges),
       v.map(_.getString(0)), v.map(_.getInt(1)), oovId))
   }

@@ -77,12 +77,11 @@ object CurationPipeline {
              unigramFilter: Option[UnigramNllFilter] = None,
              knFilter: Option[KnFilter] = None,
              repetitionGate: Option[RepetitionStats.RepetitionThresholds] = None): DataFrame = {
-    // NO widen at the head: the quality/langid gates are scan-side column
-    // predicates that shrink the corpus BEFORE any shuffle (filter-first is
-    // the point of the stage order) — a head repartition would round-robin
-    // the FULL text payload ahead of the filters (measured a 1.3-1.8x
-    // pessimization in r16). The heavy per-row legs downstream widen their
-    // own narrow projections, byte-gated, inside the operators they live in.
+    // NO repartition at the head: the quality/langid gates are scan-side
+    // column predicates that shrink the corpus BEFORE any shuffle
+    // (filter-first is the point of the stage order) — a head repartition
+    // would round-robin the FULL text payload ahead of the filters (measured
+    // a 1.3-1.8x pessimization in r16).
     val gated0 = docs.filter(
       TextFunctions.qualityScore(col(textCol)) >= minQuality &&
         TextFunctions.langIdEn(col(textCol)) === "en")

@@ -99,9 +99,7 @@ object DedupSuite {
   def minHashBandKeys(df: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int = 3, numHashes: Int = 8, bands: Int = 4): DataFrame = {
     val rule = MinHashBands(numHashes, bands)
-    // widen first: tokenize + shingle + per-shingle md5 is the heavy per-row
-    // leg, and a single-row-group corpus file plans as a 1-task scan
-    val sh = shingled(Spread.widen(df.select(col(idCol), col(textCol))),
+    val sh = shingled(df.select(col(idCol), col(textCol)),
         Seq(col(idCol).as("id")), textCol, shingleSize)(explode(_).as("s"))
       .select(col("id"), md5(col("s")).as("d"))
       .select(col("id"), md5Word(col("d"), 0).as("a"), md5Word(col("d"), 1).as("b"))
@@ -241,7 +239,7 @@ object DedupSuite {
     require(bits % LanesPerWord == 0 && bits <= 64, s"bits must be <=64, multiple of 4: $bits")
     val nWords = (bits + 31) / 32
     val nLanes = bits / LanesPerWord
-    val tok = Spread.widen(df.select(col(idCol), col(textCol)))
+    val tok = df.select(col(idCol), col(textCol))
       .select(col(idCol).as("id"), explode(TextFunctions.tokens(col(textCol))).as("t"))
       .select(col("id"), md5(col("t")).as("d"))
       .select(col("id") +: (0 until nWords).map(j => md5Word(col("d"), j).as(s"w$j")): _*)
@@ -646,7 +644,7 @@ object DedupSuite {
     * materialized once. */
   private def gramIndex(df: DataFrame, idCol: String, textCol: String,
                         blockCol: String, n: Int): DataFrame = {
-    val idx = shingled(Spread.widen(df.select(col(idCol), col(blockCol), col(textCol))),
+    val idx = shingled(df.select(col(idCol), col(blockCol), col(textCol)),
         Seq(col(idCol).as("id"), col(blockCol).as("block")), textCol, n,
         tokenUnigrams = true)(g =>
         array_sort(array_distinct(transform(g, x => xxhash64(x)))).as("harr"))

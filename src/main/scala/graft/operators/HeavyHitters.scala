@@ -37,7 +37,7 @@ object HeavyHitters {
     require(phi > 1.0 / k,
       s"phi=$phi must exceed 1/k=${1.0 / k} for the sketch superset guarantee")
     require(fanin > 0, s"fanin must be positive: $fanin")
-    val grams = DedupSuite.shingled(Spread.widen(df.select(col(textCol))), Nil,
+    val grams = DedupSuite.shingled(df.select(col(textCol)), Nil,
       textCol, n, tokenUnigrams = true)(explode(_).as("gram"))
     val sketchRows = grams
       .groupBy(pmod(spark_partition_id().cast("long"), lit(fanin.toLong)).as("_g"))

@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * must repeat > maxDocs times to enter it), so the rewrite pass is either a
   * per-row HOF filter against the broadcast set (zero further shuffle) or,
   * when the set is too large to collect, a distributed explode → broadcast
-  * anti-join → positional rebuild (`broadcastRebuild = false`). Both paths are
-  * spec-proven identical.
+  * anti-join → positional rebuild. Both paths are spec-proven identical.
   *
   * The within-document variant shuffles NOTHING: first-occurrence filtering is
   * a per-row higher-order function evaluated during the scan.
@@ -47,11 +46,11 @@ object LineDedup {
     * clean_text) — a doc whose every line is boilerplate survives with
     * clean_text = "" (dropping whole docs is a policy the caller applies).
     *
-    * `broadcastRebuild = true` collects the offending set to the driver (as
-    * Spark-computed xxhash64 values — 8 bytes/line, hashed by the same engine
-    * function the scan side uses, so there is no cross-implementation hash
-    * drift) and rewrites per-row with ZERO extra shuffle: each line's hash is
-    * binary-searched against the sorted set
+    * An offending set of at most `maxBadLines` lines is collected to the
+    * driver (as Spark-computed xxhash64 values — 8 bytes/line, hashed by the
+    * same engine function the scan side uses, so there is no
+    * cross-implementation hash drift) and rewrites per-row with ZERO extra
+    * shuffle: each line's hash is binary-searched against the sorted set
     * ([[graft.expressions.SortedLongSetContains]], O(log B) per line — the
     * previous literal-array `array_contains` was a linear scan per line, which
     * made the rewrite L·B ≈ quadratic under corpus growth: measured 69× per
@@ -60,33 +59,25 @@ object LineDedup {
     * B ≤ 2²⁰ that is P < 6e-14 per line, the same accepted trade as the hashed
     * gram sets in [[DedupSuite.ngramJaccardPairs]]. Sets larger than
     * `maxBadLines` (a driver-memory bound, not a scan-cost bound) fall through
-    * to the distributed path instead of failing. `false` skips the driver
-    * materialization entirely: posexplode → anti-join (AQE picks broadcast vs
-    * shuffle from the actual set size) → positional re-assembly (one extra
-    * shuffle keyed on the doc id). Both paths are spec-proven identical. */
+    * to the distributed path instead of failing: posexplode → anti-join (AQE
+    * picks broadcast vs shuffle from the actual set size) → positional
+    * re-assembly (one extra shuffle keyed on the doc id). Both paths are
+    * spec-proven identical. */
   def removeRepeatedLines(docs: DataFrame, idCol: String, textCol: String,
-                          maxDocs: Int, broadcastRebuild: Boolean = true,
-                          maxBadLines: Int = 1 << 20): DataFrame = {
+                          maxDocs: Int, maxBadLines: Int = 1 << 20): DataFrame = {
     require(maxDocs >= 1, s"maxDocs must be >= 1: $maxDocs")
     val staged = docs.select(col(idCol), linesOf(col(textCol)).as("_lines"))
     val bad = repeatedLines(docs, textCol, maxDocs).select(col("line"))
-    val badHashes: Option[Array[Long]] =
-      if (broadcastRebuild) {
-        val collected = bad.select(xxhash64(col("line")))
-          .limit(maxBadLines + 1).collect().map(_.getLong(0))
-        if (collected.length <= maxBadLines) Some(collected) else None // fall through
-      } else None
-    badHashes match {
-      case Some(hashes) =>
-        val kept = filter(col("_lines"), l =>
-          !graft.expressions.SortedLongSetContains.contains(xxhash64(l), hashes))
-        staged.select(col(idCol),
-          size(col("_lines")).cast("long").as("n_lines"),
-          (size(col("_lines")) - size(kept)).cast("long").as("n_removed"),
-          array_join(kept, "\n").as("clean_text"))
-      case None =>
-        rebuildDistributed(staged, bad, idCol)
-    }
+    val badHashes = bad.select(xxhash64(col("line")))
+      .limit(maxBadLines + 1).collect().map(_.getLong(0))
+    if (badHashes.length <= maxBadLines) {
+      val kept = filter(col("_lines"), l =>
+        !graft.expressions.SortedLongSetContains.contains(xxhash64(l), badHashes))
+      staged.select(col(idCol),
+        size(col("_lines")).cast("long").as("n_lines"),
+        (size(col("_lines")) - size(kept)).cast("long").as("n_removed"),
+        array_join(kept, "\n").as("clean_text"))
+    } else rebuildDistributed(staged, bad, idCol)
   }
 
   private def rebuildDistributed(staged: DataFrame, bad: DataFrame,

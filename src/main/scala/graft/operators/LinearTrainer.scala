@@ -86,7 +86,7 @@ object LinearTrainer {
     // CollapseProject alias-cost guard does not apply, so the per-token
     // hashing re-runs per DIMENSION inside the count lambda (measured 22 s →
     // 1.6 s for 3 iterations at sf0.1, commit e5cd11a)
-    val staged = Spread.widen(feat.select(col(featuresCol), col(labelCol))).localCheckpoint()
+    val staged = feat.select(col(featuresCol), col(labelCol)).localCheckpoint()
     val w = Array.fill(dims)(0L)
     for (_ <- 1 to iters) {
       val margin = dotWithWeights(col(featuresCol), w.toSeq) * col(labelCol)
@@ -190,7 +190,7 @@ object LinearTrainer {
                                     iters: Int): (Array[Long], Array[Long]) = {
     require(dims >= 1 && iters >= 1, s"need dims >= 1 and iters >= 1, got $dims/$iters")
     // lineage-cut once: training is inherently multi-pass (see perceptronTrain)
-    val staged = Spread.widen(feat.select(col(sparseCol), col(labelCol))).localCheckpoint()
+    val staged = feat.select(col(sparseCol), col(labelCol)).localCheckpoint()
     sparseTrainLoop(staged, sparseCol, labelCol, dims, iters)
   }
 
@@ -203,7 +203,7 @@ object LinearTrainer {
                               classCol: String, dims: Int, iters: Int,
                               averaged: Boolean = false): Seq[(String, Array[Long])] = {
     require(dims >= 1 && iters >= 1, s"need dims >= 1 and iters >= 1, got $dims/$iters")
-    val staged = Spread.widen(feat.select(col(sparseCol), col(classCol))).localCheckpoint()
+    val staged = feat.select(col(sparseCol), col(classCol)).localCheckpoint()
     val classes = staged.select(col(classCol)).distinct()
       .collect().map(_.getString(0)).sorted.toSeq // bounded: #classes
     require(classes.length >= 2,

@@ -40,19 +40,16 @@ object NgramLm {
         i => struct(element_at(toks, i).as("w1"),
           element_at(toks, i + lit(1)).as("w2"))))
 
-  /** (extra columns…, exploded bigram struct `b`) with tokens staged. The
-    * input is widened first ([[Spread.widen]]): tokenize + explode is the
-    * heavy per-row leg, and a single-row-group corpus file would otherwise
-    * run it on one core. */
+  /** (extra columns…, exploded bigram struct `b`) with tokens staged. */
   private def explodedBigrams(df: DataFrame, keep: Seq[String],
                               textCol: String): DataFrame =
-    Spread.widen(df.select((keep :+ textCol).map(col): _*))
+    df.select((keep :+ textCol).map(col): _*)
       .select(keep.map(col) :+ TextFunctions.tokens(col(textCol)).as("_toks"): _*)
       .select(keep.map(col) :+ explode(bigramsOf(col("_toks"))).as("b"): _*)
 
   /** Trained unigram table (w, c) — one map-side-combined aggregate. */
   def unigramCounts(docs: DataFrame, textCol: String): DataFrame =
-    Spread.widen(docs.select(col(textCol)))
+    docs.select(col(textCol))
       .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
 
@@ -126,7 +123,7 @@ object NgramLm {
 
   private def explodedTrigrams(df: DataFrame, keep: Seq[String],
                                textCol: String): DataFrame =
-    Spread.widen(df.select((keep :+ textCol).map(col): _*))
+    df.select((keep :+ textCol).map(col): _*)
       .select(keep.map(col) :+ TextFunctions.tokens(col(textCol)).as("_toks"): _*)
       .select(keep.map(col) :+ explode(trigramsOf(col("_toks"))).as("g"): _*)
 

@@ -95,7 +95,7 @@ object ProductQuantization {
     * native expression, zero shuffle. */
   def encode(df: DataFrame, vecCol: String, codebooks: Codebooks,
              codesCol: String = "pq_codes"): DataFrame =
-    Spread.widen(df).withColumn(codesCol, PqEncode(col(vecCol), codebooks))
+    df.withColumn(codesCol, PqEncode(col(vecCol), codebooks))
 
   /** Pack an m-code array into ONE long: code `s` occupies bits
     * [s·width, (s+1)·width) where width = ceil(log2 ksub) — the 4-byte-per-
@@ -318,7 +318,7 @@ object ProductQuantization {
   def encodeResidual(df: DataFrame, vecCol: String, cellCol: String,
                      coarse: Seq[Seq[Double]], codebooks: Codebooks,
                      codesCol: String = "pq_codes"): DataFrame =
-    Spread.widen(df).withColumn(codesCol, graft.expressions.PqResidualEncode(
+    df.withColumn(codesCol, graft.expressions.PqResidualEncode(
       col(vecCol), col(cellCol).cast("int"), coarse, codebooks))
 
   /** Per-CELL ADC lookup table for one query under residual encoding:

@@ -32,11 +32,9 @@ object Profiler {
         min(col(c)).cast("string").as(s"${c}__min"),
         max(col(c)).cast("string").as(s"${c}__max"))
     }
-    // project to the profiled columns, then widen: the multi-distinct Expand
-    // multiplies rows 4× before the exchange, and a single-row-group input
-    // would push all of it through one task ([[Spread]]); count/distinct/
-    // min/max are exact under any partitioning
-    val wide = Spread.widen(df.select(targets.map(col): _*))
+    // project to the profiled columns first: the multi-distinct Expand
+    // multiplies rows 4× before the exchange
+    val wide = df.select(targets.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
     val stackExpr =
       s"stack(${targets.size}, " +
@@ -61,9 +59,8 @@ object Profiler {
   def corpusReport(docs: DataFrame, sourceCol: String, textCol: String): DataFrame = {
     val text = col(textCol)
     val q = TextFunctions.qualityScore(text)
-    // widen: tokenize + quality scoring is heavy per-row work off what may
-    // be a 1-task scan; every aggregate here is integer-exact by design
-    Spread.widen(docs.select(col(sourceCol), col(textCol)))
+    // every aggregate here is integer-exact by design
+    docs.select(col(sourceCol), col(textCol))
       .select(col(sourceCol).as("source"),
       TextFunctions.tokenCount(text).as("_nt"),
       TextFunctions.bpeTokenCount(text).as("_nb"),

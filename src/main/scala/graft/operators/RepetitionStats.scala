@@ -170,7 +170,7 @@ object RepetitionStats {
   def withRepetitionSignals(docs: DataFrame, textCol: String = "text",
                             topN: Int = 2, dupN: Int = 5): DataFrame = {
     val sig = graft.expressions.RepetitionSignals.signals(col(textCol), topN, dupN)
-    Spread.widen(docs).withColumn("_rs_sig", sig)
+    docs.withColumn("_rs_sig", sig)
       .withColumn("dup_line_frac", col("_rs_sig").getField("dup_line_frac"))
       .withColumn("dup_line_char_frac", col("_rs_sig").getField("dup_line_char_frac"))
       .withColumn("dup_para_frac", col("_rs_sig").getField("dup_para_frac"))

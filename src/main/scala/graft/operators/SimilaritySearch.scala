@@ -272,7 +272,7 @@ object SimilaritySearch {
     * parquet partition pruning (only nprobe/k of the files are read). */
   def assignCells(df: DataFrame, vecCol: String, centroids: Seq[Seq[Double]],
                   cellCol: String = "ivf_cell"): DataFrame =
-    Spread.widen(df).withColumn(cellCol, nearestCentroid(col(vecCol), centroids))
+    df.withColumn(cellCol, nearestCentroid(col(vecCol), centroids))
 
   /** IVF search over a PRE-ASSIGNED corpus ([[assignCells]]): the production
     * shape — the per-search cost is the probe-cell scan plus top-k, never a

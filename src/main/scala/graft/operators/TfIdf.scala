@@ -32,7 +32,7 @@ object TfIdf {
     * score desc with lexical term tiebreak. */
   def topTerms(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    val tf = Spread.widen(df.select(col(idCol), col(textCol)))
+    val tf = df.select(col(idCol), col(textCol))
       .select(col(idCol).as("id"), explode(TextFunctions.tokens(col(textCol))).as("term"))
       .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))

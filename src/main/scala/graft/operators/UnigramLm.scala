@@ -261,7 +261,7 @@ object UnigramLm {
     val probs = new java.util.HashMap[String, java.lang.Double](counts.length * 2)
     counts.foreach { case (p, c) => probs.put(p, c.toDouble / total.toDouble) }
     val bc = spark.sparkContext.broadcast(probs)
-    val pts = Spread.widen(docs.select(col(idCol), col(textCol)))
+    val pts = docs.select(col(idCol), col(textCol))
       .select(col(idCol).cast("long").as("doc_id"),
         preTokensOf(textCol, byteLevel).as("_pts"))
     pts.as[(Long, Seq[String])].mapPartitions { it =>
@@ -325,7 +325,7 @@ object UnigramLm {
     }
     val bcP = spark.sparkContext.broadcast(probs)
     val bcB = spark.sparkContext.broadcast(bits)
-    Spread.widen(docs.select(col(idCol), col(textCol)))
+    docs.select(col(idCol), col(textCol))
       .select(col(idCol).cast("long").as("doc_id"),
         preTokensOf(textCol, byteLevel).as("_pts"))
       .as[(Long, Seq[String])].mapPartitions { it =>
@@ -391,7 +391,7 @@ object UnigramLm {
       .foreach { case (p, i) => ids.put(p, i) }
     val bcP = spark.sparkContext.broadcast(probs)
     val bcI = spark.sparkContext.broadcast(ids)
-    Spread.widen(docs.select(col(idCol), col(textCol)))
+    docs.select(col(idCol), col(textCol))
       .select(col(idCol).cast("long").as("doc_id"),
         preTokensOf(textCol, byteLevel).as("_pts"))
       .as[(Long, Seq[String])].mapPartitions { it =>

@@ -104,14 +104,15 @@ object PipelineQueries {
   /** Distributed q137 fixture: REAL 8×8 grayscale PNGs (encodePngGray) from
     * [[grayFor]], one per document — the hash pipeline must decode them with
     * the real codec to reproduce the oracle's arithmetic. */
-  private def imageFixture(docs: DataFrame): DataFrame = {
+  private[queries] def imageFixture(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // widen the id scan first (unconditionally — the caller declares the
-    // compute heavy): payload synthesis + codec encode is the heavy per-row
-    // leg over 8-byte rows, and a single-row-group corpus file plans as ONE
-    // task
-    graft.operators.Spread.widenForCompute(docs.select(col("doc_id"))).as[Long].map { id =>
+    // spread the id scan over the cores first: payload synthesis + codec
+    // encode is the heavy per-row leg over 8-byte rows, and the corpus file
+    // plans as ONE task at every scale the suite runs (a measured r16 win,
+    // OPTIMIZATION_r17.md; the audio fixture below is the counter-case)
+    val ids = docs.select(col("doc_id")).repartition(spark.sparkContext.defaultParallelism)
+    ids.as[Long].map { id =>
       (id, graft.operators.Multimodal.encodePngGray(8, 8,
         Array.tabulate(64)(p => grayFor(id, p))))
     }.toDF("media_id", "payload")
@@ -132,14 +133,15 @@ object PipelineQueries {
   /** Distributed q147 fixture: REAL multi-frame grayscale GIFs
     * (encodeGifGray — lossless indexed palette) from [[vidGray]], one clip
     * per document. */
-  private def videoFixture(docs: DataFrame): DataFrame = {
+  private[queries] def videoFixture(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // widen the id scan first (unconditionally — the caller declares the
-    // compute heavy): payload synthesis + codec encode is the heavy per-row
-    // leg over 8-byte rows, and a single-row-group corpus file plans as ONE
-    // task
-    graft.operators.Spread.widenForCompute(docs.select(col("doc_id"))).as[Long].map { id =>
+    // spread the id scan over the cores first: payload synthesis + codec
+    // encode is the heavy per-row leg over 8-byte rows, and the corpus file
+    // plans as ONE task at every scale the suite runs (a measured r16 win,
+    // OPTIMIZATION_r17.md; the audio fixture below is the counter-case)
+    val ids = docs.select(col("doc_id")).repartition(spark.sparkContext.defaultParallelism)
+    ids.as[Long].map { id =>
       val frames: Seq[Array[Int]] = (id % 7) match {
         case 1 => (0 until 6).map(f => Array.tabulate(64)(p => vidGray(id - 1, f, p)))
         case 2 => (1 to 4).map(f => Array.tabulate(64)(p => vidGray(id - 2, f, p)))
@@ -171,12 +173,12 @@ object PipelineQueries {
   private def audioFixture(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // NO widen here, unlike the image/video fixtures: WAV synthesis is a
-    // headerless sample dump (no zlib/LZW compression leg), so the per-row
-    // compute never pays for the repartition — and a widened fixture makes
+    // NO repartition here, unlike the image/video fixtures: WAV synthesis is
+    // a headerless sample dump (no zlib/LZW compression leg), so the per-row
+    // compute never pays for the repartition — and a repartitioned fixture makes
     // every index save/append write 32 tiny files per generation instead of
     // one, which the banding probes then re-read (measured: q153 1.38→2.33 s,
-    // q161 3.50→7.98 s, q165 3.83→8.42 s when r16 widened this fixture).
+    // q161 3.50→7.98 s, q165 3.83→8.42 s when r16 repartitioned this fixture).
     docs.select(col("doc_id")).as[Long].map { id =>
       (id, graft.operators.Multimodal.encodeWav(
         Array.tabulate(2048)(t => audioSample(id, t).toShort), 8000))
@@ -1950,10 +1952,9 @@ object PipelineQueries {
     // covered by unpacking in q135; here codes are flattened per dim.
     "q134_sq8_encode" -> ((s, dir) => {
       val sq = graft.operators.ScalarQuantization
-      // byte-gated widen: repairs an under-split LARGE vector scan only —
-      // small inputs stay put (shuffling the vector payload costs more than
-      // the single-core encode it would parallelize; measured r16)
-      val emb = graft.operators.Spread.widen(t(s, dir, "embeddings"))
+      // no repartition: shuffling the vector payload costs more than the
+      // single-core encode it would parallelize (2.15x slower, measured r16)
+      val emb = t(s, dir, "embeddings")
       val (mins, maxs) = sq.sqTrain(emb, "embedding")
       emb.select(col("vec_id"),
           posexplode(sq.sqEncode(col("embedding"), mins, maxs))
@@ -1970,11 +1971,11 @@ object PipelineQueries {
     // distance term stays 2-array/1-op.
     "q135_sq8_topk" -> ((s, dir) => {
       val sq = graft.operators.ScalarQuantization
-      // unconditional widen (caller-declared heavy): the encode+pack+WRITE
-      // leg below otherwise runs inside ONE write task off the single-split
-      // scan (measured 7.9 s of the 6.9 s-median query; widened: 2.8 s).
-      // The moved embedding bytes are a few MB — trivial against that leg.
-      val emb = graft.operators.Spread.widenForCompute(t(s, dir, "embeddings"))
+      // repartition the single-split scan: the encode+pack+WRITE leg below
+      // otherwise runs inside ONE write task (measured r16/r17: 7.9 s inside
+      // that task, query median 6.9 s; repartitioned: 2.8 s). The moved
+      // embedding bytes are a few MB — trivial against that leg.
+      val emb = t(s, dir, "embeddings").repartition(s.sparkContext.defaultParallelism)
       val (mins, maxs) = sq.sqTrain(emb, "embedding")
       // MATERIALIZE the code frame before searching: composing encode+pack
       // and search in one plan inlines the whole pack chain into each of

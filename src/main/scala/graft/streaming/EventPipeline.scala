@@ -146,6 +146,9 @@ object EventPipeline {
     * sized — the same small-side discipline as the batch path's broadcast) and
     * checked per row with `arrays_overlap` — completely STATELESS: no
     * watermark, no state store, works in any output mode at any stream rate.
+    * A null shingle (null text) matches nothing, as in the batch join: it is
+    * kept out of the eval set, and a doc's own null shingle cannot turn the
+    * no-overlap answer into a null that the filter would drop.
     * If the eval set ever outgrew a literal, the check becomes a stream-static
     * broadcast join on exploded grams — same shape, still stateless. */
   def streamingDecontaminate(docs: DataFrame, evalDocs: DataFrame,
@@ -154,10 +157,10 @@ object EventPipeline {
     val evalSpark = evalDocs.sparkSession
     import evalSpark.implicits._
     val grams = Decontamination.evalGrams(evalDocs, textCol, n)
-      .as[String].collect().toSeq
+      .as[String].collect().toSeq.filter(_ != null)
     DedupSuite.shingled(docs, docs.columns.toSeq.map(col), textCol, n)(g =>
         array_distinct(g).as("_grams"))
-      .filter(!arrays_overlap(col("_grams"), typedlit(grams)))
+      .filter(!coalesce(arrays_overlap(col("_grams"), typedlit(grams)), lit(false)))
       .drop("_grams")
   }
 

@@ -34,19 +34,22 @@ class LineDedupSpec extends SparkSpec {
   }
 
   test("broadcast and distributed rebuilds agree, including all-removed docs") {
-    val a = LineDedup.removeRepeatedLines(corpus, "doc_id", "text", 4,
-      broadcastRebuild = true).orderBy("doc_id").collect().toSeq
+    val a = LineDedup.removeRepeatedLines(corpus, "doc_id", "text", 4)
+      .orderBy("doc_id").collect().toSeq
     val b = LineDedup.removeRepeatedLines(corpus, "doc_id", "text", 4,
-      broadcastRebuild = false).orderBy("doc_id").collect().toSeq
+      maxBadLines = 0).orderBy("doc_id").collect().toSeq
     assert(a === b)
   }
 
   test("oversized broadcast sets fall through to the distributed rebuild, same result") {
-    val fallback = LineDedup.removeRepeatedLines(corpus, "doc_id", "text",
-      maxDocs = 4, maxBadLines = 0) // any non-empty set exceeds the cap
-      .orderBy("doc_id").collect().toSeq
-    val direct = LineDedup.removeRepeatedLines(corpus, "doc_id", "text", 4,
-      broadcastRebuild = false).orderBy("doc_id").collect().toSeq
+    // at maxDocs = 4 the offending set is {"boiler"}: a cap of 1 holds it, 0 does not
+    def run(cap: Int) = LineDedup.removeRepeatedLines(corpus, "doc_id", "text",
+      maxDocs = 4, maxBadLines = cap)
+    def distributed(df: DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("posexplode")
+    assert(!distributed(run(1)) && distributed(run(0)))
+    val fallback = run(0).orderBy("doc_id").collect().toSeq
+    val direct = run(1).orderBy("doc_id").collect().toSeq
     assert(fallback === direct)
   }
 

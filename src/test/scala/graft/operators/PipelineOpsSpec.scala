@@ -612,16 +612,13 @@ class PipelineOpsSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sum
     assert(a.getAs[Long]("quality_micro_sum") === micro)
     assert(a.getAs[Double]("mean_quality_micro") === micro.toDouble / 2.0)
-    // single AGGREGATE exchange in the plan: the report's only keyed shuffle
-    // is the source-keyed aggregate. A RoundRobin exchange may precede it —
-    // that is [[Spread.widen]]'s small-input scan repair (identity at scale,
-    // where the scan already has enough splits), not part of the report's
-    // aggregation shape.
+    // one exchange in the plan, the source-keyed aggregate's: no other
+    // shuffle of any partitioning precedes it
     val plan = graft.operators.Profiler.corpusReport(docs, "source", "text")
       .queryExecution.executedPlan.toString
-    val keyedExchanges = plan.split("Exchange").length - 1 -
-      (plan.split("Exchange RoundRobinPartitioning").length - 1)
-    assert(keyedExchanges <= 1, s"one keyed shuffle expected:\n$plan")
+    val exchanges = "Exchange ".r.findAllMatchIn(plan).map(m =>
+      plan.substring(m.end).takeWhile(_ != '(')).toSeq
+    assert(exchanges === Seq("hashpartitioning"), s"one keyed shuffle expected:\n$plan")
   }
 
   test("uniformExactK: exact k, deterministic, regeneration-stable, seed-sensitive") {
@@ -1186,7 +1183,8 @@ class PipelineOpsSpec extends SparkSpec {
     // relation. The n = 1 token path gives null text no grams while the
     // shingle form gives it one null shingle; each caller keeps its own
     // answer (rows pinned from the implementation before the relation was
-    // shared).
+    // shared; the streaming rows are the batch `decontaminate` rows, which a
+    // null gram no longer turns into a dropped row).
     import graft.streaming.EventPipeline
     val docs = Seq[(Long, String, String)](
       (1L, null, "b"), (2L, "", "b"), (3L, " \t  ", "b"), (4L, "solo pair", "b"),
@@ -1203,13 +1201,14 @@ class PipelineOpsSpec extends SparkSpec {
         "2|3|1|1|1|1.0;2|8|1|1|1|1.0;3|8|1|1|1|1.0;4|5|2|2|2|1.0",
         "1|6;2|3;2|8;3|8;4|5", "2|1;3|1;4|2;5|2;7|2;8|1",
         "101|1|0|0.0;102|2|2|1.0;103|1|1|1.0;104|3|2|0.6666666666666666",
-        "alpha|1;beta|1;delta|1;gamma|1;pair|2;solo|2;|4", "", ""),
+        "alpha|1;beta|1;delta|1;gamma|1;pair|2;solo|2;|4", "1;6", "1;6"),
       2 -> Seq(same13, same13, "1|6;2|8;4|5", "2|1;4|1;5|1;7|1;8|1",
         "101|1|0|0.0;102|1|1|1.0;103|1|1|1.0;104|2|1|0.5",
-        " |1;alpha beta|1;beta gamma|1;gamma delta|1;solo pair|2;|2", "", "3"),
+        " |1;alpha beta|1;beta gamma|1;gamma delta|1;solo pair|2;|2", "1;3;6", "1;3;6"),
       3 -> Seq(same13, same13, "1|6;2|8;4|5", "2|1;4|1;5|1;8|1",
         "101|1|0|0.0;102|1|1|1.0;103|1|1|1.0;104|1|0|0.0",
-        " |1;alpha beta gamma|1;beta gamma delta|1;solo pair|2;|2", "", "3;7"))
+        " |1;alpha beta gamma|1;beta gamma delta|1;solo pair|2;|2", "1;3;6;7",
+        "1;3;6;7"))
     for (n <- Seq(1, 2, 3)) {
       val got = Seq(
         DedupSuite.ngramJaccardPairs(docs, "doc_id", "text", "src", n, 0.5),
@@ -1222,6 +1221,9 @@ class PipelineOpsSpec extends SparkSpec {
         EventPipeline.streamingDecontaminate(docs, evalDocs.filter($"text".isNotNull),
           "text", n).select("doc_id")).map(rows)
       assert(got == expected(n), s"n=$n")
+      // the streaming twin keeps exactly the docs the batch form keeps
+      assert(got(6) == rows(Decontamination.decontaminate(docs, evalDocs, "doc_id", "text", n)
+        .select("doc_id")), s"n=$n")
     }
   }
 

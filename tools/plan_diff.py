@@ -5,7 +5,8 @@ Usage: python3 tools/plan_diff.py BEFORE AFTER
 
 Splits each dump on its `========== <query> ==========` headers, normalizes
 expression ids (`#123L`), RDD and plan ids, object hashes and lambda addresses
-(`@1a2b3c`) and `.scala:<line>` numbers, drops sbt prefixes and Spark log
+(`@1a2b3c`), `.scala:<line>` numbers and the per-run fixture temp dir
+(`graft_fixtures_<n>`), drops sbt prefixes and Spark log
 lines, and prints `same` or a unified diff per query. Exits 1 if any differs.
 """
 import difflib
@@ -21,6 +22,7 @@ NOISE = [
     (re.compile(r"\$Lambda\$?\d*/0x[0-9a-f]+"), "$Lambda"),
     (re.compile(r"@[0-9a-f]{4,}"), "@H"),
     (re.compile(r"\.scala:\d+"), ".scala:N"),
+    (re.compile(r"graft_fixtures_\d+"), "graft_fixtures_N"),
 ]
 
 
